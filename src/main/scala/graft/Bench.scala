@@ -309,6 +309,10 @@ object Bench {
     // explicitly flushed (see the ORDER note above)
     println(MiniJson.obj(fields))
     System.out.flush()
+    // the bounded drains run on child sessions the root session cannot
+    // see; stop any still running before the session goes (as Verify does)
+    graft.streaming.Drain.stopLeftovers((_, e) =>
+      System.err.println(s"[bench] stopping leftover drain query failed: $e"))
     spark.stop()
   }
 

@@ -34,23 +34,31 @@ object GraftExtensions {
       org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.LongType))
 
+  /** The SQL surface, one row per function: (name, usage, build function). Both
+    * [[register]] and the [[GraftExtensions]] injection path read it. */
+  private[functions] val sqlFunctions
+      : Seq[(String, String, Seq[Expression] => Expression)] = Seq(
+    ("cosine_sim", "cosine_sim(a, b) - cosine similarity of two float arrays",
+      args => CosineSimilarity(asFloatArr(args(0)), asFloatArr(args(1)))),
+    ("match_fraction",
+      "match_fraction(a, b) - fraction of equal positions in two long arrays",
+      args => LongArrayMatchFraction(asLongArr(args(0)), asLongArr(args(1)))),
+    ("graft_tokenize", "graft_tokenize(text, pattern) - generates (pos, token) rows",
+      args => RegexTokenize(args(0), args(1))),
+    ("nfc_normalize", "nfc_normalize(s) - Unicode NFC canonical composition",
+      args => NfcNormalize(args(0))),
+    ("jaro_winkler",
+      "jaro_winkler(a, b) - Jaro-Winkler similarity (DuckDB-parity semantics)",
+      args => JaroWinkler(args(0), args(1))))
+
   /** Register on an ALREADY-RUNNING session (withExtensions only applies to
     * newly-built contexts; getOrCreate on an existing session ignores it).
     */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("cosine_sim",
-      (args: Seq[Expression]) =>
-        CosineSimilarity(asFloatArr(args(0)), asFloatArr(args(1))), "scala_udf")
-    reg.createOrReplaceTempFunction("match_fraction",
-      (args: Seq[Expression]) =>
-        LongArrayMatchFraction(asLongArr(args(0)), asLongArr(args(1))), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_tokenize",
-      (args: Seq[Expression]) => RegexTokenize(args(0), args(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("nfc_normalize",
-      (args: Seq[Expression]) => NfcNormalize(args(0)), "scala_udf")
-    reg.createOrReplaceTempFunction("jaro_winkler",
-      (args: Seq[Expression]) => JaroWinkler(args(0), args(1)), "scala_udf")
+    sqlFunctions.foreach { case (name, _, build) =>
+      reg.createOrReplaceTempFunction(name, build, "scala_udf")
+    }
   }
 }
 
@@ -61,28 +69,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       "", "", "", "", "", "", "scala_udf")
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      info("cosine_sim", "cosine_sim(a, b) - cosine similarity of two float arrays"),
-      (args: Seq[Expression]) => CosineSimilarity(
-        GraftExtensions.asFloatArr(args(0)), GraftExtensions.asFloatArr(args(1)))))
-    ext.injectFunction((
-      FunctionIdentifier("match_fraction"),
-      info("match_fraction", "match_fraction(a, b) - fraction of equal positions in two long arrays"),
-      (args: Seq[Expression]) => LongArrayMatchFraction(
-        GraftExtensions.asLongArr(args(0)), GraftExtensions.asLongArr(args(1)))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_tokenize"),
-      info("graft_tokenize", "graft_tokenize(text, pattern) - generates (pos, token) rows"),
-      (args: Seq[Expression]) => RegexTokenize(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("nfc_normalize"),
-      info("nfc_normalize", "nfc_normalize(s) - Unicode NFC canonical composition"),
-      (args: Seq[Expression]) => NfcNormalize(args(0))))
-    ext.injectFunction((
-      FunctionIdentifier("jaro_winkler"),
-      info("jaro_winkler", "jaro_winkler(a, b) - Jaro-Winkler similarity (DuckDB-parity semantics)"),
-      (args: Seq[Expression]) => JaroWinkler(args(0), args(1))))
+    GraftExtensions.sqlFunctions.foreach { case (name, usage, build) =>
+      ext.injectFunction((FunctionIdentifier(name), info(name, usage), build))
+    }
     // the native as-of operator plans through this strategy; config-driven
     // sessions (spark.sql.extensions=graft.functions.GraftExtensions) get it
     // without touching spark.experimental

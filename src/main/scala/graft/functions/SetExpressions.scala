@@ -25,7 +25,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * advances both cursors on a match), so for set inputs the result equals
   * `size(array_intersect(a, b))` exactly. Unsorted input silently
   * undercounts — keep the builder [[SetFunctions.sorted_intersect_count]]
-  * paired with sorted producers only.
+  * paired with sorted producers only. A null element the walk reaches
+  * throws instead of reading as 0.
   */
 // TEMPLATE CAUTION (same as VectorExpressions): no generated line may START
 // with '|' — Spark's code-Block interpolator strips '|' margins again;
@@ -41,9 +42,9 @@ case class SortedIntersectCount(left: Expression, right: Expression)
   // fail at ANALYSIS time instead (r21 advice). Element NULLABILITY is
   // deliberately not rejected: a parquet round-trip of a null-free
   // array<long> column reads back with containsNull=true (a legitimate
-  // production shape), so the null-free half of the contract — like
-  // sortedness — stays a documented data property the producers
-  // (sort_array(collect_set(<long>))) guarantee.
+  // production shape), so null-freeness is checked per element at run
+  // time instead (generated code skips the check for a side whose type
+  // cannot hold nulls).
   override def checkInputDataTypes(): TypeCheckResult = {
     def ok(dt: DataType): Boolean = dt match {
       case ArrayType(LongType, _) => true
@@ -59,6 +60,9 @@ case class SortedIntersectCount(left: Expression, right: Expression)
   // null only when a child is null (set arrays are built null-free)
   override def nullable: Boolean = left.nullable || right.nullable
 
+  private def containsNull(e: Expression): Boolean =
+    e.dataType.asInstanceOf[ArrayType].containsNull
+
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
@@ -68,6 +72,8 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     var j = 0
     var c = 0
     while (i < nx && j < ny) {
+      if (x.isNullAt(i) || y.isNullAt(j))
+        throw new IllegalArgumentException(SortedIntersectCount.NullElement)
       val xv = x.getLong(i)
       val yv = y.getLong(j)
       if (xv < yv) i += 1
@@ -86,11 +92,19 @@ case class SortedIntersectCount(left: Expression, right: Expression)
       val c = ctx.freshName("c")
       val xv = ctx.freshName("xv")
       val yv = ctx.freshName("yv")
+      val nullChecks =
+        (if (containsNull(left)) Seq(s"$x.isNullAt($i)") else Nil) ++
+          (if (containsNull(right)) Seq(s"$y.isNullAt($j)") else Nil)
+      val nullGuard =
+        if (nullChecks.isEmpty) ""
+        else s"""if (${nullChecks.mkString(" || ")}) { throw new """ +
+          s"""IllegalArgumentException("${SortedIntersectCount.NullElement}"); }"""
       s"""
          |int $nx = $x.numElements();
          |int $ny = $y.numElements();
          |int $i = 0, $j = 0, $c = 0;
          |while ($i < $nx && $j < $ny) {
+         |  $nullGuard
          |  long $xv = $x.getLong($i);
          |  long $yv = $y.getLong($j);
          |  if ($xv < $yv) { $i++; }
@@ -104,6 +118,11 @@ case class SortedIntersectCount(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+object SortedIntersectCount {
+  val NullElement: String =
+    "sorted_intersect_count: null array element; inputs must be null-free sorted sets"
 }
 
 object SetFunctions {

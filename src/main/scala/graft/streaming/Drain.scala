@@ -14,7 +14,9 @@ object Drain {
     * root session's `spark.streams.active` cannot see, so a teardown sweep
     * on the root session alone misses any drain query still running (r21
     * advice). Weak references: a terminated query's entry must not pin the
-    * query (and its session) for the JVM lifetime. */
+    * query (and its session) for the JVM lifetime; every completed drain
+    * also drops the cleared and terminated entries, so the registry stays
+    * as small as the set of drains still running. */
   private val tracked =
     new java.util.concurrent.ConcurrentLinkedQueue[
       java.lang.ref.WeakReference[StreamingQuery]]()
@@ -36,6 +38,8 @@ object Drain {
     }
   }
 
+  private[graft] def trackedCount: Int = tracked.size()
+
   /** Await `q` up to `timeoutMs`; on timeout stop the query and throw. */
   def awaitOrFail(q: StreamingQuery, what: String,
       timeoutMs: Long = 300000L): Unit = {
@@ -52,6 +56,10 @@ object Drain {
       try q.stop()
       catch { case e: Throwable => timeout.addSuppressed(e) }
       throw timeout
+    }
+    tracked.removeIf { ref =>
+      val done = ref.get()
+      done == null || !done.isActive
     }
   }
 }

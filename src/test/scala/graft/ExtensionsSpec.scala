@@ -77,4 +77,24 @@ class ExtensionsSpec extends SparkTestBase {
       .collect().head.getDouble(0)
     assert(math.abs(mf - 2.0 / 3.0) < 1e-12, s"int-array match fraction: $mf")
   }
+
+  test("the injection path (spark.sql.extensions) registers the same " +
+      "functions, operand casts included") {
+    import org.apache.spark.sql.{ExtensionsTestHook, GraftColumnBridge, SparkSessionExtensions}
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.functions.col
+    val ext = new SparkSessionExtensions
+    new graft.functions.GraftExtensions().apply(ext)
+    val reg = ExtensionsTestHook.injectedRegistry(ext)
+    for (n <- Seq("cosine_sim", "match_fraction", "graft_tokenize",
+        "nfc_normalize", "jaro_winkler"))
+      assert(reg.functionExists(FunctionIdentifier(n)), s"$n not injected")
+    // a DOUBLE array must convert to float, not be byte-reinterpreted
+    val cos = reg.lookupFunction(FunctionIdentifier("cosine_sim"),
+      Seq(GraftColumnBridge.expression(col("a")),
+        GraftColumnBridge.expression(col("b"))))
+    val got = Seq((Array(1.0, 0.0), Array(1.0, 1.0))).toDF("a", "b")
+      .select(GraftColumnBridge.column(cos)).head().getDouble(0)
+    assert(math.abs(got - 1.0 / math.sqrt(2.0)) < 1e-6, s"cosine: $got")
+  }
 }

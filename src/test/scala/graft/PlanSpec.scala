@@ -1027,20 +1027,17 @@ class PlanSpec extends SparkTestBase {
       // pair/label subtree); one broadcast docs join + one window
       "q_cluster_canonical" -> Budget(0, 0, 1, 0, 1),
       "q_containment" -> Budget(3, 0, 5, 0, 0),
-      // r21 added +1 shuffle/+1 broadcast join for the one-sided PPJoin
-      // length filter (post-distinct size attach); r22 moved the size onto
-      // the candidate join's super side (pre-distinct filter, the attach
-      // join gone) and the spread recovery repartition (see q_bloom_clean)
-      // took the freed shuffle slot — net budget unchanged
+      // r21: +1 shuffle, +1 broadcast join — the one-sided PPJoin length
+      // filter attaches the SCALAR per-doc size table (|docs| rows of
+      // (id, sz)) to the candidates' super side before the set verify
+      // (the sub size rides the prefix postings); the new exchange is the
+      // size aggregate surfacing under its broadcast (it previously hid
+      // inside the persisted prefix subtree), and it pays for itself by
+      // dropping candidates before the per-pair intersection work
       "q_containment_prefix" -> Budget(2, 0, 4, 0, 0),
       "q_kn_bigram" -> Budget(10, 0, 3, 1, 0),
       "q_graph_jaccard" -> Budget(8, 2, 14, 5, 0),
-      // r22 +1: Scale.spreadSmallScan's recovery repartition — the
-      // single-row-group corpus scan otherwise runs BOTH 8-gram tokenize
-      // passes (eval + train spans) as one task each; the new exchange
-      // carries only (id, text) and exists only when the file layout
-      // denies scan parallelism
-      "q_bloom_clean" -> Budget(3, 0, 2, 0, 0),
+      "q_bloom_clean" -> Budget(2, 0, 2, 0, 0),
       // simhash persists the fingerprint table: its shuffles live inside
       // the cached subtree, the tail is one broadcast band-bucket verify
       "q_simhash_fast" -> Budget(0, 0, 1, 0, 0),

@@ -1,8 +1,7 @@
 package graft
 
 /** Every declared query runs end-to-end at sf0.001 and (except genuinely
-  * selective ones) returns rows; every query has an oracle or a documented
-  * reason not to.
+  * selective ones) returns rows; every query has a non-blank oracle.
   */
 class QueriesSmokeSpec extends SparkTestBase {
 
@@ -21,17 +20,19 @@ class QueriesSmokeSpec extends SparkTestBase {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("oracleSql keys are a subset of queries keys") {
-    val extra = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(extra.isEmpty, s"oracles without queries: $extra")
+  test("registry names are unique") {
+    // a repeated name would silently shadow a query in the derived maps
+    val dups = SparkEntry.registry.groupBy(_.name).collect {
+      case (name, qs) if qs.size > 1 => name }
+    assert(dups.isEmpty, s"names declared more than once: $dups")
   }
 
-  test("every query has an oracle — full coverage, no rows-only set") {
-    // Round 2 closed the last two gaps: SimHash runs on the portable md5
-    // 60-bit hash (oracle replays the fingerprints), and the VADER scorer
-    // is replayed in SQL. Any new query must ship with its oracle.
-    val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(missing.isEmpty, s"queries without oracles: $missing")
+  test("every oracle is non-blank") {
+    // Any new query must ship with its oracle — full coverage, no
+    // rows-only set (SimHash and the VADER scorer are replayed in SQL).
+    val blank = SparkEntry.registry
+      .filter(q => q.oracle == null || q.oracle.trim.isEmpty).map(_.name)
+    assert(blank.isEmpty, s"queries with a blank oracle: $blank")
   }
 
   test("round-13 tripwire: documents text is ASCII — the byte-slicing " +

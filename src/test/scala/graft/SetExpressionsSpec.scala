@@ -77,4 +77,34 @@ class SetExpressionsSpec extends SparkTestBase {
       .collect().head.getInt(0)
     assert(got == 1)
   }
+
+  test("a null element fails loudly instead of reading as 0, with " +
+      "whole-stage codegen on and off") {
+    import spark.implicits._
+    val dir = graft.util.TempDirs.create("graft-sic-null-elem").toString
+    Seq(
+      (1L, Seq(Some(1L), None, Some(3L)), Seq(Some(2L), Some(3L))),
+      (2L, Seq(Some(1L), Some(3L)), Seq(Some(1L), None, Some(3L)))
+    ).toDF("id", "a", "b").write.mode("overwrite").parquet(dir)
+    def messages(t: Throwable): Seq[String] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .map(e => String.valueOf(e.getMessage)).toSeq
+    def check(): Unit = for (id <- Seq(1L, 2L)) {
+      val e = intercept[Exception] {
+        spark.read.parquet(dir).filter(col("id") === id)
+          .select(SetFunctions.sorted_intersect_count(col("a"), col("b")))
+          .collect()
+      }
+      assert(messages(e).exists(_.contains("null array element")),
+        s"row $id: unexpected failure ${messages(e)}")
+    }
+    check()
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    try check()
+    finally {
+      spark.conf.set("spark.sql.codegen.wholeStage", "true")
+      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    }
+  }
 }

@@ -177,6 +177,21 @@ class StreamingSpec extends SparkTestBase {
     assert(streamed == batch)
   }
 
+  test("Drain's registry does not grow across repeated completed drains") {
+    import org.apache.spark.sql.streaming.Trigger
+    val src = tmp("graft-drain-src")
+    Seq(1L, 2L, 3L).toDF("id").write.mode("overwrite").parquet(src)
+    val base = graft.streaming.Drain.trackedCount
+    val sizes = (1 to 3).map { _ =>
+      val q = spark.readStream.schema("id LONG").parquet(src)
+        .writeStream.format("noop").trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", tmp("graft-drain-ckpt")).start()
+      graft.streaming.Drain.awaitOrFail(q, "registry_probe")
+      graft.streaming.Drain.trackedCount
+    }
+    assert(sizes.forall(_ <= base), s"registry grew from $base: $sizes")
+  }
+
   test("stateful incremental indicators == batch window computation") {
     val rows = for {
       sym <- Seq(1, 2); i <- 0 until 30
