@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Document deduplication ladder for large-scale training-data pipelines:
   * exact (hash groupBy), exact n-gram Jaccard (self-join on shingles),
@@ -27,17 +28,20 @@ object Dedup {
 
   // --- cache contract ----------------------------------------------------------
 
-  /** The pair-join operators below persist their shingle/signature
-    * intermediates (each feeds 2-3 plan branches; persisting materializes the
-    * tokenize+hash pipeline once). The RETURNED plans reference those cached
-    * tables, so they cannot be unpersisted before the caller's terminal
-    * action — the contract is: consume the result, then call
-    * [[unpersistIntermediates]] (or `spark.catalog.clearCache()`). Verify and
-    * Bench both do; a library caller that skips it leaks MEMORY_AND_DISK
-    * blocks for the session's lifetime. Tracking is shared with every other
-    * persisting operator via [[CachedIntermediates]].
+  /** Persist MEMORY_AND_DISK + track. The pair-join operators below pin
+    * their shingle/signature intermediates (each feeds 2-3 plan branches;
+    * pinning materializes the tokenize+hash pipeline once). persist — not
+    * localCheckpoint — so partitions lost at scale recompute from lineage.
+    * The RETURNED plans reference those cached tables, so they cannot be
+    * unpersisted before the caller's terminal action — the contract is:
+    * consume the result, then call [[unpersistIntermediates]] (or
+    * `spark.catalog.clearCache()`). Verify and Bench both do; a library
+    * caller that skips it leaks MEMORY_AND_DISK blocks for the session's
+    * lifetime. Tracking is shared with every other persisting operator via
+    * [[CachedIntermediates]].
     */
-  private def track(df: DataFrame): DataFrame = CachedIntermediates.track(df)
+  private def pin(df: DataFrame): DataFrame =
+    CachedIntermediates.track(df.persist(StorageLevel.MEMORY_AND_DISK))
 
   /** Drop every intermediate persisted by graft operators since the last
     * drain (delegates to [[CachedIntermediates.unpersistAll]]). Safe to call
@@ -296,54 +300,127 @@ object Dedup {
     }
   }
 
-  /** Resolve a caller's broadcast request against the corpus size: true
-    * only if requested AND the doc count clears [[docBroadcastCutoff]].
-    * The count is one lightweight eager job (column-pruned to a metadata
-    * count for parquet inputs), MEMOIZED per canonical input plan so
-    * repeated gated operators over the same input (and re-runs in bench /
-    * the determinism spec) never re-execute the upstream plan for the
-    * probe. */
-  private def shouldBroadcastDocTables(
-      df: DataFrame, requested: Boolean): Boolean =
-    requested && {
-      val cut = docBroadcastCutoff(df)
-      cut < 0L || (cut > 0L && memoizedCount(df) <= cut)
+  /** True iff the doc count clears [[docBroadcastCutoff]]: the gated
+    * operators then broadcast their per-doc tables, else they join them
+    * sort-merge. The count is one lightweight eager job (column-pruned to
+    * a metadata count for parquet inputs), MEMOIZED per canonical input
+    * plan so repeated gated operators over the same input (and re-runs in
+    * bench / the determinism spec) never re-execute the upstream plan for
+    * the probe. */
+  private def broadcastDocs(df: DataFrame): Boolean = {
+    val cut = docBroadcastCutoff(df)
+    cut < 0L || (cut > 0L && memoizedCount(df) <= cut)
+  }
+
+  // --- set-similarity core ---------------------------------------------------
+  // The pair operators below share these pieces; each operator keeps only
+  // its score, threshold arithmetic, length filter and guards.
+
+  /** Per-doc shingle count `(id, sz)` of a postings table. */
+  private def sizesOf(sh: DataFrame): DataFrame =
+    sh.groupBy(col("id")).agg(count(lit(1)).as("sz"))
+
+  /** Shared-shingle count `i` of every doc pair with a common shingle, by
+    * self-joining the postings (shuffle on shingle), with both docs' sizes
+    * broadcast in (one row per doc — fine up to ~10M docs):
+    * `(id_1, id_2, i, sz_1, sz_2)`, `id_1 < id_2`. */
+  private def sharedCounts(sh: DataFrame): DataFrame = {
+    val sizes = broadcast(sizesOf(sh))
+    sh.as("a")
+      .join(sh.as("b"),
+        col("a.shingle") === col("b.shingle") && col("a.id") < col("b.id"))
+      .groupBy(col("a.id").as("id_1"), col("b.id").as("id_2"))
+      .agg(count(lit(1)).as("i"))
+      .join(sizes.as("s1"), col("id_1") === col("s1.id"))
+      .join(sizes.as("s2"), col("id_2") === col("s2.id"))
+      .select(col("id_1"), col("id_2"), col("i"),
+        col("s1.sz").as("sz_1"), col("s2.sz").as("sz_2"))
+  }
+
+  /** Pinned prefix postings `(id, shingle, sz)`: each doc's shingles in
+    * global rarity order (document frequency asc, shingle asc — a total
+    * order, consistent across docs), keeping ranks `<= keep(sz)`. The
+    * frequency table is one extra agg on the postings already in memory.
+    * Pinned because the prefix feeds both sides of a candidate join —
+    * unpersisted, the freq join + rarity window (the two heaviest shuffles
+    * here) run twice. `sz` rides along (one long per posting) so the
+    * candidate join's length filter needs no extra join. */
+  private def rarityPrefix(sh: DataFrame, sizes: DataFrame,
+      keep: Column => Column): DataFrame = {
+    val freq = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
+    val w = Window.partitionBy(col("id")).orderBy(col("df"), col("shingle"))
+    pin(sh.join(freq, "shingle")
+      .withColumn("rnk", row_number().over(w))
+      .join(sizes, "id")
+      .filter(col("rnk") <= keep(col("sz")))
+      .select(col("id"), col("shingle"), col("sz")))
+  }
+
+  /** `d` with a broadcast hint iff `bcast` (see [[broadcastDocs]]): the
+    * candidate stream is the big side (potentially ~|pairs|), the per-doc
+    * tables are |docs| rows — without the hint Spark has no stats for
+    * these aggregation outputs and falls back to shuffling the candidate
+    * stream twice per join. */
+  private def docTable(d: DataFrame, bcast: Boolean): DataFrame =
+    if (bcast) broadcast(d) else d
+
+  /** Exact verify input: both docs' SORTED shingle sets (`sa.set`,
+    * `sb.set`) attached to each candidate pair (id columns `l`, `r`) —
+    * broadcast when `bcast` ([[docTable]]), else joined sort-merge — plus
+    * their intersection size `i` (double) from one count-only merge walk
+    * over the two in-row arrays ([[graft.functions.SortedIntersectCount]]).
+    * The previous formulations, in order of replacement: re-joining both
+    * docs' FULL postings per pair (a |cand| x avg_set_size explosion
+    * through two shuffles — 5.2 s -> 1.9 s for q_jaccard_prefix at sf0.1
+    * when replaced), then size(array_intersect(...)), whose per-row
+    * hash-set build + boxed probes + materialized intersection array
+    * dominated the verify stage (r21 profile: ~12 CPU-seconds warm at
+    * sf0.1, ~5x that cold). */
+  private def withIntersection(cands: DataFrame, l: String, r: String,
+      sh: DataFrame, bcast: Boolean): DataFrame = {
+    val sets = sh.groupBy(col("id"))
+      .agg(sort_array(collect_set(col("shingle"))).as("set"))
+    cands
+      .join(docTable(sets.as("sa"), bcast), col(l) === col("sa.id"))
+      .join(docTable(sets.as("sb"), bcast), col(r) === col("sb.id"))
+      .withColumn("i", graft.functions.SetFunctions
+        .sorted_intersect_count(col("sa.set"), col("sb.set")).cast("double"))
+  }
+
+  /** Distinct doc pairs `(id_1, id_2)`, `id_1 < id_2`, sharing any
+    * `(band, key)` bucket of `banded` — shuffle on the bucket. Each
+    * `(column, name)` in `carry` rides along from both sides as
+    * `name_1` / `name_2`. */
+  private def bandPairs(banded: DataFrame, key: String,
+      carry: (String, String)*): DataFrame = {
+    val carried = carry.flatMap { case (c, name) =>
+      Seq(col(s"a.$c").as(s"${name}_1"), col(s"b.$c").as(s"${name}_2"))
     }
+    banded.as("a")
+      .join(banded.as("b"),
+        col("a.band") === col("b.band") && col(s"a.$key") === col(s"b.$key") &&
+          col("a.id") < col("b.id"))
+      .select(Seq(col("a.id").as("id_1"), col("b.id").as("id_2")) ++ carried: _*)
+      .distinct()
+  }
 
   // --- exact n-gram Jaccard --------------------------------------------------
 
   /** All pairs with shingle-set Jaccard >= threshold, by self-joining the
     * postings list (shuffle on shingle). Output: (id_1, id_2, jaccard).
     */
-  /** @param broadcastSizes broadcast the per-doc size table into the pair
-    *        stream (one row per doc — fine up to ~10M docs, same posture as
-    *        [[minhashNearDup]]'s broadcastDocTables); false shuffles the
-    *        pair stream against it sort-merge instead.
-    */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, threshold: Double = 0.5, hashShingles: Boolean = true,
-      broadcastSizes: Boolean = true): DataFrame = {
+      n: Int = 3, threshold: Double = 0.5,
+      hashShingles: Boolean = true): DataFrame = {
     ScaleFence.guard(df, "Dedup.jaccardPairs",
       "Dedup.jaccardPrefixPairs (lossless prefix filter, identical output) " +
         "or Dedup.minhashNearDup (LSH candidates + exact verify)")
-    // The postings feed three consumers (sizes + both sides of the
-    // self-join); persisting materializes the tokenize+hash pipeline ONCE
-    // instead of three times (the dominant cost at sf0.1). persist — not
-    // localCheckpoint — so partitions lost at scale recompute from lineage.
-    val sh = track((if (hashShingles) hashedPostings(df, idCol, textCol, n)
+    // the postings feed three consumers (sizes + both sides of the self-join)
+    val sh = pin(if (hashShingles) hashedPostings(df, idCol, textCol, n)
       else shinglePostings(df, idCol, textCol, n))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val sizes0 = sh.groupBy(col("id")).agg(count(lit(1)).as("sz"))
-    val sizes = if (broadcastSizes) broadcast(sizes0) else sizes0
-    val inter = sh.as("a")
-      .join(sh.as("b"), col("a.shingle") === col("b.shingle") && col("a.id") < col("b.id"))
-      .groupBy(col("a.id").as("id_1"), col("b.id").as("id_2"))
-      .agg(count(lit(1)).as("i"))
-    inter
-      .join(sizes.as("s1"), col("id_1") === col("s1.id"))
-      .join(sizes.as("s2"), col("id_2") === col("s2.id"))
+    sharedCounts(sh)
       .withColumn("jaccard",
-        col("i").cast("double") / (col("s1.sz") + col("s2.sz") - col("i")))
+        col("i").cast("double") / (col("sz_1") + col("sz_2") - col("i")))
       .filter(col("jaccard") >= threshold)
       .select(col("id_1"), col("id_2"), col("jaccard"))
   }
@@ -355,28 +432,15 @@ object Dedup {
     * (J ≤ |sub|/|super| no matter how complete the overlap). Emits a row
     * per DIRECTION crossing the threshold, so a near-identical pair emits
     * both directions. Same all-pairs-verifier posture as [[jaccardPairs]]
-    * (shuffle on shingle, fenced); the LSH candidate path bounds it at
-    * corpus scale.
+    * (shuffle on shingle, fenced); [[containmentPrefixPairs]] is its
+    * lossless corpus-scale path.
     */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, threshold: Double = 0.8,
-      broadcastSizes: Boolean = true): DataFrame = {
+      n: Int = 3, threshold: Double = 0.8): DataFrame = {
     ScaleFence.guard(df, "Dedup.containmentPairs",
       "Dedup.containmentPrefixPairs (lossless prefix filter, identical " +
         "output)")
-    val sh = track(hashedPostings(df, idCol, textCol, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val sizes0 = sh.groupBy(col("id")).agg(count(lit(1)).as("sz"))
-    val sizes = if (broadcastSizes) broadcast(sizes0) else sizes0
-    val inter = sh.as("a")
-      .join(sh.as("b"),
-        col("a.shingle") === col("b.shingle") && col("a.id") < col("b.id"))
-      .groupBy(col("a.id").as("id_1"), col("b.id").as("id_2"))
-      .agg(count(lit(1)).as("i"))
-      .join(sizes.as("s1"), col("id_1") === col("s1.id"))
-      .join(sizes.as("s2"), col("id_2") === col("s2.id"))
-      .select(col("id_1"), col("id_2"), col("i"),
-        col("s1.sz").as("sz_1"), col("s2.sz").as("sz_2"))
+    val inter = sharedCounts(pin(hashedPostings(df, idCol, textCol, n)))
     val dir1 = inter.select(col("id_1").as("sub_id"),
       col("id_2").as("super_id"),
       (col("i").cast("double") / col("sz_1")).as("containment"))
@@ -421,30 +485,22 @@ object Dedup {
       posexplode(expr(s"transform(sequence(0, $bands - 1), " +
         s"b -> hash(slice(sig, b * (size(sig) div $bands) + 1, size(sig) div $bands)))")))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_1"), col("b.id").as("id_2"))
-      .distinct()
+    bandPairs(banded, "bucket")
   }
 
   /** MinHash-LSH near-dup detection with exact verification: LSH proposes
-    * candidate pairs, then true shingle-set Jaccard (via per-doc collect_set,
-    * array_intersect on the pair) filters them. With r=2-row bands the
+    * candidate pairs, then true shingle-set Jaccard (per-doc sorted sets,
+    * one count-only merge walk per pair) filters them. With r=2-row bands the
     * probability of missing a pair at J >= 0.5 is (1 - 0.25)^bands — ~1e-8
     * at 64 bands — so the verified output matches the exact algorithm's
-    * output in expectation AND the exact filter guarantees precision.
-    */
-  /** @param broadcastDocTables ALLOW broadcasting the per-doc signature/
-    *        shingle-set tables into the candidate stream; the actual
-    *        decision is size-gated by [[docBroadcastCutoff]] (default 200k
-    *        docs), above which the joins run sort-merge — false forces
-    *        sort-merge regardless of size.
+    * output in expectation AND the exact filter guarantees precision. The
+    * per-doc signature/shingle-set tables are broadcast into the candidate
+    * stream up to [[docBroadcastCutoff]] docs (default 200k), above which
+    * those joins run sort-merge.
     */
   def minhashNearDup(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, threshold: Double = 0.5, k: Int = 128, bands: Int = 64,
-      broadcastDocTables: Boolean = true): DataFrame = {
+      n: Int = 3, threshold: Double = 0.5, k: Int = 128,
+      bands: Int = 64): DataFrame = {
     // round-13 guard: bands > k would make every band hash an EMPTY
     // signature slice to one constant bucket — all docs collide in all
     // bands and the candidate join silently degrades to all-pairs O(n^2);
@@ -452,17 +508,12 @@ object Dedup {
     require(bands > 0 && k >= bands && k % bands == 0,
       s"minhashNearDup: k ($k) must be a positive multiple of bands " +
         s"($bands) — each band hashes k/bands signature rows")
-    val bcastDocs = shouldBroadcastDocTables(df, broadcastDocTables)
+    val bcast = broadcastDocs(df)
     // postings feed signatures + exact-verify sets; signatures feed banding
-    // + both estimate joins — persist both so the expensive tokenize/hash/
-    // aggregate stages run once each (see jaccardPairs on persist-vs-
-    // checkpoint at scale).
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val postings = track(hashedPostings(df, idCol, textCol, n).persist(lvl))
-    val sigs = track(minhashSignatures(postings, k).persist(lvl))
+    // + both estimate joins
+    val postings = pin(hashedPostings(df, idCol, textCol, n))
+    val sigs = pin(minhashSignatures(postings, k))
     val cands = lshCandidates(sigs, bands)
-    def maybeBroadcast(d: DataFrame): DataFrame =
-      if (bcastDocs) broadcast(d) else d
     // Stage 1 — estimate: signature agreement approximates Jaccard with
     // sigma = sqrt(J(1-J)/k) ~ 0.044 at k=128. Pruning candidates below
     // threshold - 0.2 (>4.5 sigma) costs ~3e-6 miss probability per true
@@ -470,25 +521,14 @@ object Dedup {
     // make most moderately-similar pairs candidates). The estimate is
     // DETERMINISTIC given the data (fixed hash functions), not per-run noise.
     val estCut = math.max(0.0, threshold - 0.2)
-    // Broadcast the per-doc tables into the candidate stream: candidates are
-    // the big side (potentially ~|pairs|), signatures/sets are |docs| rows —
-    // without the hint Spark has no stats for these aggregation outputs and
-    // falls back to shuffling the candidate stream twice per join.
     val estimated = cands
-      .join(maybeBroadcast(sigs.as("ga")), col("id_1") === col("ga.id"))
-      .join(maybeBroadcast(sigs.as("gb")), col("id_2") === col("gb.id"))
+      .join(docTable(sigs.as("ga"), bcast), col("id_1") === col("ga.id"))
+      .join(docTable(sigs.as("gb"), bcast), col("id_2") === col("gb.id"))
       .filter(graft.functions.VectorFunctions.match_fraction(
         col("ga.sig"), col("gb.sig")) >= estCut)
       .select(col("id_1"), col("id_2"))
-    // Stage 2 — exact verify on the survivors only (sorted sets +
-    // count-only merge-walk intersection, see [[jaccardPrefixPairs]]).
-    val sets = postings.groupBy(col("id"))
-      .agg(sort_array(collect_set(col("shingle"))).as("set"))
-    estimated
-      .join(maybeBroadcast(sets.as("sa")), col("id_1") === col("sa.id"))
-      .join(maybeBroadcast(sets.as("sb")), col("id_2") === col("sb.id"))
-      .withColumn("i", graft.functions.SetFunctions
-        .sorted_intersect_count(col("sa.set"), col("sb.set")).cast("double"))
+    // Stage 2 — exact verify on the survivors only
+    withIntersection(estimated, "id_1", "id_2", postings, bcast)
       .withColumn("jaccard",
         col("i") / (size(col("sa.set")) + size(col("sb.set")) - col("i")))
       .filter(col("jaccard") >= threshold)
@@ -516,6 +556,8 @@ object Dedup {
     *        sparse relative to the corpus (the pair stage already collapsed
     *        it), so even huge corpora usually land here; the distributed
     *        loop is the overflow path for genuinely large edge sets.
+    * @throws IllegalStateException if that loop has not converged after
+    *         `maxIter` propagations (see [[memberLabels]]).
     */
   def clusterLabels(pairs: DataFrame, nodes: DataFrame, maxIter: Int = 20,
       smallGraphEdges: Long = 5000000L): DataFrame = {
@@ -561,6 +603,9 @@ object Dedup {
     * this public API must not depend on that. Null-id pairs fall out with
     * them (null =!= null is null → filtered), which is the right call:
     * a null id cannot participate in a labeled component.
+    *
+    * @throws IllegalStateException if the distributed loop has not
+    *         converged after `maxIter` propagations.
     */
   def memberLabels(pairs: DataFrame, maxIter: Int = 20,
       smallGraphEdges: Long = 5000000L): DataFrame = {
@@ -622,6 +667,11 @@ object Dedup {
       labels = next.select("node", "label")
       iter += 2
     }
+    // unconverged labels are wrong labels (a long path's tail keeps a
+    // mid-path minimum), so running out of rounds is an error, not a result
+    if (!converged) throw new IllegalStateException(
+      s"Dedup.memberLabels: label propagation did not converge within " +
+        s"maxIter = $maxIter ($iter iterations run); raise maxIter")
     labels
   }
 
@@ -660,13 +710,6 @@ object Dedup {
 
   // --- SimHash ---------------------------------------------------------------
 
-  /** 64-bit SimHash over n-gram shingle features: per bit, count the
-    * shingles whose token-hash bit is set and set the fingerprint bit iff
-    * set-votes form a strict majority (2·ones > n — equal to the classic
-    * ±1 vote sum being positive). Shingles (not unigrams) keep the
-    * fingerprint discriminative when the vocabulary is small. 64 codegen'd
-    * branch-free shift-mask sums in ONE aggregate pass (round 15).
-    */
   /** Default shingle hash: Spark-native codegen'd xxhash64 (fast path). */
   val xxhashTok: Column => Column = (c: Column) => xxhash64(c)
 
@@ -678,7 +721,14 @@ object Dedup {
   val md5Tok60: Column => Column =
     (c: Column) => conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
-  /** @param bits fingerprint width; must match the range of `tokHash` (64 for
+  /** 64-bit SimHash over n-gram shingle features: per bit, count the
+    * shingles whose token-hash bit is set and set the fingerprint bit iff
+    * set-votes form a strict majority (2·ones > n — equal to the classic
+    * ±1 vote sum being positive). Shingles (not unigrams) keep the
+    * fingerprint discriminative when the vocabulary is small. 64 codegen'd
+    * branch-free shift-mask sums in ONE aggregate pass (round 15).
+    *
+    * @param bits fingerprint width; must match the range of `tokHash` (64 for
     *        xxhash64, 60 for md5Tok60).
     */
   def simhash(df: DataFrame, idCol: String, textCol: String, n: Int = 3,
@@ -740,19 +790,12 @@ object Dedup {
     // 60-vote aggregate pipeline; persisted because the banded candidate
     // join consumes it on BOTH sides (same posture as jaccardPrefixPairs'
     // prefix postings — unpersisted, the fingerprint pass runs twice)
-    val fps = track(simhash(df, idCol, textCol, n, bits, tokHash)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val fps = pin(simhash(df, idCol, textCol, n, bits, tokHash))
     val banded = fps.select(col("id"), col("simhash"),
       posexplode(array((0 until 4).map(b =>
         shiftright(col("simhash"), b * chunkBits).bitwiseAND(lit(chunkMask))): _*)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "chunk")
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.chunk") === col("b.chunk") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_1"), col("b.id").as("id_2"),
-        col("a.simhash").as("sh_1"), col("b.simhash").as("sh_2"))
-      .distinct()
+    bandPairs(banded, "chunk", "simhash" -> "sh")
       .withColumn("hamming", bit_count(col("sh_1").bitwiseXOR(col("sh_2"))))
       .filter(col("hamming") <= maxHamming)
       .select(col("id_1"), col("id_2"), col("hamming"))
@@ -772,41 +815,22 @@ object Dedup {
     * Scale: the self-join runs on the prefix postings — at t=0.5 roughly half
     * the postings, and the rarity ordering puts the high-fanout (common)
     * shingles at prefix tails, so bucket sizes collapse versus the full
-    * postings self-join. The frequency table is one extra agg on the postings
-    * it already has in memory.
-    */
-  /** @param broadcastDocTables ALLOW broadcasting the per-doc shingle-set
-    *        table into the candidate stream (size-gated by
-    *        [[docBroadcastCutoff]], same posture as [[minhashNearDup]]);
-    *        false forces sort-merge regardless of size.
+    * postings self-join. The per-doc shingle-set table is broadcast into the
+    * candidate stream up to [[docBroadcastCutoff]] docs, same posture as
+    * [[minhashNearDup]].
     */
   def jaccardPrefixPairs(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, threshold: Double = 0.5,
-      broadcastDocTables: Boolean = true): DataFrame = {
-    val bcastDocs = shouldBroadcastDocTables(df, broadcastDocTables)
-    val sh = track(hashedPostings(df, idCol, textCol, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val sizes = broadcast(sh.groupBy(col("id")).agg(count(lit(1)).as("sz")))
-    val freq = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-    val w = Window.partitionBy(col("id")).orderBy(col("df"), col("shingle"))
-    // persist: the prefix postings feed BOTH sides of the candidate
-    // self-join — unpersisted, the freq join + rarity window (the two
-    // heaviest shuffles here) run twice
-    val prefix = track(sh.join(freq, "shingle")
-      .withColumn("rnk", row_number().over(w))
-      .join(sizes, "id")
-      // ceil over an epsilon-nudged product: t*sz can land one double ULP
-      // ABOVE the exact rational value (e.g. 0.3*10 = 3.0000000000000004),
-      // ceiling to required+1 and shortening the prefix below the lossless
-      // bound. 1e-9 is orders above the FP error for any realistic doc size
-      // (rel. error ~1e-16·t·sz) yet far below the gap to the next integer
-      // for thresholds with short decimal expansions.
-      .filter(col("rnk") <=
-        col("sz") - ceil(lit(threshold) * col("sz") - lit(1e-9)) + 1)
-      // sz rides along (one long per posting): the candidate join below
-      // applies the PPJoin length filter with ZERO extra joins
-      .select(col("id"), col("shingle"), col("sz"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      n: Int = 3, threshold: Double = 0.5): DataFrame = {
+    val bcast = broadcastDocs(df)
+    val sh = pin(hashedPostings(df, idCol, textCol, n))
+    // ceil over an epsilon-nudged product: t*sz can land one double ULP
+    // ABOVE the exact rational value (e.g. 0.3*10 = 3.0000000000000004),
+    // ceiling to required+1 and shortening the prefix below the lossless
+    // bound. 1e-9 is orders above the FP error for any realistic doc size
+    // (rel. error ~1e-16·t·sz) yet far below the gap to the next integer
+    // for thresholds with short decimal expansions.
+    val prefix = rarityPrefix(sh, broadcast(sizesOf(sh)),
+      sz => sz - ceil(lit(threshold) * sz - lit(1e-9)) + 1)
     // PPJoin LENGTH filter (lossless, r21): J(A,B) <= min(|A|,|B|) /
     // max(|A|,|B|), so J >= t forces min >= t*max. Both prefix sides
     // already carry their doc's size, so the filter runs right on the
@@ -824,25 +848,7 @@ object Dedup {
         lit(threshold) * greatest(col("a.sz"), col("b.sz")) - lit(0.5))
       .select(col("a.id").as("id_1"), col("b.id").as("id_2"))
       .distinct()
-    // Exact verify via per-doc shingle sets (the same shape as
-    // [[minhashNearDup]]'s stage 2): each candidate pair costs one
-    // count-only merge walk over two in-row SORTED arrays
-    // ([[graft.functions.SortedIntersectCount]]). The previous formulations,
-    // in order of replacement: re-joining both docs' FULL postings per pair
-    // (a |cand| x avg_set_size explosion through two shuffles — 5.2 s ->
-    // 1.9 s for q_jaccard_prefix at sf0.1 when replaced), then
-    // size(array_intersect(...)), whose per-row hash-set build + boxed
-    // probes + materialized intersection array dominated the verify stage
-    // (r21 profile: ~12 CPU-seconds warm at sf0.1, ~5x that cold).
-    def maybeBroadcast(d: DataFrame): DataFrame =
-      if (bcastDocs) broadcast(d) else d
-    val sets = sh.groupBy(col("id"))
-      .agg(sort_array(collect_set(col("shingle"))).as("set"))
-    sized
-      .join(maybeBroadcast(sets.as("sa")), col("id_1") === col("sa.id"))
-      .join(maybeBroadcast(sets.as("sb")), col("id_2") === col("sb.id"))
-      .withColumn("i", graft.functions.SetFunctions
-        .sorted_intersect_count(col("sa.set"), col("sb.set")).cast("double"))
+    withIntersection(sized, "id_1", "id_2", sh, bcast)
       .withColumn("jaccard",
         col("i") / (size(col("sa.set")) + size(col("sb.set")) - col("i")))
       .filter(col("jaccard") >= threshold)
@@ -859,33 +865,22 @@ object Dedup {
     * matching shingle may sit anywhere in B), so candidates come from
     * prefix(sub) ⋈ postings(super); at t=0.8 the probe side is a fifth of
     * the postings and rarity ordering keeps bucket fanout small. Candidates
-    * verify exactly via per-doc shingle sets (one array_intersect per
-    * pair), so output EQUALS the all-pairs verifier.
+    * verify exactly via per-doc sorted shingle sets (one count-only merge
+    * walk per pair), so output EQUALS the all-pairs verifier.
     */
   def containmentPrefixPairs(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, threshold: Double = 0.8,
-      broadcastDocTables: Boolean = true): DataFrame = {
-    val bcastDocs = shouldBroadcastDocTables(df, broadcastDocTables)
-    val sh = track(hashedPostings(df, idCol, textCol, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val sizes = broadcast(sh.groupBy(col("id")).agg(count(lit(1)).as("sz")))
-    val freq = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-    val w = Window.partitionBy(col("id")).orderBy(col("df"), col("shingle"))
-    val prefix = track(sh.join(freq, "shingle")
-      .withColumn("rnk", row_number().over(w))
-      .join(sizes, "id")
-      // (1-t) itself is inexact in doubles (1.0-0.8 = 0.19999999999999996),
-      // so (1-t)*sz lands BELOW the exact value and the floor loses a slot
-      // at every sz multiple of 1/(1-t) — at the default t=0.8 that is
-      // every 5th doc size, silently breaking losslessness. The epsilon
-      // restores the exact-rational floor (same bound-error analysis as
-      // [[jaccardPrefixPairs]]'s ceil).
-      .filter(col("rnk") <=
-        floor(lit(1.0 - threshold) * col("sz") + lit(1e-9)).cast("long") + 1)
-      // sub-side sz rides along so the length filter below needs only the
-      // SUPER side's size attached
-      .select(col("id"), col("shingle"), col("sz"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      n: Int = 3, threshold: Double = 0.8): DataFrame = {
+    val bcast = broadcastDocs(df)
+    val sh = pin(hashedPostings(df, idCol, textCol, n))
+    val sizes = broadcast(sizesOf(sh))
+    // (1-t) itself is inexact in doubles (1.0-0.8 = 0.19999999999999996),
+    // so (1-t)*sz lands BELOW the exact value and the floor loses a slot
+    // at every sz multiple of 1/(1-t) — at the default t=0.8 that is
+    // every 5th doc size, silently breaking losslessness. The epsilon
+    // restores the exact-rational floor (same bound-error analysis as
+    // [[jaccardPrefixPairs]]'s ceil).
+    val prefix = rarityPrefix(sh, sizes,
+      sz => floor(lit(1.0 - threshold) * sz + lit(1e-9)).cast("long") + 1)
     val cand = prefix.as("a")
       .join(sh.as("b"),
         col("a.shingle") === col("b.shingle") && col("a.id") =!= col("b.id"))
@@ -904,20 +899,8 @@ object Dedup {
       .filter(col("z2.sz").cast("double") >=
         lit(threshold) * col("sub_sz") - lit(0.5))
       .select(col("sub_id"), col("super_id"))
-    def maybeBroadcast(d: DataFrame): DataFrame =
-      if (bcastDocs) broadcast(d) else d
-    // sorted sets + count-only merge-walk intersection — see
-    // [[jaccardPrefixPairs]]'s verify note for why this beats
-    // size(array_intersect(...)) at candidate volume
-    val sets = sh.groupBy(col("id"))
-      .agg(sort_array(collect_set(col("shingle"))).as("set"))
-    sized
-      .join(maybeBroadcast(sets.as("sa")), col("sub_id") === col("sa.id"))
-      .join(maybeBroadcast(sets.as("sb")), col("super_id") === col("sb.id"))
-      .withColumn("containment",
-        graft.functions.SetFunctions
-          .sorted_intersect_count(col("sa.set"), col("sb.set")).cast("double")
-          / size(col("sa.set")))
+    withIntersection(sized, "sub_id", "super_id", sh, bcast)
+      .withColumn("containment", col("i") / size(col("sa.set")))
       .filter(col("containment") >= threshold)
       .select(col("sub_id"), col("super_id"), col("containment"))
   }

@@ -16,9 +16,10 @@ import graft.sources.Tables
   *
   * Scale posture is inherited from the operators each query composes: the
   * cluster walk is [[Dedup.clusterLabels]]' fused label propagation, the
-  * containment pass shares [[Dedup.jaccardPairs]]' fenced postings
-  * self-join (LSH is the corpus-scale candidate path), and everything else
-  * is partial-aggregated groupBy/window shapes with broadcast model sides.
+  * containment pass runs the same fenced shared-shingle postings self-join
+  * as [[Dedup.jaccardPairs]] ([[Dedup.containmentPrefixPairs]] is the
+  * corpus-scale path, same output), and everything else is
+  * partial-aggregated groupBy/window shapes with broadcast model sides.
   */
 object Ext32Queries {
 

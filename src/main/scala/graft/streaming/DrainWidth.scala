@@ -14,19 +14,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * scale-adaptive instead of a constant tuned for either local mode or a
   * cluster:
   *
-  *   width = clamp(ceil(bytes / graft.drain.bytesPerPartition), 2,
-  *                 graft.drain.maxPartitions)
+  *   width = clamp(ceil(bytes / 64 MiB), 2, 200)
   *
   * - `graft.drain.partitions` (session conf or system property) overrides
   *   the derivation outright — the explicit production knob.
-  * - `graft.drain.bytesPerPartition` defaults to 64 MiB: a replay step's
-  *   worth of state folding per store keeps each store's working set far
-  *   below executor memory while bounding store-count overhead.
+  * - 64 MiB per partition: a replay step's worth of state folding per
+  *   store keeps each store's working set far below executor memory while
+  *   bounding store-count overhead.
   * - the floor of 2 keeps every drain exercising real multi-partition
   *   state semantics (partition-local stores, cross-partition shuffle) —
   *   a width-1 drain would stop covering them;
-  * - `graft.drain.maxPartitions` (default 200) caps the derived width the
-  *   same way `spark.sql.shuffle.partitions`' default does for batch.
+  * - the cap of 200 bounds the derived width the same way
+  *   `spark.sql.shuffle.partitions`' default does for batch.
   *
   * Result-invariant by construction: state partitioning changes WHERE keys
   * fold, never what the fold emits (the provider-interchange and
@@ -34,20 +33,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object DrainWidth {
   val PartitionsKey = "graft.drain.partitions"
-  val BytesPerPartitionKey = "graft.drain.bytesPerPartition"
-  val MaxPartitionsKey = "graft.drain.maxPartitions"
-  val DefaultBytesPerPartition: Long = 64L << 20
-  val DefaultMaxPartitions: Int = 200
-
-  private def confLong(s: SparkSession, key: String, dflt: Long): Long = {
-    val raw = s.conf.get(key, sys.props.getOrElse(key, dflt.toString))
-    try raw.trim.toLong
-    catch {
-      case _: NumberFormatException =>
-        throw new IllegalArgumentException(
-          s"$key must be a long; got '$raw'")
-    }
-  }
+  private val BytesPerPartition: Long = 64L << 20
+  private val MaxPartitions: Long = 200L
 
   /** Derived width for a drain whose replay input totals `bytes`. */
   def forBytes(s: SparkSession, bytes: Long): Int = {
@@ -62,12 +49,8 @@ object DrainWidth {
       require(v >= 1, s"$PartitionsKey must be >= 1, got $v")
       v
     } else {
-      val per = math.max(1L, confLong(s, BytesPerPartitionKey,
-        DefaultBytesPerPartition))
-      val max = math.max(2L, confLong(s, MaxPartitionsKey,
-        DefaultMaxPartitions.toLong))
-      val derived = (math.max(0L, bytes) + per - 1) / per
-      math.min(max, math.max(2L, derived)).toInt
+      val derived = (math.max(0L, bytes) + BytesPerPartition - 1) / BytesPerPartition
+      math.min(MaxPartitions, math.max(2L, derived)).toInt
     }
   }
 

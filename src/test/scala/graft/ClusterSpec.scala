@@ -47,6 +47,25 @@ class ClusterSpec extends SparkTestBase {
     assert((0L to 15L).forall(l(_) == 0L))
   }
 
+  // 0-1-...-29 path: 29 propagations to settle, more than the default
+  // maxIter = 20 allows
+  private def path30 = (0L until 29L).map(i => (i, i + 1)).toDF("id_1", "id_2")
+
+  test("distributed loop throws instead of returning unconverged labels") {
+    val e = intercept[IllegalStateException] {
+      Dedup.memberLabels(path30, smallGraphEdges = 0L)
+    }
+    assert(e.getMessage.contains("maxIter = 20"), e.getMessage)
+    assert(e.getMessage.contains("20 iterations"), e.getMessage)
+  }
+
+  test("distributed loop labels the 30-node path with a large enough maxIter") {
+    val l = Dedup.memberLabels(path30, maxIter = 32, smallGraphEdges = 0L)
+      .as[(Long, Long)].collect().toMap
+    assert(l.keySet == (0L to 29L).toSet)
+    assert(l.values.forall(_ == 0L), s"unconverged labels: $l")
+  }
+
   test("empty pair set labels every node as its own singleton cluster") {
     val l = labelsOf(Seq.empty, Seq(1L, 5L, 9L))
     assert(l == Map(1L -> 1L, 5L -> 5L, 9L -> 9L))

@@ -201,6 +201,46 @@ class DedupSpec extends SparkTestBase {
       "negative and zero cutoffs must never run the count probe")
   }
 
+  test("sort-merge verify (cutoff 0) returns the same rows as broadcast " +
+      "verify (cutoff -1)") {
+    val key = "graft.dedup.broadcastMaxDocs"
+    def rows(cutoff: String)(op: => org.apache.spark.sql.DataFrame) = {
+      spark.conf.set(key, cutoff)
+      try {
+        val df = op
+        val smj = df.queryExecution.executedPlan.collect {
+          case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j
+        }
+        (smj.size, df.collect().map(_.toSeq).toSet)
+      } finally spark.conf.unset(key)
+    }
+    // static plans with no size-based broadcast, so cutoff 0 really runs
+    // the per-doc table joins sort-merge
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "jaccardPrefixPairs" -> (() =>
+          Dedup.jaccardPrefixPairs(corpus, "doc_id", "text")),
+        "containmentPrefixPairs" -> (() =>
+          Dedup.containmentPrefixPairs(corpus, "doc_id", "text")),
+        "minhashNearDup" -> (() =>
+          Dedup.minhashNearDup(corpus, "doc_id", "text"))
+      ).foreach { case (name, op) =>
+        val (smjMerge, merged) = rows("0")(op())
+        val (smjBcast, bcast) = rows("-1")(op())
+        assert(bcast.nonEmpty, s"$name: fixture must yield pairs")
+        assert(merged == bcast, s"$name: sort-merge rows differ")
+        assert(smjMerge > smjBcast,
+          s"$name: cutoff 0 must plan the doc-table joins sort-merge " +
+            s"($smjMerge vs $smjBcast sort-merge joins)")
+      }
+    } finally {
+      spark.conf.unset("spark.sql.adaptive.enabled")
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
+  }
+
   test("broadcast count probe is memoized per canonical input plan") {
     // derived (non-parquet-metadata) input: probe must execute its plan
     // at most once across repeated gated operators and re-invocations

@@ -1049,6 +1049,13 @@ class PlanSpec extends SparkTestBase {
       "q_assoc_rules" -> Budget(7, 1, 5, 1, 0),
       "q_lpa_communities" -> Budget(8, 3, 2, 0, 2),
       "q_jaccard_prefix" -> Budget(1, 0, 3, 0, 0),
+      // pinned postings and signatures: the one exchange is the
+      // shingle-set aggregate under its broadcast; the five broadcast
+      // joins are the band self-join, the two signature estimate joins
+      // and the two shingle-set verify joins (one reused exchange each)
+      "q_minhash_neardup" -> Budget(1, 0, 5, 0, 0),
+      // pinned fingerprints: one broadcast band self-join, no exchange
+      "q_simhash_neardup" -> Budget(0, 0, 1, 0, 0),
       "q_item_similarity" -> Budget(6, 1, 6, 0, 1),
       // BFS tail after per-level checkpoints
       "q_recursive_cte" -> Budget(1, 0, 0, 0, 0),
