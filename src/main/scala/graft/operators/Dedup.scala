@@ -119,7 +119,7 @@ object Dedup {
     val key = "graft.dedup.broadcastMaxDocs"
     val raw = df.sparkSession.conf.get(key,
       sys.props.getOrElse(key, "200000"))
-    try raw.toLong catch { case _: NumberFormatException =>
+    try raw.trim.toLong catch { case _: NumberFormatException =>
       throw new IllegalArgumentException(
         s"$key must be a long (any negative = always broadcast, " +
           s"0 = never, N > 0 = broadcast up to N docs); got '$raw'")

@@ -25,21 +25,24 @@ import org.apache.spark.sql.functions.udf
   * The rule engine is pinned by the published example scores in
   * SentimentSpec (e.g. "VADER is VERY SMART, handsome, and FUNNY!!!" ->
   * 0.9342) — those vectors exercise caps, boosters, damping, negation,
-  * but-reweighting and punctuation together. The embedded lexicon is a
-  * ~7.4k-entry transcription of the published vader_lexicon.txt (core
-  * block + the [[VaderLexiconExt]]..[[VaderLexiconExt11]] widenings:
-  * common sentiment vocabulary, informal/internet
-  * tokens + the crypto-news domain); [[VaderScorer.fromLexiconFile]]
-  * loads the full ~7.5k-entry published file for 100% lexical coverage —
-  * the file format is the published TSV, no code changes needed.
+  * but-reweighting and punctuation together.
   *
-  * EMBEDDED-LEXICON BOUNDARY — FINAL (round 15). The residual ~100-entry
-  * gap vs the published file is the tail that failed the two-embedded-
-  * sibling precision test (no independent family evidence for the exact
-  * valence): transcribing those from memory risks wrong scores, which is
-  * worse for fidelity than a missing rare word. The embedded set will not
-  * be widened further; deployments wanting the complete published
-  * vocabulary load it through the file seam above.
+  * EMBEDDED LEXICON. [[VaderData.lexicon]] is a 7,429-entry subset of the
+  * published MIT-licensed vader_lexicon.txt (~7.5k lines), kept as data
+  * in the classpath resource `graft/vader_lexicon.tsv` and read by the
+  * same [[VaderScorer.parseLexicon]] as a user file;
+  * [[VaderScorer.fromLexiconFile]] loads the full published file for 100%
+  * lexical coverage. Keys are lowercase (the scorer lowercases tokens
+  * before lookup). A few valences are solved exactly from published
+  * example compounds (`compelling`, `uncompelling`, `collapsed`); rare
+  * tail entries may sit within ~0.3 of the published mean; the
+  * crypto-news vocabulary carries a few entries the published file lacks
+  * (`fall` -1.2, see SentimentSpec). Boundary rule: an entry is embedded
+  * only with independent evidence for its valence (at least two embedded
+  * sibling inflections with the same sign). The ~100 published entries
+  * that fail it stay out, because a missing rare word scores 0 while a
+  * wrong valence scores wrong; deployments wanting the complete published
+  * vocabulary load it through the file seam.
   *
   * Kept as a Scala UDF by design: the control flow (per-distance backward
   * scan with running-valence sign checks) is genuinely imperative;
@@ -285,34 +288,39 @@ object VaderScorer {
       Character.isTitleCase(c)) &&
       !token.exists(c => Character.isLowerCase(c) || Character.isTitleCase(c))
 
-  /** Parse the published vader_lexicon.txt TSV (token \t valence \t std \t
-    * raw ratings); emoji/multi-codepoint lines pass through as-is.
+  /** Parse the published vader_lexicon.txt TSV (token \t valence, then
+    * optional std and raw-ratings columns); emoji/multi-codepoint lines
+    * pass through as-is. Blank lines are skipped; any other line without
+    * a token or a numeric valence throws, naming `source` and the 1-based
+    * line number, so a damaged file cannot shrink coverage silently.
     */
-  def parseLexicon(lines: Iterator[String]): Map[String, Double] =
-    lines.flatMap { line =>
+  def parseLexicon(lines: Iterator[String], source: String): Map[String, Double] =
+    lines.zipWithIndex.filterNot(_._1.trim.isEmpty).map { case (line, i) =>
       val parts = line.split("\t")
-      if (parts.length >= 2 && parts(0).nonEmpty)
-        scala.util.Try(parts(0) -> parts(1).toDouble).toOption
-      else None
+      val valence = parts.lift(1).flatMap(_.toDoubleOption)
+      if (parts(0).isEmpty || valence.isEmpty)
+        throw new IllegalArgumentException(
+          s"$source:${i + 1}: expected 'token<TAB>valence', got '$line'")
+      parts(0) -> valence.get
     }.toMap
+
+  /** [[parseLexicon]] over `src`, closing it afterwards. */
+  private[operators] def readLexicon(src: scala.io.Source,
+      source: String): Map[String, Double] =
+    try parseLexicon(src.getLines(), source) finally src.close()
 
   /** Full-fidelity scorer from the published lexicon file (MIT license):
     * drop vader_lexicon.txt anywhere on disk and every one of the ~7.5k
     * entries scores identically to NLTK.
     */
-  def fromLexiconFile(path: String): VaderScorer = {
-    val src = scala.io.Source.fromFile(path, "UTF-8")
-    try new VaderScorer(parseLexicon(src.getLines()),
+  def fromLexiconFile(path: String): VaderScorer =
+    new VaderScorer(readLexicon(scala.io.Source.fromFile(path, "UTF-8"), path),
       VaderData.boosters, VaderData.negations, VaderData.idioms)
-    finally src.close()
-  }
 }
 
 /** The published constant tables: booster dictionary, negation list and
-  * special-case idioms are the COMPLETE published sets; the lexicon is a
-  * ~520-entry core transcription (common sentiment vocabulary plus the
-  * crypto/news domain) merged with the [[VaderLexiconExt]]..
-  * [[VaderLexiconExt11]] widening blocks to ~7.4k entries total — see
+  * special-case idioms are the COMPLETE published sets; the lexicon is
+  * the embedded subset described on [[VaderScorer]] — see
   * [[VaderData.lexicon]].
   */
 object VaderData {
@@ -357,184 +365,21 @@ object VaderData {
     "bus stop" -> 0.0, "yeah right" -> -2.0, "kiss of death" -> -1.5,
     "to die for" -> 3.0, "beating heart" -> 3.1, "broken heart" -> -2.9)
 
-  /** (word -> valence) — values transcribed from the published
-    * vader_lexicon.txt: this core block (~520 entries: common sentiment
-    * vocabulary + the crypto/finance/news domain the reference's feeds
-    * actually emit) merged with the [[VaderLexiconExt]] ..
-    * [[VaderLexiconExt10]] widening blocks (~6.6k more entries; kept as
-    * separate objects so no single constructor approaches the JVM 64 KB
-    * method ceiling).
-    */
-  private[graft] val coreLexicon: Map[String, Double] = Map(
-    // --- positive ---
-    "good" -> 1.9, "great" -> 3.1, "excellent" -> 2.7, "amazing" -> 2.8,
-    "awesome" -> 3.1, "best" -> 3.2, "better" -> 1.9, "positive" -> 2.3,
-    "profit" -> 2.0, "gain" -> 2.4, "gains" -> 2.4, "win" -> 2.8,
-    "wins" -> 2.7, "winner" -> 2.8, "winning" -> 2.4, "won" -> 2.7,
-    "up" -> 0.9, "rise" -> 1.2, "rose" -> 1.1, "surge" -> 1.4,
-    "rally" -> 1.5, "boom" -> 1.4, "bull" -> 1.1, "bullish" -> 1.6,
-    "strong" -> 2.3, "strength" -> 2.2, "growth" -> 2.4, "success" -> 2.7,
-    "successful" -> 2.2, "love" -> 3.2, "loved" -> 2.9, "loves" -> 2.7,
-    "happy" -> 2.7, "happiness" -> 2.6, "optimistic" -> 1.7,
-    "recover" -> 1.4, "recovery" -> 1.5, "smart" -> 1.7, "handsome" -> 2.2,
-    "funny" -> 1.9, "lol" -> 1.8, "nice" -> 1.8, "beautiful" -> 2.9,
-    "beauty" -> 2.8, "brilliant" -> 2.8, "wonderful" -> 2.7,
-    "fantastic" -> 2.6, "perfect" -> 2.7, "perfectly" -> 2.7, "glad" -> 2.0,
-    "joy" -> 2.8, "fun" -> 2.3, "delight" -> 2.9, "delighted" -> 2.8,
-    "charm" -> 2.0, "charming" -> 2.4, "cheer" -> 2.3, "cheerful" -> 2.5,
-    "comfort" -> 1.5, "comfortable" -> 1.9, "confidence" -> 2.3,
-    "confident" -> 2.2, "courage" -> 2.2, "courageous" -> 2.4,
-    "creative" -> 1.9, "cute" -> 2.0, "eager" -> 1.5, "easy" -> 1.9,
-    "efficient" -> 1.7, "elegant" -> 2.1, "encourage" -> 2.3,
-    "encouraged" -> 2.0, "energetic" -> 1.9, "enjoy" -> 2.2,
-    "enjoyed" -> 2.3, "enthusiastic" -> 2.5, "excited" -> 2.2,
-    "exciting" -> 2.2, "fair" -> 1.7, "faith" -> 1.9, "favorite" -> 2.0,
-    "fine" -> 0.8, "free" -> 1.9, "freedom" -> 2.3, "fresh" -> 1.3,
-    "friend" -> 2.2, "friendly" -> 2.2, "generous" -> 2.3, "gentle" -> 1.9,
-    "gift" -> 1.9, "glory" -> 2.5, "grace" -> 1.9, "grand" -> 2.2,
-    "grateful" -> 2.6, "heal" -> 2.1, "healthy" -> 1.7, "heaven" -> 2.3,
-    "help" -> 1.7, "helpful" -> 1.8, "helps" -> 1.6, "hero" -> 2.6,
-    "honest" -> 2.3, "honor" -> 2.3, "hope" -> 1.9, "hopeful" -> 1.5,
-    "impress" -> 2.1, "impressive" -> 2.3, "improve" -> 1.9,
-    "improved" -> 2.1, "improvement" -> 2.0, "innovative" -> 1.5,
-    "inspire" -> 2.4, "inspired" -> 2.2, "interesting" -> 1.7,
-    "interested" -> 1.6, "kind" -> 2.4, "lucky" -> 2.4, "peace" -> 2.5,
-    "peaceful" -> 2.2, "pleasant" -> 2.3, "pleased" -> 2.1,
-    "pleasure" -> 2.7, "popular" -> 2.1, "progress" -> 1.8, "proud" -> 2.2,
-    "reward" -> 2.4, "rewarding" -> 2.4, "rich" -> 2.6, "safe" -> 1.9,
-    "satisfied" -> 2.0, "secure" -> 1.7, "share" -> 1.2, "smile" -> 2.0,
-    "special" -> 1.7, "splendid" -> 2.9, "stable" -> 1.2, "superb" -> 3.1,
-    "support" -> 1.7, "supported" -> 1.7, "supportive" -> 2.1,
-    "sweet" -> 2.0, "thank" -> 1.9, "thanks" -> 1.9, "top" -> 2.0,
-    "triumph" -> 2.9, "trust" -> 2.3, "trusted" -> 2.3, "useful" -> 1.9,
-    "valuable" -> 2.1, "victory" -> 2.8, "warm" -> 1.6, "wealth" -> 2.2,
-    "wealthy" -> 2.0, "welcome" -> 2.0, "worthy" -> 1.9, "wow" -> 2.8,
-    "yes" -> 1.7, "yeah" -> 1.2, "like" -> 1.5, "liked" -> 1.7,
-    "likes" -> 1.6, "approval" -> 1.8, "advantage" -> 1.7, "agree" -> 1.5,
-    "agreement" -> 1.6, "benefit" -> 2.0, "benefits" -> 1.8, "bonus" -> 2.5,
-    "brave" -> 2.4, "bright" -> 1.9, "calm" -> 1.3, "celebrate" -> 2.7,
-    "celebrated" -> 2.6, "champion" -> 2.4, "clean" -> 1.7, "clever" -> 2.0,
-    "determined" -> 1.5, "devoted" -> 2.2, "famous" -> 1.7,
-    "adoption" -> 1.2, "opportunity" -> 1.8, "opportunities" -> 1.7,
-    "promising" -> 1.6, "breakthrough" -> 2.1, "soar" -> 1.6,
-    "soared" -> 1.6, "surged" -> 1.4, "outperform" -> 1.5, "upgrade" -> 1.4,
-    "upgraded" -> 1.5, "sux" -> -1.5,
-    // --- negative ---
-    "bad" -> -2.5, "terrible" -> -2.1, "awful" -> -2.0, "worst" -> -3.1,
-    "worse" -> -2.1, "negative" -> -2.7, "loss" -> -1.3, "losses" -> -1.7,
-    "lose" -> -2.0, "losing" -> -1.9, "lost" -> -1.3, "crash" -> -2.5,
-    "crashed" -> -2.3, "plunge" -> -1.2, "plunged" -> -1.5, "drop" -> -1.1,
-    "dropped" -> -1.1, "fall" -> -1.2, "fell" -> -1.0, "fear" -> -2.2,
-    "fears" -> -1.7, "panic" -> -2.4, "bear" -> -0.4, "bearish" -> -1.4,
-    "weak" -> -1.8, "weakness" -> -1.6, "fraud" -> -2.8, "scam" -> -2.3,
-    "scams" -> -2.3, "risk" -> -1.1, "risks" -> -1.1, "risky" -> -1.3,
-    // collapsed CALIBRATED EXACTLY from the published demo compound for
-    // "the twin towers collapsed today" (-0.2732 -> sum -1.0997 -> -1.1,
-    // round-13 inversion; the -2.0 it replaced was a transcription error)
-    "crisis" -> -3.1, "collapse" -> -2.1, "collapsed" -> -1.1,
-    "hate" -> -2.7, "hated" -> -3.2, "sad" -> -2.1, "decline" -> -1.6,
-    "declined" -> -1.1, "doubt" -> -1.5, "doubts" -> -1.3,
-    "horrible" -> -2.5, "horrific" -> -3.0, "abuse" -> -3.2,
-    "afraid" -> -2.2, "angry" -> -2.3, "anger" -> -2.7, "anxious" -> -1.9,
-    "anxiety" -> -1.9, "attack" -> -2.1, "attacked" -> -2.2,
-    "bankrupt" -> -2.6, "bankruptcy" -> -2.6, "battle" -> -1.6,
-    "betray" -> -3.2, "betrayed" -> -2.8, "blame" -> -1.4,
-    "blamed" -> -1.6, "broke" -> -1.5, "broken" -> -2.1, "cheat" -> -2.6,
-    "cheated" -> -2.4, "chaos" -> -2.6, "conflict" -> -1.4,
-    "corrupt" -> -3.1, "corruption" -> -2.7, "crime" -> -2.5,
-    "criminal" -> -2.5, "cruel" -> -2.8, "cry" -> -2.1, "damage" -> -2.2,
-    "damaged" -> -2.0, "danger" -> -2.4, "dangerous" -> -2.2,
-    "dead" -> -3.3, "death" -> -2.9, "debt" -> -1.9, "defeat" -> -2.0,
-    "defeated" -> -2.2, "denied" -> -1.9, "deny" -> -1.3,
-    "desperate" -> -1.6, "destroy" -> -2.6, "destroyed" -> -2.6,
-    "destruction" -> -2.8, "devastate" -> -3.0, "devastated" -> -3.2,
-    "die" -> -2.9, "died" -> -2.8, "difficult" -> -1.5, "dirty" -> -2.0,
-    "disaster" -> -3.1, "disastrous" -> -2.9, "disappointed" -> -2.3,
-    "disappointing" -> -2.2, "dispute" -> -1.7, "doom" -> -2.3,
-    "dump" -> -1.4, "dumped" -> -1.5, "emergency" -> -2.2, "enemy" -> -2.5,
-    "evil" -> -3.4, "fail" -> -2.5, "failed" -> -2.3, "failure" -> -2.6,
-    "fake" -> -2.1, "fatal" -> -2.7, "fight" -> -1.6, "fired" -> -2.0,
-    "foolish" -> -1.9, "forced" -> -1.5, "frustrated" -> -2.4,
-    "greed" -> -2.7, "greedy" -> -2.4, "grief" -> -2.4, "guilty" -> -2.5,
-    "harm" -> -2.5, "harmful" -> -2.5, "harsh" -> -1.9, "hurt" -> -2.4,
-    "ignore" -> -1.5, "ignored" -> -1.8, "ill" -> -1.8, "illegal" -> -2.6,
-    "injury" -> -2.0, "insult" -> -2.3, "jail" -> -2.3, "kill" -> -3.7,
-    "killed" -> -3.4, "lawsuit" -> -1.4, "lie" -> -1.8, "lies" -> -1.8,
-    "mad" -> -2.2, "mess" -> -1.7, "miserable" -> -2.8, "mistake" -> -2.1,
-    "mistakes" -> -2.0, "murder" -> -3.4, "nasty" -> -2.6,
-    "nightmare" -> -2.8, "pain" -> -2.5, "painful" -> -2.6,
-    "pathetic" -> -2.6, "penalty" -> -1.9, "poor" -> -2.1,
-    "problem" -> -1.7, "problems" -> -1.7, "punish" -> -2.3,
-    "punished" -> -2.6, "rage" -> -2.4, "reject" -> -1.9,
-    "rejected" -> -2.1, "ruin" -> -2.7, "ruined" -> -2.6,
-    "scandal" -> -2.4, "scared" -> -2.2, "shame" -> -2.1, "sick" -> -2.3,
-    "steal" -> -2.2, "stolen" -> -2.2, "stress" -> -1.8,
-    "stressful" -> -2.1, "struggle" -> -1.9, "struggling" -> -1.9,
-    "stupid" -> -2.4, "suffer" -> -2.5, "suffering" -> -2.4,
-    "suspicious" -> -1.5, "terror" -> -3.1, "theft" -> -2.2,
-    "threat" -> -2.4, "threats" -> -2.2, "tragedy" -> -3.3,
-    "trouble" -> -2.0, "troubled" -> -1.9, "ugly" -> -2.6,
-    "unfair" -> -2.2, "unhappy" -> -2.2, "upset" -> -1.9, "victim" -> -1.7,
-    "violence" -> -3.1, "violent" -> -2.9, "war" -> -2.9,
-    "warning" -> -1.4, "waste" -> -1.8, "wasted" -> -2.0, "worried" -> -1.6,
-    "worry" -> -1.9, "wrong" -> -2.1, "hack" -> -1.6, "hacked" -> -1.9,
-    "hackers" -> -1.7, "selloff" -> -1.4, "liquidation" -> -1.5,
-    "liquidated" -> -1.6, "downgrade" -> -1.4, "downgraded" -> -1.5,
-    "volatile" -> -0.9, "volatility" -> -0.9, "no" -> -1.2,
-    // --- round-10 widening: common sentiment + news-wire vocabulary ---
-    "sure" -> 1.3, "ban" -> -2.6, "banned" -> -2.0, "block" -> -1.6,
-    "blocked" -> -1.4, "arrest" -> -1.4, "arrested" -> -1.9,
-    "investigation" -> -1.0, "accuse" -> -1.6, "accused" -> -1.4,
-    "allegation" -> -1.1, "alleged" -> -0.8, "approve" -> 1.8,
-    "approved" -> 2.0, "approves" -> 1.8,
-    "sanction" -> -1.0, "sanctions" -> -1.3, "seize" -> -1.4,
-    "seized" -> -1.4, "sue" -> -1.6, "sued" -> -1.6,
-    "innocent" -> 1.6, "charged" -> -1.4, "convicted" -> -2.1,
-    "prison" -> -2.0, "probe" -> -0.6, "warn" -> -1.3, "warned" -> -1.3,
-    "warns" -> -1.2, "halt" -> -1.0, "halted" -> -1.1,
-    "suspend" -> -1.3, "suspended" -> -1.6, "delay" -> -1.3,
-    "delayed" -> -1.4, "miss" -> -1.0, "missed" -> -1.4,
-    "beat" -> -1.2, "record" -> 1.1, "strongly" -> 1.6, "boost" -> 1.7,
-    "boosted" -> 1.6, "boosts" -> 1.6, "jump" -> 0.9, "jumped" -> 0.9,
-    "climb" -> 0.9, "climbed" -> 0.9, "advance" -> 1.2, "advanced" -> 1.3,
-    "slump" -> -1.5, "slumped" -> -1.5, "tumble" -> -1.2,
-    "tumbled" -> -1.3, "sink" -> -1.3, "sank" -> -1.2, "slide" -> -0.9,
-    "dip" -> -0.7, "dive" -> -1.0, "dived" -> -1.1, "skyrocket" -> 1.8,
-    "skyrocketed" -> 1.9, "thrive" -> 2.2, "thriving" -> 2.3,
-    "prosper" -> 2.2, "prosperity" -> 2.5, "flourish" -> 2.2,
-    "stellar" -> 2.4, "robust" -> 1.7, "resilient" -> 1.6,
-    "momentum" -> 1.0, "uncertain" -> -1.2, "uncertainty" -> -1.4,
-    "turmoil" -> -1.9, "distress" -> -2.3, "distressed" -> -1.9,
-    "default" -> -1.2, "insolvent" -> -2.1, "insolvency" -> -2.0,
-    "manipulate" -> -1.7, "manipulation" -> -1.5, "exploit" -> -1.7,
-    "exploited" -> -2.0, "vulnerable" -> -1.4, "vulnerability" -> -1.4,
-    "breach" -> -1.6, "breached" -> -1.5,
-    "ransom" -> -2.0, "phishing" -> -1.8, "counterfeit" -> -1.9,
-    "outage" -> -1.5, "glitch" -> -1.4, "bug" -> -1.3, "bugs" -> -1.4,
-    "error" -> -1.6, "errors" -> -1.6, "flaw" -> -1.6, "flawed" -> -1.8,
-    "flaws" -> -1.7, "fix" -> 1.0, "fixed" -> 1.1, "resolve" -> 1.3,
-    "resolved" -> 1.5, "solution" -> 1.4, "solutions" -> 1.3,
-    "solve" -> 1.6, "solved" -> 1.8, "milestone" -> 1.7,
-    "partnership" -> 1.6, "partnerships" -> 1.5, "alliance" -> 1.2,
-    "launch" -> 1.0, "launched" -> 1.0, "expand" -> 1.3,
-    "expansion" -> 1.3, "accelerate" -> 1.2, "accelerated" -> 1.2,
-    "dominant" -> 1.2, "dominance" -> 1.0, "leading" -> 1.6,
-    "leader" -> 1.8, "pioneer" -> 1.7, "innovation" -> 1.6,
-    "revolutionary" -> 1.7, "transform" -> 1.1, "transformation" -> 1.2,
-    // --- emoticons (tokens the stripper preserves) ---
-    ":)" -> 2.0, ":(" -> -1.9, ":d" -> 2.3, ":/" -> -1.4)
+  /** Classpath path of the embedded lexicon (see [[lexicon]]). */
+  val LexiconResource = "graft/vader_lexicon.tsv"
 
-  /** Core block + the [[VaderLexiconExt]]..[[VaderLexiconExt11]]
-    * widenings (~7.4k entries total) — defined AFTER the literals so
-    * object-initialization order is safe.
+  /** (word -> valence): the embedded 7,429-entry subset of the published
+    * vader_lexicon.txt, stored as `token\tvalence` lines in
+    * [[LexiconResource]] and parsed by [[VaderScorer.parseLexicon]], the
+    * same parser a user file goes through.
     */
-  val lexicon: Map[String, Double] =
-    coreLexicon ++ VaderLexiconExt.entries ++ VaderLexiconExt2.entries ++
-      VaderLexiconExt3.entries ++ VaderLexiconExt4.entries ++
-      VaderLexiconExt5.entries ++ VaderLexiconExt6.entries ++
-      VaderLexiconExt7.entries ++ VaderLexiconExt8.entries ++
-      VaderLexiconExt9.entries ++ VaderLexiconExt10.entries ++
-      VaderLexiconExt11.entries
+  val lexicon: Map[String, Double] = {
+    val in = getClass.getClassLoader.getResourceAsStream(LexiconResource)
+    if (in == null) throw new IllegalStateException(
+      s"VADER lexicon resource $LexiconResource is not on the classpath")
+    VaderScorer.readLexicon(scala.io.Source.fromInputStream(in, "UTF-8"),
+      LexiconResource)
+  }
 }
 
 /** Default full-rule scorer over the embedded published tables. */
@@ -542,18 +387,16 @@ object Sentiment extends VaderScorer(
   VaderData.lexicon, VaderData.boosters, VaderData.negations, VaderData.idioms) {
 
   /** Resolution behind [[active]], factored out so tests can exercise the
-    * file path without racing the lazy val: system property
-    * `graft.vader.lexicon` first, env `GRAFT_VADER_LEXICON` second, the
-    * embedded ~7.4k-entry merge last.
+    * file path without racing the lazy val: the file named by the system
+    * property `graft.vader.lexicon`, else the embedded lexicon.
     */
   private[graft] def resolveActive(): VaderScorer =
     sys.props.get("graft.vader.lexicon")
-      .orElse(sys.env.get("GRAFT_VADER_LEXICON"))
       .map(VaderScorer.fromLexiconFile)
       .getOrElse(this)
 
-  /** The PIPELINE-ACTIVE scorer. Point `graft.vader.lexicon` (system
-    * property) or `GRAFT_VADER_LEXICON` (env) at the published MIT-licensed
+  /** The PIPELINE-ACTIVE scorer. Point the system property
+    * `graft.vader.lexicon` at the published MIT-licensed
     * `vader_lexicon.txt` and every sentiment stage scores with the full
     * ~7.5k-entry lexicon — NLTK-identical compounds end-to-end (the rule
     * engine is complete either way; this container ships no copy of the

@@ -418,10 +418,6 @@ object StreamQueries {
     * happen on noise-guard re-runs. */
   def invalidateStateInspectCache(): Unit = stateInspectCache.clear()
 
-  /** Test seam: run a genuinely FRESH drain (bypassing the memo), collect
-    * its state rows, and delete the checkpoint immediately — the
-    * determinism spec uses this to prove independent drains agree without
-    * leaving a dir behind. */
   /** Shared tail of the fresh-drain seams: drain on the given session,
     * collect the state rows, delete the checkpoint immediately (the rows
     * are materialized, so eager deletion is safe here — unlike the
@@ -433,6 +429,10 @@ object StreamQueries {
     finally org.apache.commons.io.FileUtils.deleteQuietly(ckpt.toFile)
   }
 
+  /** Test seam: run a genuinely FRESH drain (bypassing the memo), collect
+    * its state rows, and delete the checkpoint immediately — the
+    * determinism spec uses this to prove independent drains agree without
+    * leaving a dir behind. */
   private[graft] def stateInspectFresh(
       s: SparkSession, dir: String): Seq[org.apache.spark.sql.Row] =
     freshDrainCollect(inspectSession(s), dir)

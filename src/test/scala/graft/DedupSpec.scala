@@ -186,6 +186,8 @@ class DedupSpec extends SparkTestBase {
     assert(withConf("-7")(Dedup.docBroadcastCutoff(corpus)) == -7L)
     assert(withConf("0")(Dedup.docBroadcastCutoff(corpus)) == 0L)
     assert(withConf("123")(Dedup.docBroadcastCutoff(corpus)) == 123L)
+    // padded values parse like every other graft knob
+    assert(withConf(" 123 ")(Dedup.docBroadcastCutoff(corpus)) == 123L)
     val e = intercept[IllegalArgumentException] {
       withConf("not-a-number")(Dedup.docBroadcastCutoff(corpus))
     }

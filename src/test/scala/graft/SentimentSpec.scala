@@ -50,7 +50,7 @@ class SentimentSpec extends SparkTestBase {
       "Without a doubt, an excellent idea." -> 0.7013, // without-doubt pass
       "The movie was too good" -> 0.4404,
       "It isn't a horrible book." -> 0.431, // n't-suffix negation
-      // solved the round-13 `badass` lexicon entry (see VaderLexiconExt10)
+      // solved the round-13 `badass` lexicon entry
       "Not such a badass after all." -> -0.2584,
       // second round-13 batch, again engine-reproduced at 4 dp before
       // pinning; the last two jointly exercise the but-clause reweight
@@ -60,17 +60,17 @@ class SentimentSpec extends SparkTestBase {
       "they fall in love with the product" -> 0.4588, // DOMAIN-tail note below
       "I like to hate Michael Bay films, but I couldn't fault this one" -> 0.3153,
       "I like to hate Michael Bay films, BUT I couldn't help but fault this one" -> -0.1531,
-      // solved the round-13 `pay` entry (see VaderLexiconExt10)
+      // solved the round-13 `pay` entry
       "It's one thing to watch an Uwe Boll film, but another thing entirely to pay for it" -> -0.2541,
-      // solved the round-13 `collapsed` correction (core block)
+      // solved the round-13 `collapsed` correction
       "the twin towers collapsed today" -> -0.2732)
     // NOTE on "they fall in love with the product": the published NLTK
     // output is 0.6369 (love only — "fall" is not in the published
     // lexicon); this engine deliberately carries `fall` -1.2 in its
-    // crypto-domain tail (price-move vocabulary, documented at
-    // VaderData.coreLexicon), so the pinned value is the ENGINE's
-    // domain-lexicon score, not the stock-NLTK one — the one known class
-    // of deliberate divergence. Dropping the domain tail (or configuring
+    // crypto-domain tail (price-move vocabulary, see the VaderScorer
+    // scaladoc), so the pinned value is the ENGINE's domain-lexicon score,
+    // not the stock-NLTK one — the one known class of deliberate
+    // divergence. Dropping the domain tail (or configuring
     // the published file via graft.vader.lexicon) recovers 0.6369.
     goldens.foreach { case (text, expected) =>
       assert(round4(Sentiment.score(text)) == expected,
@@ -123,6 +123,40 @@ class SentimentSpec extends SparkTestBase {
     java.nio.file.Files.delete(f)
   }
 
+  test("fromLexiconFile names the file and line of a malformed entry; " +
+      "blank lines are skipped") {
+    val f = java.nio.file.Files.createTempFile("vader-bad", ".txt")
+    try {
+      // line 2 is blank (skipped), line 3 lost its tab
+      java.nio.file.Files.writeString(f, "happy\t2.7\t0.7\t[3, 2, 3]\n\nsad -2.1\n")
+      val e = intercept[IllegalArgumentException] {
+        VaderScorer.fromLexiconFile(f.toString)
+      }
+      assert(e.getMessage.contains(s"$f:3:"), e.getMessage)
+    } finally java.nio.file.Files.delete(f)
+    // a non-numeric valence and a missing token fail the same way
+    for (bad <- Seq("bad\tx", "\t2.0")) {
+      val e = intercept[IllegalArgumentException] {
+        VaderScorer.parseLexicon(Iterator("ok\t1.0", bad), "mem")
+      }
+      assert(e.getMessage.contains("mem:2:"), e.getMessage)
+    }
+  }
+
+  test("embedded resource copied to a file loads to the same lexicon " +
+      "(one parser for both paths)") {
+    val f = java.nio.file.Files.createTempFile("vader-copy", ".tsv")
+    try {
+      val in = getClass.getClassLoader
+        .getResourceAsStream(graft.operators.VaderData.LexiconResource)
+      try java.nio.file.Files.copy(in, f,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      finally in.close()
+      assert(VaderScorer.fromLexiconFile(f.toString).lexicon ==
+        Sentiment.lexicon)
+    } finally java.nio.file.Files.delete(f)
+  }
+
   test("full-lexicon file path: goldens survive the file round trip, " +
       "coverage grows") {
     // stand-in for the published ~7.5k-entry vader_lexicon.txt (zero-egress
@@ -172,9 +206,9 @@ class SentimentSpec extends SparkTestBase {
   test("round-13 symbol-emoticon tail reaches the scorer through the " +
       "<=2-char punctuation-strip preservation path") {
     // every token here strips to an alnum core of <= 2 chars, so the raw
-    // token survives tokenization and must hit its VaderLexiconExt10
-    // entry — sign assertions (structural: smile vs frown vs sneer), not
-    // exact means, so a +-0.3 transcription drift cannot flake the suite
+    // token survives tokenization and must hit its lexicon entry — sign
+    // assertions (structural: smile vs frown vs sneer), not exact means,
+    // so a +-0.3 transcription drift cannot flake the suite
     val positive = Seq("(:", "(8", "(-:", "0:)", ":*", ":-*",
       "*\\0/*", "\\m/", "x-d", "8d", "---'-;-{@")
     val negative = Seq("):", ")-:", "):<", "D:<", ":@", ":-@", ">.<",

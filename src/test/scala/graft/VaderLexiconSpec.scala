@@ -1,36 +1,50 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{Sentiment, VaderData, VaderLexiconExt, VaderLexiconExt2, VaderLexiconExt3, VaderLexiconExt4, VaderLexiconExt5, VaderLexiconExt6, VaderLexiconExt7, VaderLexiconExt8, VaderLexiconExt9, VaderLexiconExt10, VaderLexiconExt11}
+import graft.operators.{Sentiment, VaderData}
 
-/** Structural invariants of the three-block embedded lexicon (core +
-  * round-10 widenings). These are SEMANTIC guards, not style checks: a
-  * lexicon entry that shadows a booster/negation word changes rule
-  * behavior at that token slot (the scorer suppresses booster/negation
-  * handling when the preceding word is in the lexicon), and a cross-block
-  * key collision would silently last-wins-overwrite a transcribed valence.
+/** Invariants of the embedded lexicon resource (`graft/vader_lexicon.tsv`).
+  * These are SEMANTIC guards, not style checks: a lexicon entry that
+  * shadows a booster/negation word changes rule behavior at that token
+  * slot (the scorer suppresses booster/negation handling when the
+  * preceding word is in the lexicon), and a token listed twice would
+  * silently last-wins-overwrite a transcribed valence.
   */
 class VaderLexiconSpec extends AnyFunSuite {
 
-  private val blocks = Seq(
-    "core" -> VaderData.coreLexicon.keySet,
-    "ext" -> VaderLexiconExt.entries.keySet,
-    "ext2" -> VaderLexiconExt2.entries.keySet,
-    "ext3" -> VaderLexiconExt3.entries.keySet,
-    "ext4" -> VaderLexiconExt4.entries.keySet,
-    "ext5" -> VaderLexiconExt5.entries.keySet,
-    "ext6" -> VaderLexiconExt6.entries.keySet,
-    "ext7" -> VaderLexiconExt7.entries.keySet,
-    "ext8" -> VaderLexiconExt8.entries.keySet,
-    "ext9" -> VaderLexiconExt9.entries.keySet,
-    "ext10" -> VaderLexiconExt10.entries.keySet,
-    "ext11" -> VaderLexiconExt11.entries.keySet)
+  private def resourceLines(): Seq[String] = {
+    val in = getClass.getClassLoader
+      .getResourceAsStream(VaderData.LexiconResource)
+    assert(in != null, s"${VaderData.LexiconResource} not on the classpath")
+    val src = scala.io.Source.fromInputStream(in, "UTF-8")
+    try src.getLines().toList finally src.close()
+  }
+
+  // The lexicon is one resource now, so its lines are the blocks: every
+  // non-blank line must land in the map, and no two lines may share a token.
+  test("merged lexicon covers >= 7000 entries and all blocks contribute") {
+    assert(VaderData.lexicon.size == 7429,
+      s"lexicon size ${VaderData.lexicon.size}")
+    assert(resourceLines().count(_.trim.nonEmpty) == VaderData.lexicon.size)
+  }
 
   test("no pair of lexicon blocks overlaps (no silent shadowing)") {
-    for {
-      Seq((na, a), (nb, b)) <- blocks.combinations(2)
-      overlap = a & b
-    } assert(overlap.isEmpty, s"$na/$nb collision: $overlap")
+    val tokens = resourceLines().filter(_.trim.nonEmpty).map(_.split('\t')(0))
+    val dups = tokens.groupBy(identity).collect {
+      case (w, hits) if hits.size > 1 => w -> hits.size
+    }
+    assert(dups.isEmpty, s"tokens on more than one line: $dups")
+  }
+
+  test("sorted entries match the pinned SHA-256 digest") {
+    // digest of the sorted `token\tvalence\n` lines (Double.toString
+    // valences), pinned when the lexicon moved from code into the resource
+    val body = VaderData.lexicon.toSeq.sorted
+      .map { case (w, v) => s"$w\t$v\n" }.mkString
+    val hex = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(body.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    assert(hex ==
+      "87c9c6dd7f1b921aded5f2d0421c4b8e084e719c6488d76360c5f512e7a57a7f")
   }
 
   test("no lexicon word is also a booster or negation (rule semantics)") {
@@ -48,35 +62,29 @@ class VaderLexiconSpec extends AnyFunSuite {
     assert(bad.isEmpty, s"out-of-scale valences: $bad")
   }
 
-  test("merged lexicon covers >= 7000 entries and all blocks contribute") {
-    assert(VaderData.lexicon.size >= 7000,
-      s"merged size ${VaderData.lexicon.size}")
-    assert(VaderData.lexicon.size == blocks.map(_._2.size).sum)
-  }
-
   test("widened words score with full rule machinery (booster + negation)") {
-    // all four words are ext-block entries — OOV before round 10
+    // all four words are round-10 widenings — OOV before them
     assert(Sentiment.score("an outstanding achievement") > 0.5)
     assert(Sentiment.score("a catastrophic failure of oversight") < -0.5)
     assert(Sentiment.score("very disturbing allegations") <
       Sentiment.score("disturbing allegations")) // booster amplifies
     assert(Sentiment.score("not hopeless") > 0) // negation flips
 
-    // ext2-block entries (OOV before this widening) through the same rules
+    // second-widening entries through the same rules
     assert(Sentiment.score("a heartwarming recovery") > 0.5)
     assert(Sentiment.score("an absolutely devastating betrayal") < -0.5)
     assert(Sentiment.score("very misleading claims") <
       Sentiment.score("misleading claims"))
     assert(Sentiment.score("not hostile") > 0)
 
-    // ext3-block entries: informal tokens + emoticons survive the
+    // informal tokens + emoticons survive the
     // punctuation stripper (<=2-char rule keeps pure-punct tokens intact)
     assert(Sentiment.score("haha that was exemplary") > 0.5)
     assert(Sentiment.score("ugh what a dud") < -0.5)
     assert(Sentiment.score("miss you <3") > 0)
     assert(Sentiment.score("my team lost :-(") < 0)
 
-    // ext4-block entries (f-z families) through the same rules
+    // f-z family entries through the same rules
     assert(Sentiment.score("a lucrative and seamless launch") > 0.5)
     assert(Sentiment.score("an utterly reprehensible scam") < -0.5)
     assert(Sentiment.score("extremely worrisome signals") <
@@ -90,8 +98,8 @@ class VaderLexiconSpec extends AnyFunSuite {
   }
 
   test("sampled valences stay at their transcribed values (edit tripwire)") {
-    // One pin per block family, strongest-valence words included: a future
-    // bulk edit (scale change, sign flip, block merge) trips immediately.
+    // Pins across the word families, strongest-valence words included: a
+    // future bulk edit (scale change, sign flip) trips immediately.
     val pins = Map(
       "awesome" -> 3.1, "awful" -> -2.0, "beautiful" -> 2.9,
       "best" -> 3.2, "kill" -> -3.7, "murder" -> -3.4,
