@@ -38,8 +38,6 @@ object Bench {
     val loadavgStart = loadavg1m()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val noR16Warm = sys.env.get("SPARK_GRAFT_NO_R16_WARM")
-      .exists(v => v.nonEmpty && v != "0" && v != "false")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -59,9 +57,7 @@ object Bench {
       // those recompiles are pure waste on the driver's compile path —
       // measured ~85 compiles inside q_cluster_canonical's cold timed
       // region, of which the warm pass below + this conf remove ~75.
-      // SPARK_GRAFT_NO_R16_WARM=1 restores the r15 posture (A/B lever;
-      // 0/empty/false count as UNSET, so '=0' does not silently flip arms).
-      .config("spark.sql.codegen.useIdInClassName", noR16Warm.toString)
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -151,7 +147,7 @@ object Bench {
     // [[warmDedupClusterCodegen]].
     val dedupClusterFamily =
       Set("q_cluster_canonical", "q_dedup_clusters", "q_curation_funnel")
-    if (!noR16Warm && names.exists(dedupClusterFamily))
+    if (names.exists(dedupClusterFamily))
       warm("dedup-cluster codegen")(warmDedupClusterCodegen(spark))
     val firstPass = names.map(n => n -> materialize(n))
     // NOISE GUARD (round-9 verdict: the driver host can be loaded, and a

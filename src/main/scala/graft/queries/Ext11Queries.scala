@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.functions.TextFunctions
@@ -251,31 +250,18 @@ object Ext11Queries {
     * production bounds it with a watermark on arrival time or swaps in the
     * Bloom admission tier ([[RuntimeFilters]]).
     */
-  def docPipeline(s: SparkSession, dir: String): DataFrame = {
-    // r21: drain isolated onto a child session at a width derived from the
-    // replay input (was: the caller session's batch width) — see
-    // [[graft.streaming.DrainWidth]]
-    val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions",
-      graft.streaming.DrainWidth.forPath(s, s"$dir/documents.parquet").toString)
-    val scored = docsStream(ss, dir)
-      .withColumn("n_tokens", TextAnalysis.tokenCount(col("text")).cast("long"))
-      .withColumn("quality", TextAnalysis.qualityScore(col("text")))
-      .withColumn("pred_lang", TextAnalysis.langId(col("text")))
-      .withColumn("fp", md5(col("text")))
-      .filter(col("quality") > 0.2 && col("n_tokens") >= 10)
-      .dropDuplicates("fp")
-      .select(col("fp"), col("n_tokens"), col("pred_lang"), col("quality"))
-    val name = "doc_pipeline_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = scored.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    graft.streaming.Drain.awaitOrFail(q, "stream drain")
-    ss.table(name)
-  }
+  def docPipeline(s: SparkSession, dir: String): DataFrame =
+    graft.streaming.Drain.toMemory(s, "doc_pipeline",
+        graft.streaming.DrainWidth.forPath(s, s"$dir/documents.parquet"), "append") { ss =>
+      docsStream(ss, dir)
+        .withColumn("n_tokens", TextAnalysis.tokenCount(col("text")).cast("long"))
+        .withColumn("quality", TextAnalysis.qualityScore(col("text")))
+        .withColumn("pred_lang", TextAnalysis.langId(col("text")))
+        .withColumn("fp", md5(col("text")))
+        .filter(col("quality") > 0.2 && col("n_tokens") >= 10)
+        .dropDuplicates("fp")
+        .select(col("fp"), col("n_tokens"), col("pred_lang"), col("quality"))
+    }
 
   val docPipelineOracle: String = {
     val stop = TextAnalysis.enStopwords.map("'" + _ + "'").mkString("[", ", ", "]")

@@ -355,53 +355,29 @@ object Ext2Queries {
     * following hour. The drained result must equal the batch range join —
     * the oracle is plain SQL over the same table.
     */
-  def streamJoin(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    // round-13 isolation fix (same treatment as streamOuterJoin): the
-    // narrow-drain partition override runs on an isolated child session,
-    // and the per-call memory view is dropped once the result resolves
-    // instead of pinning its rows in the caller's catalog for JVM life
-    val ss = s.newSession()
-    // drain width sized to the replayed table (r21, was a constant 8) —
-    // 4 join state stores per partition per batch, see
-    // [[graft.streaming.DrainWidth]]
-    ss.conf.set("spark.sql.shuffle.partitions",
-      graft.streaming.DrainWidth.forPath(s, s"$dir/events.parquet").toString)
-    // bounded replay, INNER join: every output row needs input rows, so the
-    // engine's trailing zero-input micro-batch (state cleanup after the
-    // watermark advance — 4 store spin-ups per partition, zero emissions)
-    // is pure fixed cost; suppress it on this isolated child session only.
-    // A production continuous stream keeps the default. (r22; measured 2
-    // micro-batches -> 1, identical rows — DrainBatchProbe census)
-    ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    def side(tpe: String) = StreamQueries.eventsStream(ss, dir)
-      .filter(col("event_type") === tpe)
-      .select(col("event_id"), col("user_id"), col("ts_t"), col("ts_us"))
-      .withWatermark("ts_t", "1 hour")
-    val clicks = side("click")
-      .select(col("event_id").as("click_id"), col("user_id"),
-        col("ts_t").as("click_t"), col("ts_us").as("click_us"))
-    val purchases = side("purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id"),
-        col("ts_t").as("purchase_t"), col("ts_us").as("purchase_us"))
-    val joined = clicks.join(purchases,
-      clicks("user_id") === purchases("user_id") &&
-        purchases("purchase_t") >= clicks("click_t") &&
-        purchases("purchase_t") <= clicks("click_t") + expr("INTERVAL 1 HOUR"))
-    val name = "stream_join_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    // Stream-stream joins keep 4 state stores per shuffle partition; at the
-    // drain's data volume the per-store fixed cost dominates, so the child
-    // session runs the drain at a narrow shuffle width (the partitioning
-    // does not change the join result).
-    val q = joined
-      .select(col("click_id"), col("purchase_id"), col("click_us"), col("purchase_us"))
-      .writeStream.outputMode("append").format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    graft.streaming.Drain.awaitOrFail(q, "stream drain")
-    val result = ss.table(name)
-    ss.catalog.dropTempView(name)
-    result
-  }
+  def streamJoin(s: SparkSession, dir: String): DataFrame =
+    // 4 join state stores per partition per batch: the width follows the
+    // replayed table, see [[graft.streaming.DrainWidth]]. An INNER join
+    // emits only on input rows, so the drain's one data batch is all it
+    // needs (DrainCensusSpec pins the count).
+    graft.streaming.Drain.toMemory(s, "stream_join",
+        graft.streaming.DrainWidth.forPath(s, s"$dir/events.parquet"), "append") { ss =>
+      def side(tpe: String) = StreamQueries.eventsStream(ss, dir)
+        .filter(col("event_type") === tpe)
+        .select(col("event_id"), col("user_id"), col("ts_t"), col("ts_us"))
+        .withWatermark("ts_t", "1 hour")
+      val clicks = side("click")
+        .select(col("event_id").as("click_id"), col("user_id"),
+          col("ts_t").as("click_t"), col("ts_us").as("click_us"))
+      val purchases = side("purchase")
+        .select(col("event_id").as("purchase_id"), col("user_id"),
+          col("ts_t").as("purchase_t"), col("ts_us").as("purchase_us"))
+      clicks.join(purchases,
+        clicks("user_id") === purchases("user_id") &&
+          purchases("purchase_t") >= clicks("click_t") &&
+          purchases("purchase_t") <= clicks("click_t") + expr("INTERVAL 1 HOUR"))
+        .select(col("click_id"), col("purchase_id"), col("click_us"), col("purchase_us"))
+    }
 
   val streamJoinOracle: String =
     """WITH e AS (

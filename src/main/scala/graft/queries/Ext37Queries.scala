@@ -164,7 +164,6 @@ object Ext37Queries {
     * sentinels below must carry the join types themselves.
     */
   def streamOuterJoin(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     import graft.streaming.LandingZone
     val ev = Tables.events(s, dir)
       .select(col("event_id"), col("user_id"), col("ts_us"), col("event_type"))
@@ -196,39 +195,18 @@ object Ext37Queries {
     // former data/sentA/sentB layout paid a third file batch plus the
     // engine's trailing no-data batch for the same flush — measured 4
     // micro-batches where this layout pays 2, identical rows
-    // (DrainBatchProbe census, r22).
+    // (DrainCensusSpec pins the 2).
     val staged = LandingZone.stage(
       ev.unionByName(sentinel(maxUs + 7200000000L)),
       Seq(sentinel(maxUs + 10800000000L)),
       filesPerStep = LandingZone.DrainFilesPerStep)
-    // Round-13 isolation fix: the narrow-drain partition override runs on
-    // an isolated child session so a concurrently planned query on the
-    // caller's session can't inherit 8 shuffle partitions; the per-drain
-    // memory view is dropped once the result resolves
-    val ss = s.newSession()
-    // drain width sized to the staged replay input (r21, was a constant
-    // 8) — 4 join state stores spin up per partition per batch, see
-    // [[graft.streaming.DrainWidth]]
-    ss.conf.set("spark.sql.shuffle.partitions",
-      graft.streaming.DrainWidth.forPath(s, staged).toString)
-    // bounded replay: the last FILE batch already runs past every join
-    // window (see the staging note), so the engine's trailing zero-input
-    // micro-batch — 4 more store spin-ups per partition that can emit
-    // nothing — is suppressed on this isolated child session only; a
-    // production continuous stream keeps the default
-    ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val joined = outerJoinStream(ss, staged)
-    val name = "stream_outer_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = joined
-      .select(col("click_id"), col("click_us"),
+    // 4 join state stores spin up per partition per batch: the width
+    // follows the staged replay input, see [[graft.streaming.DrainWidth]]
+    graft.streaming.Drain.toMemory(s, "stream_outer_join",
+        graft.streaming.DrainWidth.forPath(s, staged), "append") { ss =>
+      outerJoinStream(ss, staged).select(col("click_id"), col("click_us"),
         col("purchase_id"), col("purchase_us"))
-      .writeStream.outputMode("append").format("memory").queryName(name)
-      .trigger(Trigger.AvailableNow()).start()
-    graft.streaming.Drain.awaitOrFail(q, "stream_outer_join")
-    // drop the sentinel clicks' own (null-padded) rows
-    val result = ss.table(name).filter(col("click_id") >= 0)
-    ss.catalog.dropTempView(name)
-    result
+    }.filter(col("click_id") >= 0) // drop the sentinel clicks' own rows
   }
 
   val streamOuterJoinOracle: String =

@@ -248,43 +248,19 @@ object Ext5Queries {
     * batch q_session_window (which uses a 30-minute gap — both formulations
     * stay gated independently).
     */
-  def streamSession(s: SparkSession, dir: String): DataFrame = {
-    // r21: drain isolated onto a child session at a width derived from the
-    // replay input (was: the caller session's batch width) — see
-    // [[graft.streaming.DrainWidth]]
-    val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions",
-      graft.streaming.DrainWidth.forPath(s, s"$dir/events.parquet").toString)
-    // bounded replay, COMPLETE mode: every batch rewrites the sink with the
-    // full aggregate, so the engine's trailing zero-input micro-batch would
-    // only re-emit the identical rows; suppressed on this isolated child
-    // session only — a production continuous stream keeps the default (r22,
-    // see the stream_join note)
-    ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val agg = StreamQueries.eventsStream(ss, dir)
-      .withWatermark("ts_t", "1 hour")
-      .groupBy(session_window(col("ts_t"), "45 minutes"), col("user_id"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("user_id"),
-        unix_micros(col("session_window.start")).as("session_start_us"),
-        // window.end = last event + gap; expose the last-event time instead
-        (unix_micros(col("session_window.end")) - lit(2700000000L)).as("session_last_us"),
-        col("n"))
-    val name = "stream_session_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    graft.streaming.Drain.awaitOrFail(q, "stream drain")
-    // resolve THEN drop the per-call memory view (round-13 fix: each call
-    // pinned one UUID-named view + its rows in the session catalog for
-    // JVM life; the analyzed plan keeps the sink relation alive)
-    val result = ss.table(name)
-    ss.catalog.dropTempView(name)
-    result
-  }
+  def streamSession(s: SparkSession, dir: String): DataFrame =
+    graft.streaming.Drain.toMemory(s, "stream_session",
+        graft.streaming.DrainWidth.forPath(s, s"$dir/events.parquet"), "complete") { ss =>
+      StreamQueries.eventsStream(ss, dir)
+        .withWatermark("ts_t", "1 hour")
+        .groupBy(session_window(col("ts_t"), "45 minutes"), col("user_id"))
+        .agg(count(lit(1)).as("n"))
+        .select(col("user_id"),
+          unix_micros(col("session_window.start")).as("session_start_us"),
+          // window.end = last event + gap; expose the last-event time instead
+          (unix_micros(col("session_window.end")) - lit(2700000000L)).as("session_last_us"),
+          col("n"))
+    }
 
   val streamSessionOracle: String =
     """WITH e AS (

@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.DecimalType
 
 import graft.sources.Tables
@@ -244,30 +243,17 @@ object Ext7Queries {
     * the stream against the warehouse" topology; drained with AvailableNow,
     * gated against the batch join.
     */
-  def streamStatic(s: SparkSession, dir: String): DataFrame = {
-    // r21: drain isolated onto a child session at a width derived from the
-    // replay input (was: the caller session's batch width) — see
-    // [[graft.streaming.DrainWidth]]
-    val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions",
-      graft.streaming.DrainWidth.forPath(s, s"$dir/events.parquet").toString)
-    val dim = Tables.customer(ss, dir)
-      .select(col("c_custkey").as("user_id"), col("c_mktsegment").as("segment"))
-    val agg = StreamQueries.eventsStream(ss, dir)
-      .join(broadcast(dim), Seq("user_id"))
-      .groupBy("segment", "event_type")
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(18, 2))).cast("double").as("sum_value"))
-    val name = "stream_static_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    graft.streaming.Drain.awaitOrFail(q, "stream drain")
-    ss.table(name)
-  }
+  def streamStatic(s: SparkSession, dir: String): DataFrame =
+    graft.streaming.Drain.toMemory(s, "stream_static",
+        graft.streaming.DrainWidth.forPath(s, s"$dir/events.parquet"), "complete") { ss =>
+      val dim = Tables.customer(ss, dir)
+        .select(col("c_custkey").as("user_id"), col("c_mktsegment").as("segment"))
+      StreamQueries.eventsStream(ss, dir)
+        .join(broadcast(dim), Seq("user_id"))
+        .groupBy("segment", "event_type")
+        .agg(count(lit(1)).as("n"),
+          sum(col("value").cast(DecimalType(18, 2))).cast("double").as("sum_value"))
+    }
 
   val streamStaticOracle: String =
     """SELECT c.c_mktsegment AS segment, e.event_type, COUNT(*) AS n,

@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.DecimalType
 
 import graft.operators.{Joins, Scale}
@@ -275,38 +274,14 @@ object ExtQueries {
     * dropDuplicatesWithinWatermark and the surviving key set must be exactly
     * the batch-distinct key set.
     */
-  def streamDedup(s: SparkSession, dir: String): DataFrame = {
-    // r21: drain isolated onto a child session at a width derived from the
-    // replay input (was: the caller session's batch width) — see
-    // [[graft.streaming.DrainWidth]]
-    val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions",
-      graft.streaming.DrainWidth.forPath(s, s"$dir/events.parquet").toString)
-    // bounded replay: dropDuplicatesWithinWatermark emits each surviving
-    // key on FIRST SIGHT (inside the data batch); the engine's trailing
-    // zero-input micro-batch only evicts state and can emit nothing, so it
-    // is suppressed on this isolated child session only — a production
-    // continuous stream keeps the default (r22, see the stream_join note)
-    ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val deduped = StreamQueries.eventsStream(ss, dir)
-      .withWatermark("ts_t", "1 hour")
-      .dropDuplicatesWithinWatermark("user_id", "event_type")
-      .select(col("user_id"), col("event_type"))
-    val name = "stream_dedup_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = deduped.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    graft.streaming.Drain.awaitOrFail(q, "stream drain")
-    // resolve THEN drop the per-call memory view (round-13 fix: each call
-    // pinned one UUID-named view + its rows in the session catalog for
-    // JVM life; the analyzed plan keeps the sink relation alive)
-    val result = ss.table(name)
-    ss.catalog.dropTempView(name)
-    result
-  }
+  def streamDedup(s: SparkSession, dir: String): DataFrame =
+    graft.streaming.Drain.toMemory(s, "stream_dedup",
+        graft.streaming.DrainWidth.forPath(s, s"$dir/events.parquet"), "append") { ss =>
+      StreamQueries.eventsStream(ss, dir)
+        .withWatermark("ts_t", "1 hour")
+        .dropDuplicatesWithinWatermark("user_id", "event_type")
+        .select(col("user_id"), col("event_type"))
+    }
 
   val streamDedupOracle: String =
     "SELECT DISTINCT user_id, event_type FROM events"

@@ -101,36 +101,16 @@ object StreamQueries {
     * windows). Complete output mode: every window is in the memory sink when
     * the drain terminates, so the result equals the batch aggregation.
     */
-  def streamTumbling(s: SparkSession, dir: String): DataFrame = {
-    // r21: drain isolated onto a child session at a width derived from the
-    // replay input (was: the caller session's batch width — one state
-    // store per shuffle partition per batch is the bounded drain's floor,
-    // see [[graft.streaming.DrainWidth]])
-    val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions",
-      graft.streaming.DrainWidth.forPath(s, s"$dir/events.parquet").toString)
-    val agg = eventsStream(ss, dir)
-      .groupBy(window(col("ts_t"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(18, 2))).cast("double").as("sum_value"))
-    val name = "stream_tumbling_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    // bounded wait: a wedged drain must not stall the whole verify run
-    graft.streaming.Drain.awaitOrFail(q, "stream drain")
-    // resolve THEN drop the per-call memory view (round-13 fix: each call
-    // pinned one UUID-named view + its rows in the session catalog for
-    // JVM life; the analyzed plan keeps the sink relation alive)
-    val result = ss.table(name).select(
+  def streamTumbling(s: SparkSession, dir: String): DataFrame =
+    graft.streaming.Drain.toMemory(s, "stream_tumbling",
+        graft.streaming.DrainWidth.forPath(s, s"$dir/events.parquet"), "complete") { ss =>
+      eventsStream(ss, dir)
+        .groupBy(window(col("ts_t"), "1 hour"), col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          sum(col("value").cast(DecimalType(18, 2))).cast("double").as("sum_value"))
+    }.select(
       unix_micros(col("window.start")).as("win_start_us"),
       col("event_type"), col("n"), col("sum_value"))
-    ss.catalog.dropTempView(name)
-    result
-  }
 
   val streamTumblingOracle: String =
     """SELECT epoch_us(time_bucket(INTERVAL '1 hour', ts)) AS win_start_us,

@@ -1,13 +1,68 @@
 package graft.streaming
 
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** Bounded-drain guard for the `Trigger.AvailableNow` replay queries: a
-  * drain that exceeds its timeout must FAIL, not silently hand back the
-  * partially-filled memory table — a partial result is a wrong answer,
-  * where a thrown timeout is a visibly slow run.
+/** Bounded drains for the `Trigger.AvailableNow` replay queries: one
+  * recipe that runs a stream to completion into a memory sink
+  * ([[toMemory]]), and the guard that a drain exceeding its timeout must
+  * FAIL, not silently hand back the partially-filled memory table — a
+  * partial result is a wrong answer, where a thrown timeout is a visibly
+  * slow run.
   */
 object Drain {
+
+  private val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Drain the stream `build` returns to completion (`AvailableNow`) into a
+    * memory sink and return the drained rows.
+    *
+    *  - Isolation: `build` runs on a child session of `s` (`newSession()`),
+    *    so the drain's conf overrides never reach anything planned
+    *    concurrently on the caller's session, and the temp-view catalog
+    *    and session UDFs are the child's own. The child starts from the
+    *    SparkContext's conf, not the caller's runtime settings. A caller
+    *    frame that must cross over re-binds its analyzed plan on the
+    *    child session.
+    *  - Width: `spark.sql.shuffle.partitions` = `width`. One state store
+    *    spins up per shuffle partition per micro-batch, so a bounded
+    *    drain's fixed floor scales with the width; callers derive it from
+    *    the replay input with [[DrainWidth]].
+    *  - `rocksDb`: pin the RocksDB state-store provider, which
+    *    `transformWithState` requires, whatever provider the host
+    *    session configures.
+    *  - No trailing no-data batch: a bounded replay has no idle tail, so
+    *    the engine's zero-input micro-batch after a watermark advance
+    *    (state eviction, one more incremental plan and store spin-up per
+    *    partition) is pure fixed cost. Drains that must flush state past
+    *    the data stage sentinel rows inside the last FILE batch instead
+    *    (see [[LandingZone]]); drains without a watermark never schedule
+    *    one. A production continuous stream keeps Spark's default — no-data
+    *    batches are how idle streams evict state on time.
+    *  - The sink is named `what_<uuid>`; its temp view is dropped once the
+    *    result is resolved (the analyzed plan keeps the sink relation
+    *    alive), so repeated drains pin no view or rows in the catalog.
+    */
+  def toMemory(s: SparkSession, what: String, width: Int, mode: String,
+      rocksDb: Boolean = false)(build: SparkSession => DataFrame): DataFrame = {
+    val ss = s.newSession()
+    ss.conf.set("spark.sql.shuffle.partitions", width.toString)
+    if (rocksDb)
+      ss.conf.set("spark.sql.streaming.stateStore.providerClass", RocksDbProvider)
+    ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    val name = what + "_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val q = build(ss).writeStream
+      .outputMode(mode)
+      .format("memory")
+      .queryName(name)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    awaitOrFail(q, what)
+    val result = ss.table(name)
+    ss.catalog.dropTempView(name)
+    result
+  }
 
   /** Every query that reaches [[awaitOrFail]], weakly referenced — the
     * bounded drains run on child sessions whose StreamingQueryManager the

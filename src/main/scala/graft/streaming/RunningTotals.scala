@@ -46,49 +46,22 @@ object RunningTotals {
   }
 
   /** Drain `eventsStream`-shaped input (user_id, value) through the
-    * processor with RocksDB state (transformWithState requires it).
-    *
-    * Round-13 isolation fix: the provider/partition overrides run on an
-    * ISOLATED child session — the old set-then-restore on the caller's
-    * session poisoned anything planned concurrently on it for the
-    * multi-second drain (a sibling batch query inherited 8 shuffle
-    * partitions; a sibling streaming query could bake the RocksDB
-    * provider into a fresh checkpoint). `newSession()` shares the
-    * SparkContext but isolates SQLConf + the temp-view catalog, and the
-    * input plan is re-bound onto it. The per-drain memory-sink view is
-    * dropped once the result is resolved (the analyzed plan keeps the
-    * sink relation alive), so repeated drains no longer pin one view +
-    * its rows per call for the session lifetime.
+    * processor with RocksDB state (transformWithState requires it) —
+    * a [[Drain.toMemory]] bounded drain.
     */
-  def drain(s: SparkSession, events: DataFrame): DataFrame = {
-    val ss = s.newSession()
-    import ss.implicits._
-    ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // 1 RocksDB store per shuffle partition: size the bounded drain's width
-    // to its replay input (r21, was a constant 8) so store spin-up, not
-    // data, stops dominating — see [[DrainWidth]]
-    ss.conf.set("spark.sql.shuffle.partitions",
-      DrainWidth.forFrame(events).toString)
-    // Re-bind the ALREADY-RESOLVED plan: newSession() isolates the
-    // temp-view catalog and session UDFs, so re-analyzing the raw logical
-    // plan there would fail for a caller DataFrame that references either.
-    // The analyzed plan carries its resolved relations with it.
-    val typed = org.apache.spark.sql.GraftColumnBridge
-      .ofRows(ss, events.queryExecution.analyzed)
-      .selectExpr("user_id", "value").as[(Long, Double)]
-    val out = typed.groupByKey(_._1)
-      .transformWithState(new TotalsProcessor, TimeMode.None(), OutputMode.Append())
-    val name = "tws_totals_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = out.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    graft.streaming.Drain.awaitOrFail(q, "tws_totals")
-    val result = ss.table(name)
-    ss.catalog.dropTempView(name)
-    result
-  }
+  def drain(s: SparkSession, events: DataFrame): DataFrame =
+    Drain.toMemory(s, "tws_totals", DrainWidth.forFrame(events), "append",
+        rocksDb = true) { ss =>
+      import ss.implicits._
+      // Re-bind the ALREADY-RESOLVED plan: the child session isolates the
+      // temp-view catalog and session UDFs, so re-analyzing the raw logical
+      // plan there would fail for a caller DataFrame that references either.
+      // The analyzed plan carries its resolved relations with it.
+      org.apache.spark.sql.GraftColumnBridge
+        .ofRows(ss, events.queryExecution.analyzed)
+        .selectExpr("user_id", "value").as[(Long, Double)]
+        .groupByKey(_._1)
+        .transformWithState(new TotalsProcessor, TimeMode.None(), OutputMode.Append())
+        .toDF()
+    }
 }

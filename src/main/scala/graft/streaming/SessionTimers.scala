@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** Timer-emitted session windows on the Spark 4 `transformWithState` API —
   * the streaming counterpart of `StreamQueries.sessionWindow` (which runs
@@ -124,14 +124,6 @@ object SessionTimers {
     }
   }
 
-  /** Stage `(user_id, ts_us)` rows as a file landing zone — the real events
-    * WITH sentinel A merged into the same step (r22), then one far-future
-    * sentinel step — and drain with `maxFilesPerTrigger` = the per-step
-    * file count so every parked session's timer provably fires before the
-    * drain terminates: batch 1 folds the data (k source tasks, round-15 —
-    * no longer a single-task funnel) and publishes sentinel A's watermark,
-    * batch 2 (sentinel B) runs with watermark >= every `last + gap` timer.
-    */
   /** The UN-STARTED streaming Dataset over a staged landing zone — exposed
     * so the plan pin (PlanSpec/PLANS.md) can inspect the streaming logical
     * plan: EventTimeWatermark(ts_t, 0s) directly over the file source
@@ -158,6 +150,14 @@ object SessionTimers {
         TimeMode.EventTime(), OutputMode.Append())
   }
 
+  /** Stage `(user_id, ts_us)` rows as a file landing zone — the real events
+    * WITH sentinel A merged into the same step (r22), then one far-future
+    * sentinel step — and drain with `maxFilesPerTrigger` = the per-step
+    * file count so every parked session's timer provably fires before the
+    * drain terminates: batch 1 folds the data (k source tasks, round-15 —
+    * no longer a single-task funnel) and publishes sentinel A's watermark,
+    * batch 2 (sentinel B) runs with watermark >= every `last + gap` timer.
+    */
   def drain(s: SparkSession, events: DataFrame, gapUs: Long,
       cacheKey: String = null): DataFrame = {
     import s.implicits._
@@ -175,7 +175,7 @@ object SessionTimers {
       // the former data/sentA/sentB layout, which paid a third file batch
       // (plus the engine's trailing no-data batch) for the same flush —
       // measured 4 micro-batches where this layout pays 2, identical rows
-      // (DrainBatchProbe census, r22).
+      // (DrainCensusSpec pins the 2).
       val sentA = maxUs + gapUs + 3600000000L
       val sentB = sentA + 3600000000L
       LandingZone.stage(
@@ -193,41 +193,9 @@ object SessionTimers {
         s"tws-sessions|$cacheKey|$gapUs|k${LandingZone.DrainFilesPerStep}|m2")(
         stage())
 
-    // Round-13 isolation fix: the provider/partition overrides run on an
-    // ISOLATED child session instead of set-then-restore on the caller's —
-    // which poisoned anything planned concurrently on it for the drain's
-    // duration. The per-drain memory-sink view is dropped once the result
-    // is resolved (the analyzed plan keeps the sink relation alive), so
-    // repeated drains no longer pin one view + its rows per call.
-    val ss = s.newSession()
-    ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // 1 RocksDB store per shuffle partition PER BATCH (3 batches here):
-    // size the drain's width to the staged replay input (r21, was a
-    // constant 8) so store spin-up, not data, stops dominating — the
-    // production knob is graft.drain.partitions, see [[DrainWidth]]
-    ss.conf.set("spark.sql.shuffle.partitions",
-      DrainWidth.forPath(s, staged).toString)
-    // Bounded replay: every timer provably fires inside the LAST FILE batch
-    // (sentinel B runs under sentinel A's watermark), so the engine's
-    // trailing zero-input micro-batch — one more IncrementalExecution +
-    // full state-store spin-up that can emit nothing here — is pure fixed
-    // cost; suppress it on this isolated child session only. A production
-    // CONTINUOUS stream keeps the default (no-data batches are how idle
-    // streams evict state on time); a bounded drain has no idle tail.
-    ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val out = sessionStream(ss, staged, gapUs)
-    val name = "tws_sessions_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = out.toDF().writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    graft.streaming.Drain.awaitOrFail(q, "tws_sessions")
-    val result = ss.table(name)
-    ss.catalog.dropTempView(name)
-    result
+    // 1 RocksDB store per shuffle partition PER BATCH (2 batches here):
+    // the width follows the staged replay input, see [[DrainWidth]]
+    Drain.toMemory(s, "tws_sessions", DrainWidth.forPath(s, staged), "append",
+      rocksDb = true)(ss => sessionStream(ss, staged, gapUs).toDF())
   }
 }

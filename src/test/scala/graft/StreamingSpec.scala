@@ -296,18 +296,29 @@ class StreamingSpec extends SparkTestBase {
   test("round-13: drains run isolated — repeated drains register no temp " +
       "views on the caller session and leave its conf untouched") {
     implicit val sqlCtx = spark.sqlContext
-    val beforeParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val beforeViews = spark.catalog.listTables().count()
+    // a fresh caller: a conf leaked onto the shared session by an earlier
+    // drain would already be in its "before" values and mask a leak here
+    val caller = spark.newSession()
+    // every key a drain's child session overrides
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.noDataMicroBatches.enabled",
+      "spark.sql.streaming.stateStore.providerClass")
+    val beforeConf = keys.map(k => k -> caller.conf.getOption(k))
+    val beforeViews = caller.catalog.listTables().count()
     def stream() = {
       val mem = MemoryStream[(Long, Double)]
       mem.addData((1L, 2.5), (1L, 3.5), (2L, 1.0))
       mem.toDF().toDF("user_id", "value")
     }
-    val a = graft.streaming.RunningTotals.drain(spark, stream())
-    val b = graft.streaming.RunningTotals.drain(spark, stream())
-    assert(a.count() == 2 && b.count() == 2)
-    assert(spark.conf.get("spark.sql.shuffle.partitions") == beforeParts)
-    assert(spark.catalog.listTables().count() == beforeViews,
+    // two append-mode RocksDB drains, then one complete-mode drain
+    val drains = Seq[() => org.apache.spark.sql.DataFrame](
+      () => graft.streaming.RunningTotals.drain(caller, stream()),
+      () => graft.streaming.RunningTotals.drain(caller, stream()),
+      () => SparkEntry.queries("q_stream_tumbling")(caller, "/root/testdata/sf0.001"))
+    val counts = drains.map(_().count())
+    assert(counts.take(2) == Seq(2L, 2L) && counts(2) > 0, counts)
+    assert(keys.map(k => k -> caller.conf.getOption(k)) == beforeConf)
+    assert(caller.catalog.listTables().count() == beforeViews,
       "drain leaked memory-sink temp views into the caller session")
   }
 
