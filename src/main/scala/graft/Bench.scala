@@ -37,28 +37,16 @@ object Bench {
     // before the SparkSession boots: this is the posture the run STARTED in
     val loadavgStart = loadavg1m()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // gate pins (round 13, same as Verify): keep the oracle-replayed
-      // index parameters so bench timings stay anchor-comparable; the
-      // unconfigured derived path is timed by the scale probe instead
-      .config("graft.lsh.bitsPerBand", "6")
-      .config("graft.semdedup.centroids", "8")
-      .config("graft.ivf.centroids", "10")
-      // Stage-id-free generated class names (round 16): the default embeds
-      // the per-query codegen stage id in the class name, which makes
-      // byte-identical stage code cache-MISS in janino across queries and
-      // across AQE re-plans. With 300+ queries sharing operator pipelines,
-      // those recompiles are pure waste on the driver's compile path —
-      // measured ~85 compiles inside q_cluster_canonical's cold timed
-      // region, of which the warm pass below + this conf remove ~75.
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    // gate pins (round 13, same as Verify): keep the oracle-replayed index
+    // parameters so bench timings stay anchor-comparable; the unconfigured
+    // derived path is timed by the scale probe instead
+    // (src/test/scala/graft/dev/ScaleProbe.scala). The recipe's stage-id-free
+    // class names (round 16) matter most here: with 300+ queries sharing
+    // operator pipelines, stage-id class names recompiled byte-identical
+    // stage code — measured ~85 compiles inside q_cluster_canonical's cold
+    // timed region, of which the warm pass below + that setting remove ~75.
+    val spark = Session.builder(cpus, gatePins = true).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // keys a query cold-staged during its timed run (empty for memo hits):
@@ -305,11 +293,7 @@ object Bench {
     // explicitly flushed (see the ORDER note above)
     println(MiniJson.obj(fields))
     System.out.flush()
-    // the bounded drains run on child sessions the root session cannot
-    // see; stop any still running before the session goes (as Verify does)
-    graft.streaming.Drain.stopLeftovers((_, e) =>
-      System.err.println(s"[bench] stopping leftover drain query failed: $e"))
-    spark.stop()
+    Session.stop(spark)
   }
 
   /** Codegen/JIT warm for the dedup-cluster pipeline: runs the EXACT

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `explain("formatted")` for the headline queries into PLANS.md —
   * reviewable evidence that scans prune/push, dims broadcast, windows share
   * one exchange, and the codegen spans cover the hot paths.
@@ -13,12 +11,9 @@ import org.apache.spark.sql.SparkSession
 object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
+    // unpinned: the ANN/LSH sections document the corpus-derived defaults
+    val spark = Session.builder(4, gatePins = false)
       .config("spark.sql.adaptive.enabled", "false") // static plans are readable
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // Plan pins always document the LARGE-input (scale) shape: at sf0.001
@@ -189,6 +184,6 @@ object Plans {
 
     Files.writeString(Paths.get("PLANS.md"), md.toString)
     println(s"[plans] wrote PLANS.md (${headline.size} + 3 streaming queries)")
-    spark.stop()
+    Session.stop(spark)
   }
 }

@@ -6,8 +6,6 @@ import java.util.concurrent.Executors
 import scala.concurrent.duration.Duration
 import scala.concurrent.{Await, ExecutionContext, Future}
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
@@ -53,18 +51,11 @@ object Verify {
     // SBT jvm, not this one — the ritual needs a first-class knob.
     // Comma-separated k=v pairs, e.g.
     //   SPARK_GRAFT_EXTRA_CONF=spark.sql.codegen.wholeStage=false
-    // Applied as SYSTEM PROPERTIES before the builder runs so they land in
-    // the shared SparkConf and the per-query child sessions inherit them
-    // (runtime conf.set on the root session does NOT propagate to
-    // newSession(), same reason the gate pins sit at builder level).
-    // graft.* keys (library knobs like graft.anonymize.pin) are legal too
-    // (round-16: the pin-mode invariance run flips a graft.* conf). Every
-    // entry — spark.* and graft.* alike — is applied as a builder-level
-    // .config AFTER the gate pins, so an extra-conf entry can also
-    // override a pin deliberately; builder options override
-    // system-property-loaded SparkConf values, so a separate sys.props
-    // path would be redundant (verified: the flipped-conf axes stay green
-    // through the builder alone).
+    // spark.* and graft.* keys alike (round-16: the pin-mode invariance run
+    // flips a graft.* conf). Each entry is a builder-level .config applied
+    // AFTER the session recipe, so it reaches the per-query child sessions
+    // (a runtime conf.set on the root session would not) and can override
+    // a recipe setting or gate pin deliberately.
     val extraConf: Seq[(String, String)] =
       sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq.flatMap { s =>
         s.split(',').map(_.trim).filter(_.nonEmpty).map { kv =>
@@ -78,33 +69,20 @@ object Verify {
           }
         }
       }
-    // GATE PINS (round 13): the ANN/LSH index parameters the static
-    // DuckDB oracles bake into their SQL (8x6 LSH bits, 8 semdedup /
-    // 10 IVF centroids). Library defaults now derive from corpus size
-    // (Scale.derivedIntKnob); the gate must keep the published replay
-    // shapes. Builder-level so the per-query child sessions inherit.
-    val gatePins: Seq[(String, String)] = Seq(
-      "spark.sql.shuffle.partitions" -> cpus.toString,
-      "spark.sql.session.timeZone" -> "UTC",
-      "spark.ui.enabled" -> "false",
-      "graft.lsh.bitsPerBand" -> "6",
-      "graft.semdedup.centroids" -> "8",
-      "graft.ivf.centroids" -> "10")
-    // Overriding a pin via SPARK_GRAFT_EXTRA_CONF is legal (the invariance
-    // rituals flip pins deliberately) but must never be SILENT: an
-    // oracle-green run under a flipped pin that nobody noticed would read
+    // Overriding a gate pin via SPARK_GRAFT_EXTRA_CONF is legal (the
+    // invariance rituals flip pins deliberately) but must never be SILENT:
+    // an oracle-green run under a flipped pin that nobody noticed would read
     // as ordinary evidence (round-17 advice). One loud line per collision.
-    val pinnedKeys = gatePins.map(_._1).toSet
-    extraConf.filter(kv => pinnedKeys(kv._1)).foreach { case (k, v) =>
+    val pins = Session.gatePins.toMap
+    extraConf.filter(kv => pins.contains(kv._1)).foreach { case (k, v) =>
       System.err.println(
         s"[verify] WARNING: SPARK_GRAFT_EXTRA_CONF overrides gate pin " +
-          s"$k (pin=${gatePins.toMap.apply(k)}, override=$v) -- this run's " +
+          s"$k (pin=${pins(k)}, override=$v) -- this run's " +
           "results are under a FLIPPED pin, not the published gate posture")
     }
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-    val spark = (gatePins ++ extraConf)
-      .foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
+    val spark = extraConf
+      .foldLeft(Session.builder(cpus.toInt, gatePins = true)) {
+        case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
@@ -153,28 +131,6 @@ object Verify {
         f"[verify] $done/${selected.size} done, ${(System.nanoTime() - t0) / 1e9}%.0f s")
     }
     pool.shutdown()
-    // r20 flake mitigation (r20 verdict item 2): the sf0.1 Verify JVM once
-    // segfaulted in RocksDB's native stats machinery
-    // (InternalStats::DumpCFMapStatsWriteStall in rocksdbjni) on a native
-    // thread racing JVM shutdown — AFTER all 314 outputs were written and
-    // compared, so no artifact was affected. Make the teardown order
-    // explicit: stop any streaming query still registered on the root
-    // session (the bounded drains stop their own, but a failed drain can
-    // leave one behind), then stop the session, so state-store/RocksDB
-    // teardown runs while the JVM is fully alive instead of inside the
-    // exit sequence.
-    // The bounded drains run on CHILD sessions whose queries the root
-    // session's manager cannot see (StreamingQueryManager is per-session),
-    // so sweep the Drain-level registry first (r21 advice), then the root
-    // session for anything started outside the drain helpers.
-    graft.streaming.Drain.stopLeftovers((_, e) =>
-      System.err.println(s"[verify] stopping leftover drain query failed: $e"))
-    spark.streams.active.foreach { q =>
-      try q.stop()
-      catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[verify] stopping leftover stream failed: $e")
-      }
-    }
-    spark.stop()
+    Session.stop(spark)
   }
 }

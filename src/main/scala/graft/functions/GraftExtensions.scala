@@ -9,9 +9,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * from pure-SQL contexts (thrift server, spark.sql notebooks) without Scala
   * imports.
   *
-  * Register at session build time:
+  * Register at session build time, on any `SparkSession.Builder`:
   * {{{
-  *   SparkSession.builder().withExtensions(new GraftExtensions)
+  *   graft.Session.builder(cpus, gatePins = false)
+  *     .withExtensions(new GraftExtensions)
   * }}}
   * or via config: `spark.sql.extensions=graft.functions.GraftExtensions`.
   */

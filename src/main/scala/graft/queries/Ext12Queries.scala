@@ -36,7 +36,7 @@ object Ext12Queries {
     * kept (vec_id, centroid_id) assignment.
     *
     * The gate pins 8 centroids via conf (what the static oracle SQL
-    * replays — Verify/Bench/the test base set
+    * replays — `graft.Session.gatePins` sets
     * `graft.semdedup.centroids=8`); per-centroid bucket size — and so the
     * pairwise verify — grows as N/k, so with NO conf anywhere the count
     * now DERIVES as ceil(sqrt(N)) clamped

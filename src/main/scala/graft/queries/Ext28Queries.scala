@@ -29,7 +29,7 @@ object Ext28Queries {
   def knnClassify(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
     // 10 centroids is the oracle-replayed gate shape, pinned via conf by
-    // Verify/Bench/the test base; candidate volume is nprobe*N^2/centroids,
+    // graft.Session.gatePins; candidate volume is nprobe*N^2/centroids,
     // so with NO conf anywhere the count derives as ceil(sqrt(N)) clamped
     // (Scale.deriveCentroids, memoized corpus count) — the sqrt-N operating
     // point an unconfigured production call should get

@@ -160,7 +160,7 @@ object Ext2Queries {
     * index is replayed, not just sampled.
     *
     * The gate pins bitsPerBand=6 via conf (what the oracle replays —
-    * Verify/Bench/the test base set `graft.lsh.bitsPerBand=6`, which the
+    * `graft.Session.gatePins` sets `graft.lsh.bitsPerBand=6`, which the
     * static oracle SQL bakes in as range(48) = 8 bands x 6 bits). With NO
     * conf anywhere the width now DERIVES from the corpus size —
     * ceil(log2 N) clamped ([[Scale.deriveLshBits]]) — so an unconfigured

@@ -12,6 +12,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object Drain {
 
+  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
   private val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
@@ -25,11 +26,14 @@ object Drain {
     *    SparkContext's conf, not the caller's runtime settings. A caller
     *    frame that must cross over re-binds its analyzed plan on the
     *    child session.
+    *  - Provider: the caller's state-store provider, so a runtime provider
+    *    choice on `s` reaches the drain even though the child does not
+    *    inherit runtime settings.
     *  - Width: `spark.sql.shuffle.partitions` = `width`. One state store
     *    spins up per shuffle partition per micro-batch, so a bounded
     *    drain's fixed floor scales with the width; callers derive it from
     *    the replay input with [[DrainWidth]].
-    *  - `rocksDb`: pin the RocksDB state-store provider, which
+    *  - `rocksDb`: pin the RocksDB state-store provider instead, which
     *    `transformWithState` requires, whatever provider the host
     *    session configures.
     *  - No trailing no-data batch: a bounded replay has no idle tail, so
@@ -48,8 +52,8 @@ object Drain {
       rocksDb: Boolean = false)(build: SparkSession => DataFrame): DataFrame = {
     val ss = s.newSession()
     ss.conf.set("spark.sql.shuffle.partitions", width.toString)
-    if (rocksDb)
-      ss.conf.set("spark.sql.streaming.stateStore.providerClass", RocksDbProvider)
+    ss.conf.set(ProviderKey,
+      if (rocksDb) RocksDbProvider else s.conf.get(ProviderKey))
     ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     val name = what + "_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val q = build(ss).writeStream
@@ -77,8 +81,9 @@ object Drain {
       java.lang.ref.WeakReference[StreamingQuery]]()
 
   /** Stop every tracked query that is still active — the explicit-teardown
-    * sweep Verify runs before `spark.stop()` so state-store/native teardown
-    * happens on a fully alive JVM. Also prunes dead/terminated entries. */
+    * sweep [[graft.Session.stop]] runs before `spark.stop()` so
+    * state-store/native teardown happens on a fully alive JVM. Also prunes
+    * dead/terminated entries. */
   def stopLeftovers(onError: (StreamingQuery, Throwable) => Unit =
       (_, _) => ()): Unit = {
     val it = tracked.iterator()

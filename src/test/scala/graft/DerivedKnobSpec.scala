@@ -7,7 +7,8 @@ import graft.operators.Scale
   * the corpus row count (bits = ceil(log2 N), centroids = ceil(sqrt N),
   * both clamped) instead of test-SF constants that would be wrong at
   * production scale. The driver gate (Verify/Bench) and this test base
-  * pin the oracle-replayed constants via builder conf; an empty-string
+  * pin the oracle-replayed constants via builder conf
+  * (`graft.Session.gatePins`); an empty-string
   * conf explicitly opts back into derivation.
   */
 class DerivedKnobSpec extends SparkTestBase {

@@ -128,6 +128,7 @@ class EdgeCasesSpec extends SparkTestBase {
 
   test("ScaleProbe.rootCause terminates on cyclic cause chains and finds " +
       "the deepest cause on acyclic ones (round-12 bounded walk)") {
+    import graft.dev.ScaleProbe
     // acyclic: a -> b -> c, root is c
     val c = new RuntimeException("root fault")
     val b = new RuntimeException("wrapper", c)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool (`sbt "Test/runMain graft.PrefixSumBench"`): measure the
@@ -11,10 +10,7 @@ import org.apache.spark.sql.functions._
   */
 object PrefixSumBench {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder(32, gatePins = false).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
@@ -42,6 +38,6 @@ object PrefixSumBench {
       println(f"| $n%,d | ${times.head}%.2f | ${times(1)}%.2f |")
       hist.unpersist(blocking = true)
     }
-    spark.stop()
+    Session.stop(spark)
   }
 }

@@ -9,20 +9,11 @@ trait SparkTestBase extends AnyFunSuite {
 }
 
 object SparkTestBase {
+  // gate pins: specs assert the oracle-replayed ANN/LSH shapes;
+  // DerivedKnobSpec opts back into the corpus-derived default with an
+  // empty-string conf override
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // gate pins (round 13, same as Verify/Bench): specs assert the
-      // oracle-replayed ANN/LSH shapes; DerivedKnobSpec opts back into
-      // the corpus-derived default with an empty-string conf override
-      .config("graft.lsh.bitsPerBand", "6")
-      .config("graft.semdedup.centroids", "8")
-      .config("graft.ivf.centroids", "10")
-      .getOrCreate()
+    val s = Session.builder(4, gatePins = true).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

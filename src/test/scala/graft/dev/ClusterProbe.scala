@@ -1,7 +1,6 @@
 package graft.dev
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only probe for cold-run cost attribution (round 16: this is the
   * instrument that re-diagnosed the q_cluster_canonical "bimodality" as
@@ -24,16 +23,7 @@ object ClusterProbe {
     val reps = args.headOption.map(_.toInt).getOrElse(4)
     val qname = args.drop(1).headOption.getOrElse("q_cluster_canonical")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // stage-id-free generated class names -> janino cache hits across
-      // structurally identical stages (the round-16 experiment)
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .getOrCreate()
+    val spark = graft.Session.builder(32, gatePins = false).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val jobStarts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
@@ -132,6 +122,6 @@ object ClusterProbe {
       graft.operators.Dedup.unpersistIntermediates()
       spark.catalog.clearCache()
     }
-    spark.stop()
+    graft.Session.stop(spark)
   }
 }

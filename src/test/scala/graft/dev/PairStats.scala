@@ -1,6 +1,5 @@
 package graft.dev
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only: cardinality/cost stats of the prefix-filtered pair pipeline at
@@ -10,10 +9,7 @@ import org.apache.spark.sql.functions._
 object PairStats {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.builder(32, gatePins = false).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val docs = graft.sources.Tables.documents(spark, sfDir)
     println(s"docs: ${docs.count()}")
@@ -50,6 +46,6 @@ object PairStats {
       math.min(s1, s2).toDouble >= t * math.max(s1, s2)
     }
     println(s"cand pairs surviving size filter: $kept")
-    spark.stop()
+    graft.Session.stop(spark)
   }
 }

@@ -1,7 +1,9 @@
-package graft
+package graft.dev
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.{Session, SparkEntry}
 
 /** Empirical scale-up probe: synthesize a `factor`× corpus ("sf1" for
   * factor=10 over sf0.1), run the most expensive queries at BOTH scales in
@@ -29,7 +31,7 @@ import org.apache.spark.sql.functions._
   * verifier whose cost is quadratic BY DESIGN; its scale path
   * (q_jaccard_prefix / q_minhash_neardup) is what gets measured.
   *
-  * Usage: sbt "runMain graft.ScaleProbe [factor] [srcDir] [outDir] [nameSub...]"
+  * Usage: sbt "Test/runMain graft.dev.ScaleProbe [factor] [srcDir] [outDir] [nameSub...]"
   * (extra args filter probeQueries by substring — single-query iteration)
   */
 object ScaleProbe {
@@ -112,20 +114,12 @@ object ScaleProbe {
     // than assert it.
     "q_kanonymity")
 
-  /** Scale-knob confs applied (at BOTH scales) to queries whose probed
-    * plan needs a conf override. Round 13 EMPTIED the ANN/LSH entries that
-    * lived here (bitsPerBand=14, centroids=512): the index parameters now
-    * DERIVE from the corpus size by default (Scale.derivedIntKnob —
-    * ceil(log2 N) bits, ceil(sqrt N) centroids) whenever no session conf /
-    * system property pins them, and the probe deliberately runs the
-    * UNCONFIGURED path — the probe now measures exactly what an
-    * out-of-the-box production call would run at each scale, which is the
-    * configuration-drift failure mode the old forced knobs papered over.
-    * (The driver gate still pins the oracle-replayed constants via
-    * Verify/Bench builder conf.) Kept as a mechanism for future shapes
-    * that cannot self-derive.
-    */
-  private val probeConf: Map[String, Seq[(String, String)]] = Map.empty
+  // No per-query conf overrides: since round 13 the ANN/LSH index
+  // parameters derive from the corpus size (Scale.derivedIntKnob —
+  // ceil(log2 N) bits, ceil(sqrt N) centroids) and the probe deliberately
+  // runs that UNCONFIGURED path, i.e. exactly what an out-of-the-box
+  // production call runs at each scale. Only the oracle-replay runs pin
+  // them (Session.gatePins).
 
   /** The rank-stat family is probed with `graft.prefixsum.threshold=-1`
     * (two-phase FORCED at both scales). Under the adaptive default most of
@@ -147,14 +141,9 @@ object ScaleProbe {
     val factor = args.headOption.map(_.toInt).getOrElse(10)
     val srcDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val outDir = args.lift(2).getOrElse("/tmp/graft-sfscale")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    // unpinned: the probe times the corpus-derived index parameters
+    val spark = Session.builder(cpus, gatePins = false).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     generate(spark, srcDir, outDir, factor)
@@ -162,9 +151,6 @@ object ScaleProbe {
     def time(name: String, dir: String): Double = {
       if (forceTwoPhase(name))
         spark.conf.set("graft.prefixsum.threshold", "-1")
-      probeConf.getOrElse(name, Nil).foreach { case (k, v) =>
-        spark.conf.set(k, v)
-      }
       val t0 = System.nanoTime()
       try {
         SparkEntry.queries(name)(spark, dir)
@@ -179,9 +165,6 @@ object ScaleProbe {
         -1.0
       } finally {
         spark.conf.unset("graft.prefixsum.threshold")
-        probeConf.getOrElse(name, Nil).foreach { case (k, _) =>
-          spark.conf.unset(k)
-        }
         graft.operators.Dedup.unpersistIntermediates()
         spark.catalog.clearCache()
       }
@@ -214,7 +197,7 @@ object ScaleProbe {
     rows.foreach { case (n, b, s, r) =>
       println(f"| $n | $b%.2f | $s%.2f | $r%.1f× |")
     }
-    spark.stop()
+    Session.stop(spark)
   }
 
   /** Build the scaled tables under `outDir` (skipped if already present). */
