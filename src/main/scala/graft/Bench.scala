@@ -54,25 +54,22 @@ object Bench {
     // staging cost the first run did — a warm re-run of a cold-staged
     // query would mask a staging-path regression behind the memo
     val stagedBy = scala.collection.mutable.Map.empty[String, Seq[String]]
-    // which memoized internals each query TOUCHED (hit or miss — either
-    // way the query depends on that memo): lets the noise-guard re-run
-    // invalidate exactly the memos the re-run query uses, instead of the
-    // round-12 global clear that made a LATER memo-dependent query in the
-    // same sweep pay a probe/drain inside its timed region
-    val touchedMemos = scala.collection.mutable.Map.empty[String, (Boolean, Boolean)]
+    // whether each query TOUCHED the dedup probe memo (hit or miss — either
+    // way the query depends on it): lets the noise-guard re-run invalidate
+    // the memo only for a query that uses it, instead of the round-12
+    // global clear that made a LATER memo-dependent query in the same
+    // sweep pay a probe inside its timed region
+    val touchedProbeMemo = scala.collection.mutable.Map.empty[String, Boolean]
     def materialize(name: String): Double = {
       graft.streaming.StagedDirs.drainRecentlyStaged() // discard stale log
       val d0 = graft.operators.Dedup.docCountTouches.get()
-      val i0 = graft.queries.StreamQueries.stateInspectTouches.get()
       val t0 = System.nanoTime()
       try {
         SparkEntry.queries(name)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
         val t = (System.nanoTime() - t0) / 1e9
         stagedBy(name) = graft.streaming.StagedDirs.drainRecentlyStaged()
-        touchedMemos(name) = (
-          graft.operators.Dedup.docCountTouches.get() > d0,
-          graft.queries.StreamQueries.stateInspectTouches.get() > i0)
+        touchedProbeMemo(name) = graft.operators.Dedup.docCountTouches.get() > d0
         t
       } catch { case e: Throwable =>
         // e.toString, not getMessage: an NPE's message is null, which
@@ -156,18 +153,12 @@ object Bench {
             f"[bench] $n%s $t%.2f s > 2x anchor $a%.2f s - re-running once")
           graft.streaming.StagedDirs.invalidate(
             stagedBy.getOrElse(n, Nil))
-          // invalidate ONLY the memos this query touched (tracked above):
-          // a state-inspect-gated re-run must pay the full drain again or
-          // it measures a cached checkpoint scan, and a dedup-probe-gated
-          // re-run must pay the probe job again or the min-merge measures
-          // less work — but clearing either memo for an UNGATED query
-          // would push the cost into a later memo-dependent query's timed
-          // region instead
-          val (dedupGated, inspectGated) =
-            touchedMemos.getOrElse(n, (false, false))
-          if (inspectGated)
-            graft.queries.StreamQueries.invalidateStateInspectCache()
-          if (dedupGated)
+          // invalidate the probe memo ONLY if this query touched it
+          // (tracked above): a dedup-probe-gated re-run must pay the probe
+          // job again or the min-merge measures less work — but clearing
+          // the memo for an UNGATED query would push the cost into a later
+          // probe-dependent query's timed region instead
+          if (touchedProbeMemo.getOrElse(n, false))
             graft.operators.Dedup.invalidateDocCountCache()
           val t2 = materialize(n)
           n -> (if (t2 >= 0) math.min(t, t2) else t)

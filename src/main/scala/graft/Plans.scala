@@ -162,7 +162,7 @@ object Plans {
 
     md.append("\n## q_state_inspect\n\n")
     md.append(
-      """Offline streaming-state introspection, two pinned halves. (1) The DRAIN: a tumbling-window count aggregation over the file-replay source, drained with `Trigger.AvailableNow` + update mode to a checkpoint on an ISOLATED memoized session (8 shuffle partitions, HDFSBacked provider — the reader instantiates the provider from the READER's conf, so write and read pin the same one). (2) The READ: the `statestore` DSv2 source over that checkpoint — ONE DSv2 relation, no recompute of the input; state is one row per (window, event_type), bounded by key cardinality, scanned partition-parallel. The drain below is the analyzed STREAMING plan (un-started); the reader plan follows from the memoized checkpoint the dump run drains once.""")
+      """Offline streaming-state introspection, two pinned halves. (1) The DRAIN: a tumbling-window count aggregation over the file-replay source, drained with `Trigger.AvailableNow` + update mode into a noop sink, to a fresh checkpoint per call, on a bounded-drain child session (Drain.childSession: width derived from the replay input's byte size via DrainWidth, the caller's state-store provider). (2) The READ: the `statestore` DSv2 source over that checkpoint, on the same child session — the reader instantiates the provider from the READER's conf, so write and read see one provider. ONE DSv2 relation, no recompute of the input; state is one row per (window, event_type), bounded by key cardinality, scanned partition-parallel. The drain below is the analyzed STREAMING plan (un-started); the reader plan follows from the checkpoint the dump run drains.""")
     md.append("\n\n```\n== Analyzed Streaming Logical Plan (drain) ==\n")
     md.append(graft.queries.StreamQueries.stateInspectAgg(spark, sfDir)
       .queryExecution.analyzed.treeString)

@@ -159,10 +159,10 @@ object Dedup {
 
   /** Drop all memoized probe counts so the next gated operator pays a
     * genuinely fresh probe job. Measurement honesty, same contract as
-    * StagedDirs.invalidate / StreamQueries.invalidateStateInspectCache:
-    * Bench's noise-guard re-run calls this, otherwise the re-run of a
-    * dedup-gated query would skip the probe job the first run paid and
-    * min-merge could mask a probe-path regression behind the memo. */
+    * StagedDirs.invalidate: Bench's noise-guard re-run calls this,
+    * otherwise the re-run of a dedup-gated query would skip the probe job
+    * the first run paid and min-merge could mask a probe-path regression
+    * behind the memo. */
   def invalidateDocCountCache(): Unit = docCountCache.clear()
 
   /** Staleness token for [[memoizedCount]]'s key: an MD5 over (a) every

@@ -61,15 +61,18 @@ object IndicatorJob {
     Joins.antiJoinNew(computed, existing, keyCols)
 
   /** End-to-end run against a parquet warehouse directory: reads
-    * `$dir/kline_fact` and `$dir/indicator_fact` (if present), appends only
-    * new indicator rows. Re-running on unchanged input appends nothing.
+    * `$dir/kline_fact` and `$dir/indicator_fact` (if it holds data),
+    * appends only new indicator rows. Re-running on unchanged input
+    * appends nothing.
     * Returns the number of rows appended.
     */
   def run(spark: SparkSession, klineFactPath: String, indicatorFactPath: String,
       typeDim: DataFrame, n: Int = 14): Long = {
     val klines = spark.read.parquet(klineFactPath)
     val computed = computeIndicators(klines, typeDim, n)
-    val fresh = if (graft.streaming.IdempotentWriter.sinkExists(spark, indicatorFactPath)) {
+    // data files, not the path: a sink holding only a dead first append's
+    // committer files would fail schema inference on every later run
+    val fresh = if (graft.streaming.IdempotentWriter.sinkHasData(spark, indicatorFactPath)) {
       val existing = spark.read.parquet(indicatorFactPath).select(keyCols.map(col): _*)
       newOnly(computed, existing)
     } else computed

@@ -217,132 +217,44 @@ object StreamQueries {
     * counts the batch oracle computes, i.e. the checkpoint holds precisely
     * the expected aggregation state after a full drain.
     *
-    * Runs on an ISOLATED session: the statestore reader instantiates
-    * the provider class from the READER's SQL conf, so write and read must
-    * see the same provider; sibling queries (transformWithState) flip the
-    * shared session's provider conf mid-run, and an isolated conf makes
-    * this query immune to that race. State partitions are narrowed to 8 so
-    * provider spin-up, not data, stops dominating the bounded drain.
-    *
-    * Resource posture (round-12 fix of the per-call leak): the isolated
-    * session is MEMOIZED per root session — repeated calls (bench x3, the
-    * determinism spec, the two-scale probe) reuse one `newSession()`
-    * instead of registering a fresh session per call — and the drained
-    * checkpoint + reader DataFrame are memoized per (root session, dir):
-    * repeated calls on a cached key reuse ONE temp checkpoint. The memo
-    * is a bounded LRU (round 13), so a host cycling through >64 keys
-    * evicts old entries; an evicted entry's checkpoint stays on disk
-    * until JVM exit (it is TempDirs-exit-registered from birth, and the
-    * evicted reader DataFrame may still be referenced, so eager deletion
-    * on eviction is not an option) and a re-accessed evicted key drains
-    * to a NEW checkpoint — i.e. disk grows one checkpoint per eviction
-    * miss, bounded by call count and reclaimed at exit, in exchange for
-    * the heap bound on sessions/readers.
+    * One plain bounded drain per call, on a [[graft.streaming.Drain]] child
+    * session: the width derives from the replay input
+    * ([[graft.streaming.DrainWidth]]) and the state-store provider is the
+    * caller's, pinned on the child so no other drain's setting reaches
+    * it. The statestore reader instantiates the provider class from
+    * the READER's SQL conf, so the reader is returned on that same child
+    * session — write and read see one provider. Each call drains to its own
+    * checkpoint, exit-registered from birth ([[graft.util.TempDirs.create]])
+    * so a drain that fails mid-way cannot orphan it; it stays on disk until
+    * JVM exit because the returned reader is lazy.
     *
     * Scale posture: state is one row per (window, event_type) — bounded by
     * key cardinality, not event volume; the reader scans state files
     * partition-parallel with no driver-side state.
     */
   def stateInspect(s: SparkSession, dir: String): DataFrame = {
-    stateInspectTouches.incrementAndGet()
-    sweepStoppedSessions()
-    val key = (s, dir)
-    val hit = stateInspectCache.get(key)
-    // REVALIDATE a hit against the exact regular-file count recorded at
-    // drain time — the same contract as StagedDirs: a /tmp reaper can
-    // remove the checkpoint (or a subset of its state files) mid-JVM, and
-    // a blindly-reused partial checkpoint would return TRUNCATED state
-    // rows silently. A dead/shrunken/grown tree forces a fresh drain.
-    if (hit != null &&
-        graft.streaming.StagedDirs.fileCount(hit.ckpt.toString) == hit.nFiles)
-      hit.df
-    else {
-      // drain OUTSIDE the map lock — it runs a full (bounded) streaming
-      // job; a duplicate drain under a race is cheaper than blocking every
-      // other key in the bin for up to the drain timeout (same rationale
-      // as Dedup.memoizedCount)
-      val (df, ckpt) = drainAndReadState(inspectSession(s), dir)
-      stateInspectCache.put(key, InspectEntry(df, ckpt,
-        graft.streaming.StagedDirs.fileCount(ckpt.toString).toLong))
-      df
-    }
+    val s2 = drainSessionFor(s, dir)
+    val ckpt = graft.util.TempDirs.create("graft-state-inspect")
+    val q = tumblingCountAgg(s2, dir).writeStream
+      .outputMode("update")
+      .format("noop")
+      .queryName(graft.streaming.Drain.runName("state_inspect"))
+      .option("checkpointLocation", ckpt.toString)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    graft.streaming.Drain.awaitOrFail(q, "state_inspect")
+    // the agg buffer's state field is named after the FUNCTION ("count"),
+    // not the output alias
+    s2.read.format("statestore").option("path", ckpt.toString).load()
+      .select(
+        unix_micros(col("key.window.start")).as("win_start_us"),
+        col("key.event_type").as("event_type"),
+        col("value.count").as("n"))
   }
 
-  private[graft] final case class InspectEntry(
-      df: DataFrame, ckpt: java.nio.file.Path, nFiles: Long)
-
-  /** Memoized reader results: one drained checkpoint + lazy statestore
-    * reader per (root session, input dir), with the checkpoint's
-    * drain-time file count for hit revalidation. Bounded LRU (64 entries,
-    * same treatment as Dedup.docCountCache) plus a stopped-session sweep
-    * on every [[stateInspect]] access — a host process that churns root
-    * sessions must not pin stopped sessions (and their reader DataFrames)
-    * for the JVM lifetime. Access via Collections.synchronizedMap;
-    * iteration holds the map's own monitor (the synchronizedMap
-    * contract). */
-  private[graft] val stateInspectCache: java.util.Map[(SparkSession, String), InspectEntry] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(SparkSession, String), InspectEntry](
-          16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(SparkSession, String), InspectEntry])
-          : Boolean = size() > 64
-      })
-
-  // checkpoint revalidation counts files via StagedDirs.fileCount — ONE
-  // reaper-race-hardened walk for both revalidation sites (round-13
-  // consolidation; this file used to carry a duplicate copy)
-
-  /** Memoized isolated sessions, one per root session (test-visible count
-    * asserts the memoization holds). Bounded LRU: an evicted-but-live
-    * root session just pays one fresh `newSession()` on its next call —
-    * cheap — while the bound keeps a session-churning host from pinning
-    * old sessions forever; stopped roots are additionally swept eagerly
-    * by [[sweepStoppedSessions]]. */
-  private[graft] val inspectSessions: java.util.Map[SparkSession, SparkSession] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[SparkSession, SparkSession](16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[SparkSession, SparkSession]): Boolean =
-          size() > 64
-      })
-  private[graft] val isolatedSessionCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Total [[stateInspect]] calls — Bench diffs this around each timed
-    * query to learn whether the query depends on the reader memo, so its
-    * noise-guard re-run clears the memo only when the re-run query itself
-    * is state-inspect-gated (mirrors [[graft.operators.Dedup.docCountTouches]]). */
-  private[graft] val stateInspectTouches =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Drop cache entries whose root session's context is stopped — they
-    * can never serve another call (any materialization through them
-    * throws), so keeping them only pins memory. Runs on every
-    * [[stateInspect]] access; cost is one pass over ≤128 entries. */
-  private def sweepStoppedSessions(): Unit = {
-    stateInspectCache.synchronized {
-      val it = stateInspectCache.entrySet().iterator()
-      while (it.hasNext)
-        if (it.next().getKey._1.sparkContext.isStopped) it.remove()
-    }
-    inspectSessions.synchronized {
-      val it = inspectSessions.entrySet().iterator()
-      while (it.hasNext)
-        if (it.next().getKey.sparkContext.isStopped) it.remove()
-    }
-  }
-
-  private def inspectSession(s: SparkSession): SparkSession =
-    inspectSessions.computeIfAbsent(s, { _ =>
-      isolatedSessionCount.incrementAndGet()
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.shuffle.partitions", "8")
-      s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "HDFSBackedStateStoreProvider")
-      s2
-    })
+  private def drainSessionFor(s: SparkSession, dir: String): SparkSession =
+    graft.streaming.Drain.childSession(s,
+      graft.streaming.DrainWidth.forPath(s, s"$dir/events.parquet"))
 
   /** The tumbling-count aggregation itself — the ONE definition both the
     * real drain and the plan pin build from, so an edit to the drain's
@@ -357,86 +269,7 @@ object StreamQueries {
     * streaming plan (tumbling-window count over the file-replay source)
     * without paying a drain. */
   private[graft] def stateInspectAgg(s: SparkSession, dir: String): DataFrame =
-    tumblingCountAgg(inspectSession(s), dir)
-
-  /** Uncached drain + state read: drains the tumbling-count aggregation to
-    * a FRESH temp checkpoint and returns the lazy statestore reader over it
-    * plus the checkpoint path. The dir is exit-registered FROM BIRTH
-    * ([[graft.util.TempDirs.create]]) so a drain that fails mid-way (e.g.
-    * the await timeout) cannot orphan a populated checkpoint; callers that
-    * finish with it sooner may still delete eagerly (the hook no-ops on
-    * missing paths), but the memoized path must let it outlive the
-    * reader's last materialization. */
-  private def drainAndReadState(
-      s2: SparkSession, dir: String): (DataFrame, java.nio.file.Path) = {
-    val agg = tumblingCountAgg(s2, dir)
-    val ckpt = graft.util.TempDirs.create("graft-state-inspect")
-    val q = agg.writeStream
-      .outputMode("update")
-      .format("noop")
-      .option("checkpointLocation", ckpt.toString)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    graft.streaming.Drain.awaitOrFail(q, "state_inspect")
-    // the agg buffer's state field is named after the FUNCTION ("count"),
-    // not the output alias
-    val df = s2.read.format("statestore").option("path", ckpt.toString).load()
-      .select(
-        unix_micros(col("key.window.start")).as("win_start_us"),
-        col("key.event_type").as("event_type"),
-        col("value.count").as("n"))
-    (df, ckpt)
-  }
-
-  /** Drop all memoized reader results so the next [[stateInspect]] call
-    * pays a genuinely fresh drain. For measurement honesty: Bench's
-    * noise-guard re-run calls this, otherwise the re-run would time a
-    * trivial scan of the cached checkpoint and could mask a real drain
-    * regression behind the memo. Already-registered checkpoint dirs stay
-    * on disk until JVM exit (the dropped DataFrames may still be
-    * referenced); the count is bounded by invalidation calls, which only
-    * happen on noise-guard re-runs. */
-  def invalidateStateInspectCache(): Unit = stateInspectCache.clear()
-
-  /** Shared tail of the fresh-drain seams: drain on the given session,
-    * collect the state rows, delete the checkpoint immediately (the rows
-    * are materialized, so eager deletion is safe here — unlike the
-    * memoized path). */
-  private def freshDrainCollect(
-      s2: SparkSession, dir: String): Seq[org.apache.spark.sql.Row] = {
-    val (df, ckpt) = drainAndReadState(s2, dir)
-    try df.collect().toSeq
-    finally org.apache.commons.io.FileUtils.deleteQuietly(ckpt.toFile)
-  }
-
-  /** Test seam: run a genuinely FRESH drain (bypassing the memo), collect
-    * its state rows, and delete the checkpoint immediately — the
-    * determinism spec uses this to prove independent drains agree without
-    * leaving a dir behind. */
-  private[graft] def stateInspectFresh(
-      s: SparkSession, dir: String): Seq[org.apache.spark.sql.Row] =
-    freshDrainCollect(inspectSession(s), dir)
-
-  /** Test seam (round 13, VERDICT #6): a genuinely FRESH state-inspect
-    * drain under an EXPLICIT state-store provider — collected state rows,
-    * checkpoint deleted immediately. The 100-TB lever for stateful
-    * streaming is HDFS-backed state (small hot state, zero native deps)
-    * vs RocksDB (state larger than executor heap, incremental
-    * checkpointing); StateStoreToggleSpec uses this seam to prove the
-    * windowed-agg operator state is PROVIDER-INTERCHANGEABLE — same
-    * rows out of either store — so flipping the conf at scale is a pure
-    * performance decision, not a correctness risk. Reads back through
-    * the SAME session so the statestore reader resolves the matching
-    * provider. Session posture matches [[inspectSession]] (8 narrow
-    * partitions) with only the provider swapped. */
-  private[graft] def stateInspectFreshWithProvider(
-      s: SparkSession, dir: String,
-      providerClass: String): Seq[org.apache.spark.sql.Row] = {
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", "8")
-    s2.conf.set("spark.sql.streaming.stateStore.providerClass", providerClass)
-    freshDrainCollect(s2, dir)
-  }
+    tumblingCountAgg(drainSessionFor(s, dir), dir)
 
   val stateInspectOracle: String =
     """SELECT epoch_us(time_bucket(INTERVAL '1 hour', ts)) AS win_start_us,

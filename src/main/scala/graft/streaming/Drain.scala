@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Bounded drains for the `Trigger.AvailableNow` replay queries: one
+  * child-session recipe every drain runs on ([[childSession]]), one
   * recipe that runs a stream to completion into a memory sink
   * ([[toMemory]]), and the guard that a drain exceeding its timeout must
   * FAIL, not silently hand back the partially-filled memory table — a
@@ -16,11 +17,11 @@ object Drain {
   private val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** Drain the stream `build` returns to completion (`AvailableNow`) into a
-    * memory sink and return the drained rows.
+  /** The session a bounded drain runs on: a child of `s` (`newSession()`)
+    * with the drain's width, state-store provider and no-data-batch
+    * posture:
     *
-    *  - Isolation: `build` runs on a child session of `s` (`newSession()`),
-    *    so the drain's conf overrides never reach anything planned
+    *  - Isolation: the drain's conf overrides never reach anything planned
     *    concurrently on the caller's session, and the temp-view catalog
     *    and session UDFs are the child's own. The child starts from the
     *    SparkContext's conf, not the caller's runtime settings. A caller
@@ -44,18 +45,33 @@ object Drain {
     *    (see [[LandingZone]]); drains without a watermark never schedule
     *    one. A production continuous stream keeps Spark's default — no-data
     *    batches are how idle streams evict state on time.
-    *  - The sink is named `what_<uuid>`; its temp view is dropped once the
-    *    result is resolved (the analyzed plan keeps the sink relation
-    *    alive), so repeated drains pin no view or rows in the catalog.
     */
-  def toMemory(s: SparkSession, what: String, width: Int, mode: String,
-      rocksDb: Boolean = false)(build: SparkSession => DataFrame): DataFrame = {
+  private[graft] def childSession(s: SparkSession, width: Int,
+      rocksDb: Boolean = false): SparkSession = {
     val ss = s.newSession()
     ss.conf.set("spark.sql.shuffle.partitions", width.toString)
     ss.conf.set(ProviderKey,
       if (rocksDb) RocksDbProvider else s.conf.get(ProviderKey))
     ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val name = what + "_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    ss
+  }
+
+  /** A unique query name for one drain of `what`: `what_<uuid>`. */
+  private[graft] def runName(what: String): String =
+    what + "_" + java.util.UUID.randomUUID().toString.replace("-", "")
+
+  /** Drain the stream `build` returns to completion (`AvailableNow`) into a
+    * memory sink and return the drained rows. `build` runs on
+    * [[childSession]]`(s, width, rocksDb)`.
+    *
+    * The sink is named [[runName]]`(what)`; its temp view is dropped once
+    * the result is resolved (the analyzed plan keeps the sink relation
+    * alive), so repeated drains pin no view or rows in the catalog.
+    */
+  def toMemory(s: SparkSession, what: String, width: Int, mode: String,
+      rocksDb: Boolean = false)(build: SparkSession => DataFrame): DataFrame = {
+    val ss = childSession(s, width, rocksDb)
+    val name = runName(what)
     val q = build(ss).writeStream
       .outputMode(mode)
       .format("memory")

@@ -20,17 +20,6 @@ import graft.operators.Joins
   */
 object IdempotentWriter {
 
-  /** Filesystem-agnostic existence check (local, HDFS, S3A, ...): the sink
-    * path is resolved through Hadoop's FileSystem, not java.io.File — a
-    * local-only check silently skips the anti-join on any remote store and
-    * re-appends duplicates on replay.
-    */
-  def sinkExists(spark: org.apache.spark.sql.SparkSession, sinkPath: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(sinkPath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.exists(p)
-  }
-
   /** True when the sink holds at least one VISIBLE data file. Existence of
     * the path alone is not enough: a first append that dies mid-write can
     * leave the directory with only committer droppings (`_temporary`,

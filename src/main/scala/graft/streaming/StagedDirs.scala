@@ -35,11 +35,8 @@ object StagedDirs {
     * keeps its `k=v/` subdirs): a reaper deleting part files INSIDE a
     * surviving subdir leaves the top-level entry count unchanged, and a
     * top-level-only check would silently reuse the truncated copy.
-    * private[graft]: StreamQueries' state-inspect revalidation shares this
-    * exact walk (round-13 consolidation — it used to carry its own copy,
-    * which the two reaper-race hardening passes then had to fix twice).
     */
-  private[graft] def fileCount(path: String): Int = {
+  private def fileCount(path: String): Int = {
     val d = java.nio.file.Paths.get(path)
     if (!java.nio.file.Files.isDirectory(d)) -1
     else

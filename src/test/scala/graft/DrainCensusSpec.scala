@@ -2,12 +2,14 @@ package graft
 
 import org.scalatest.BeforeAndAfterAll
 
-/** Micro-batch census of the nine bounded `AvailableNow` memory-sink
-  * drains at sf0.001: each query, run through the query registry, must
-  * execute exactly the pinned number of micro-batches and return the
-  * pinned number of rows. A batch-count change is a change to the drain's
-  * fixed cost (one more incremental plan plus state-store spin-up per
-  * partition); a row-count change is a wrong answer.
+/** Micro-batch census of the bounded `AvailableNow` drains at sf0.001:
+  * each of the nine memory-sink drains, run through the query registry,
+  * must execute exactly the pinned number of micro-batches and return the
+  * pinned number of rows; q_state_inspect's noop-sink drain must execute
+  * its pinned micro-batches over the pinned number of input rows. A
+  * batch-count change is a change to the drain's fixed cost (one more
+  * incremental plan plus state-store spin-up per partition); a row-count
+  * change is a wrong answer.
   *
   * The census counts each drain's progress events on the shared Spark
   * listener bus ([[DrainBus]]), matching query runs by their name prefix.
@@ -41,5 +43,16 @@ class DrainCensusSpec extends SparkTestBase with BeforeAndAfterAll {
       println(s"[census] $query batches=$batches rows=$rows")
       assert((batches, rows) == ((wantBatches, wantRows)))
     }
+  }
+
+  test("q_state_inspect drains in its pinned micro-batch and input-row " +
+      "counts") {
+    Bus.clear()
+    SparkEntry.queries("q_state_inspect")(spark, sfDir).count()
+    val runs = Bus.runsOf("state_inspect_")
+    val batches = runs.map(_.size).sum
+    val inputRows = runs.flatten.map(_.numInputRows).sum
+    println(s"[census] q_state_inspect batches=$batches inputRows=$inputRows")
+    assert((runs.size, batches, inputRows) == ((1, 1, 1000L)))
   }
 }

@@ -57,6 +57,26 @@ class IndicatorJobSpec extends SparkTestBase {
       "NULL-timestamp indicator rows reached the sink")
   }
 
+  test("a sink holding only a dead first append's committer files does " +
+      "not wedge the job: run appends, and a second run appends 0") {
+    val dir = graft.util.TempDirs.create("graft-ind4").toString
+    val klinePath = s"$dir/kline_fact"
+    val indPath = s"$dir/indicator_fact"
+    klineFixture.write.parquet(klinePath)
+    // the path exists, but holds no visible data file: schema inference
+    // over it fails, so the job must not read it as the existing sink
+    val attempt = Files.createDirectories(java.nio.file.Paths.get(
+      indPath, "_temporary", "0", "_temporary", "attempt_0"))
+    Files.createFile(attempt.resolve("part-00000.parquet"))
+    Files.createFile(java.nio.file.Paths.get(indPath, "_SUCCESS"))
+
+    val first = IndicatorJob.run(spark, klinePath, indPath, typeDim)
+    assert(first > 0)
+    val second = IndicatorJob.run(spark, klinePath, indPath, typeDim)
+    assert(second == 0, "re-run over the recovered sink must append nothing")
+    assert(spark.read.parquet(indPath).count() == first)
+  }
+
   test("late rows: only the new keys are appended on re-run") {
     val dir = graft.util.TempDirs.create("graft-ind2").toString
     val klinePath = s"$dir/kline_fact"

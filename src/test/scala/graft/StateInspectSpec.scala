@@ -51,143 +51,24 @@ class StateInspectSpec extends SparkTestBase {
   }
 
   test("repeat run is deterministic (fresh checkpoints, same state)") {
-    // stateInspectFresh bypasses the memo: each call drains to its OWN
-    // fresh checkpoint and deletes it after collect — two independent
-    // drains must agree with each other and with the cached path.
-    val a = graft.queries.StreamQueries.stateInspectFresh(spark, dir)
-      .map(_.toString).sorted
-    val b = graft.queries.StreamQueries.stateInspectFresh(spark, dir)
-      .map(_.toString).sorted
-    val cached = graft.queries.StreamQueries.stateInspect(spark, dir)
-      .collect().map(_.toString).sorted
-    assert(a.sameElements(b))
-    assert(a.sameElements(cached))
-  }
-
-  test("repeated calls leak neither sessions nor checkpoint dirs " +
-      "(round-12 fix: memoized isolated session + per-dir checkpoint)") {
     def ckptDirs(): Set[String] = {
       val tmp = new java.io.File(
         System.getProperty("java.io.tmpdir", "/tmp"))
       Option(tmp.list()).getOrElse(Array.empty[String])
         .filter(_.startsWith("graft-state-inspect")).toSet
     }
-    // prime the memo, then snapshot
-    graft.queries.StreamQueries.stateInspect(spark, dir).count()
-    val sessionsBefore =
-      graft.queries.StreamQueries.isolatedSessionCount.get()
-    val dirsBefore = ckptDirs()
-    (1 to 3).foreach { _ =>
-      assert(graft.queries.StreamQueries.stateInspect(spark, dir).count() > 0)
-    }
-    assert(graft.queries.StreamQueries.isolatedSessionCount.get()
-      == sessionsBefore, "cached calls must not create new sessions")
-    assert(ckptDirs() == dirsBefore,
-      "cached calls must not create new checkpoint dirs")
-    // at most one isolated session ever exists per root session
-    assert(sessionsBefore == 1)
-  }
-
-  test("invalidateStateInspectCache forces a genuinely fresh drain " +
-      "(bench noise-guard contract)") {
-    def ckptDirs(): Set[String] = {
-      val tmp = new java.io.File(
-        System.getProperty("java.io.tmpdir", "/tmp"))
-      Option(tmp.list()).getOrElse(Array.empty[String])
-        .filter(_.startsWith("graft-state-inspect")).toSet
-    }
-    val before = graft.queries.StreamQueries.stateInspect(spark, dir)
-      .collect().map(_.toString).sorted
-    val dirsBefore = ckptDirs()
-    graft.queries.StreamQueries.invalidateStateInspectCache()
-    val after = graft.queries.StreamQueries.stateInspect(spark, dir)
-      .collect().map(_.toString).sorted
-    // a fresh drain means a NEW checkpoint dir appeared…
-    assert(ckptDirs().size == dirsBefore.size + 1,
-      "post-invalidation call must drain to a fresh checkpoint")
-    // …with identical state (determinism across independent drains)
-    assert(before.sameElements(after))
-  }
-
-  test("a reaper-damaged checkpoint fails revalidation and re-drains — " +
-      "never truncated state rows") {
-    val tmp = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir", "/tmp"))
-    def ckptDirs(): Set[java.nio.file.Path] = {
-      val s0 = java.nio.file.Files.list(tmp)
-      try {
-        import scala.jdk.CollectionConverters._
-        s0.iterator().asScala
-          .filter(_.getFileName.toString.startsWith("graft-state-inspect"))
-          .toSet
-      } finally s0.close()
-    }
-    // isolate: force the next call to drain to a dir we can identify
-    graft.queries.StreamQueries.invalidateStateInspectCache()
-    val dirsBefore = ckptDirs()
-    val want = graft.queries.StreamQueries.stateInspect(spark, dir)
-      .collect().map(_.toString).sorted
-    val memoDir = (ckptDirs() -- dirsBefore).head
-    // simulate a /tmp reaper partially deleting the checkpoint: remove one
-    // regular file — the file-count revalidation must notice and re-drain
-    val walk = java.nio.file.Files.walk(memoDir)
-    val victim =
-      try walk.filter(java.nio.file.Files.isRegularFile(_)).findFirst().get()
-      finally walk.close()
-    java.nio.file.Files.delete(victim)
-    val dirsDamaged = ckptDirs()
-    val after = graft.queries.StreamQueries.stateInspect(spark, dir)
-      .collect().map(_.toString).sorted
-    assert(ckptDirs().size == dirsDamaged.size + 1,
-      "damaged checkpoint must force a fresh drain to a new dir")
-    assert(after.sameElements(want),
-      "revalidation must yield complete state, never a truncated read")
-  }
-
-  test("session-churn stays bounded: both memo maps are LRU-capped " +
-      "(round-13 fix — a host that churns root sessions must not pin " +
-      "them for the JVM lifetime)") {
-    import graft.queries.StreamQueries.{stateInspectCache, inspectSessions}
-    import scala.jdk.CollectionConverters._
-    // snapshot real state so this test leaves the memos exactly as found
-    // (other suites may share the JVM): LRU insertion below can evict the
-    // live entries, which would force a later caller to re-drain — not
-    // wrong, but avoidably slow and it would trip this suite's own
-    // one-isolated-session assertion on a re-run.
-    val savedInspect = stateInspectCache.synchronized {
-      stateInspectCache.entrySet().asScala
-        .map(e => e.getKey -> e.getValue).toList
-    }
-    val savedSessions = inspectSessions.synchronized {
-      inspectSessions.entrySet().asScala
-        .map(e => e.getKey -> e.getValue).toList
-    }
-    try {
-      // churn: 200 synthetic entries each — far past the 64-entry cap.
-      // Keys are real (but throwaway) session objects; the reader memo's
-      // entries carry a dead path so any accidental reuse fails
-      // revalidation instead of returning fake state.
-      val deadPath = java.nio.file.Paths.get("/nonexistent-graft-churn")
-      (1 to 200).foreach { i =>
-        stateInspectCache.put((spark, s"churn-dir-$i"),
-          graft.queries.StreamQueries.InspectEntry(null, deadPath, -2L))
-        inspectSessions.put(spark.newSession(), spark.newSession())
-      }
-      assert(stateInspectCache.size() <= 64,
-        s"reader memo grew to ${stateInspectCache.size()} — LRU cap lost")
-      assert(inspectSessions.size() <= 64,
-        s"session memo grew to ${inspectSessions.size()} — LRU cap lost")
-    } finally {
-      stateInspectCache.synchronized {
-        stateInspectCache.keySet().asScala
-          .filter(_._2.startsWith("churn-dir-")).toList
-          .foreach(stateInspectCache.remove)
-        savedInspect.foreach { case (k, v) => stateInspectCache.put(k, v) }
-      }
-      inspectSessions.synchronized {
-        inspectSessions.clear()
-        savedSessions.foreach { case (k, v) => inspectSessions.put(k, v) }
-      }
-    }
+    // each call is one plain drain to its OWN checkpoint: two independent
+    // drains must each leave a new checkpoint dir and agree on the state
+    val before = ckptDirs()
+    val a = graft.queries.StreamQueries.stateInspect(spark, dir)
+      .collect().map(_.toString).sorted.toSeq
+    val afterA = ckptDirs()
+    val b = graft.queries.StreamQueries.stateInspect(spark, dir)
+      .collect().map(_.toString).sorted.toSeq
+    val afterB = ckptDirs()
+    assert((afterA -- before).size == 1, "first call must drain to a new checkpoint")
+    assert((afterB -- afterA).size == 1, "second call must drain to a new checkpoint")
+    assert(a.nonEmpty)
+    assert(a == b)
   }
 }

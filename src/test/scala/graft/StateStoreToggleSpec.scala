@@ -17,8 +17,8 @@ import org.scalatest.BeforeAndAfterAll
   * `Drain.toMemory` pin the provider on the drain's child session, so a
   * host session configured for HDFS state still runs them correctly.
   *
-  * The drains run on child sessions, so each memory-sink drain arm also
-  * asserts which provider it really ran on: the state operators of a
+  * The drains run on child sessions, so each drain arm also asserts
+  * which provider it really ran on: the state operators of a
   * RocksDB-backed run report `rocksdb*` custom metrics in their progress,
   * those of an HDFS-backed run do not.
   */
@@ -54,12 +54,11 @@ class StateStoreToggleSpec extends SparkTestBase with BeforeAndAfterAll {
 
   test("windowed-agg operator state is provider-interchangeable: HDFS " +
       "and RocksDB drains leave identical state rows") {
-    val h = graft.queries.StreamQueries
-      .stateInspectFreshWithProvider(spark, dir, Hdfs)
-      .map(_.toString).sorted
-    val r = graft.queries.StreamQueries
-      .stateInspectFreshWithProvider(spark, dir, Rocks)
-      .map(_.toString).sorted
+    val inspect = graft.queries.StreamQueries.stateInspect(_, dir)
+    val (h, hRocks) = drain(Hdfs, "state_inspect_")(inspect)
+    val (r, rRocks) = drain(Rocks, "state_inspect_")(inspect)
+    assert(!hRocks, "the HDFS arm must run on the HDFS-backed provider")
+    assert(rRocks, "the RocksDB arm must run on the RocksDB provider")
     assert(h.nonEmpty, "drain must leave state rows")
     assert(h == r,
       s"provider divergence: only-hdfs=${(h.toSet -- r.toSet).take(3)} " +
