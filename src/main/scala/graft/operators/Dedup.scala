@@ -112,19 +112,12 @@ object Dedup {
     * (candidates ≫ docs). Found empirically: at the 100x scale probe
     * (500k docs) the unconditioned broadcast OOM'd the driver. ANY
     * negative value means always broadcast (no probe), 0 never; a
-    * non-numeric value is rejected with the conf key named. Session conf
-    * wins over the JVM system property (same precedence as
-    * graft.prefixsum.threshold). */
-  private[graft] def docBroadcastCutoff(df: DataFrame): Long = {
-    val key = "graft.dedup.broadcastMaxDocs"
-    val raw = df.sparkSession.conf.get(key,
-      sys.props.getOrElse(key, "200000"))
-    try raw.trim.toLong catch { case _: NumberFormatException =>
-      throw new IllegalArgumentException(
-        s"$key must be a long (any negative = always broadcast, " +
-          s"0 = never, N > 0 = broadcast up to N docs); got '$raw'")
-    }
-  }
+    * non-numeric value is rejected with the conf key named. Read from the
+    * session conf through [[graft.util.Knob]]. */
+  private[graft] def docBroadcastCutoff(df: DataFrame): Long =
+    graft.util.Knob.long(df.sparkSession, "graft.dedup.broadcastMaxDocs",
+      200000L, "any negative = always broadcast, 0 = never, " +
+        "N > 0 = broadcast up to N docs")
 
   /** Memoized corpus counts for the broadcast probe, keyed by the
     * CANONICALIZED analyzed plan (+ owning session + input-file-set token,

@@ -54,23 +54,13 @@ import org.apache.spark.sql.functions._
 object PrefixSum {
 
   /** Inputs at or below this row count take the single-window path; -1
-    * forces two-phase regardless of size (used by the plan pins). Session
-    * conf wins; the JVM system property is the process-wide override (how
-    * a whole Verify drive is forced onto the two-phase path, e.g.
-    * `sbt -Dgraft.prefixsum.threshold=-1 "runMain graft.Verify ..."` —
-    * Verify's per-query newSession()s don't inherit root-session conf). */
-  private def threshold(df: DataFrame): Long = {
-    val key = "graft.prefixsum.threshold"
-    val raw = df.sparkSession.conf.get(key, sys.props.getOrElse(key, "100000"))
-    // trim + named failure, same contract as Scale.intKnob / ScaleFence
-    // .confLong: a padded or malformed value must name the offending knob
-    try raw.trim.toLong
-    catch {
-      case _: NumberFormatException =>
-        throw new IllegalArgumentException(
-          s"$key must be a long (-1 forces the two-phase path); got '$raw'")
-    }
-  }
+    * forces two-phase regardless of size (used by the plan pins). Read from
+    * the session conf; to force a whole Verify drive onto the two-phase
+    * path, set it at builder level with
+    * `SPARK_GRAFT_EXTRA_CONF=graft.prefixsum.threshold=-1`. */
+  private def threshold(df: DataFrame): Long =
+    graft.util.Knob.long(df.sparkSession, "graft.prefixsum.threshold",
+      100000L, "-1 forces the two-phase path")
 
   /** One-pass size probe: (rowCount, ordered bucket bounds). The bounds are
     * the (1/parts .. (parts-1)/parts) approx percentiles of `ord` — a

@@ -10,59 +10,31 @@ import org.apache.spark.sql.functions._
   */
 object Scale {
 
-  /** Resolve an integer scale knob: session conf wins, then the JVM system
-    * property, then the default (the same precedence as
-    * `graft.prefixsum.threshold`). Gate queries pin index parameters
-    * (centroid counts, LSH bits) to small oracle-replayable defaults; the
-    * scale probe raises them through these knobs to the configuration a
-    * real corpus would use (centroids ~ sqrt(N), bits ~ log2(N)) without
-    * touching the oracle-gated default path.
-    */
-  def intKnob(s: SparkSession, key: String, default: Int): Int = {
-    val raw = s.conf.get(key, sys.props.getOrElse(key, default.toString))
-    try raw.trim.toInt
-    catch {
-      // name the offending key/value (round-13: a bare
-      // NumberFormatException gave no clue WHICH of several knobs was
-      // malformed — the same gap derivedIntKnob/confLong already close)
-      case _: NumberFormatException =>
-        throw new IllegalArgumentException(
-          s"$key must be an int; got '$raw'")
-    }
-  }
-
   /** Integer scale knob whose DEFAULT derives from the corpus size
-    * instead of being a constant: session conf wins, then the JVM system
-    * property, then `derive(N)` where N is the corpus row count —
+    * instead of being a constant: the session conf wins (read through
+    * [[graft.util.Knob]], so it is trimmed and must be >= 1), and an unset
+    * or blank key yields `derive(N)` where N is the corpus row count —
     * memoized per (session, canonical plan, input-file-set token) by
     * [[Dedup.memoizedCount]], the same staleness-guarded count the dedup
     * broadcast probe uses, so the probe job runs once per distinct corpus
     * per JVM no matter how many knobs consult it.
     *
-    * Round-13 rationale (VERDICT r12 #2): the oracle-gated queries pin
-    * their published replay shapes by SETTING the conf (Verify, Bench and
-    * the test base pin the test-SF constants explicitly — the DuckDB
+    * Gate queries pin index parameters (centroid counts, LSH bits) to
+    * small oracle-replayable values by SETTING the conf (Verify, Bench and
+    * the test base pin the test-SF constants at builder level — the DuckDB
     * oracles bake those constants into their SQL), while a library user
-    * who calls the operator on a real corpus with NO configuration now
-    * gets scale-appropriate index parameters instead of test-SF constants
-    * that would be quadratically wrong at 100 TB (BASELINE.md documents
-    * that failure mode for the constant defaults).
+    * who calls the operator on a real corpus with NO configuration gets
+    * scale-appropriate index parameters (centroids ~ sqrt(N),
+    * bits ~ log2(N)) instead of test-SF constants that would be
+    * quadratically wrong at 100 TB (BASELINE.md documents that failure
+    * mode for the constant defaults). A value below 1 is rejected: zero
+    * centroids is an empty centroid set and zero LSH bits is one bucket.
     */
   def derivedIntKnob(s: SparkSession, key: String, corpus: DataFrame,
-      derive: Long => Int): Int = {
-    // trim for parity with intKnob: a whitespace-padded value (' 8 ', a
-    // trailing-newline system property) must parse, and a whitespace-only
-    // value opts into derivation like an unset one
-    val raw = s.conf.get(key, sys.props.getOrElse(key, "")).trim
-    if (raw.isEmpty) derive(Dedup.memoizedCount(corpus))
-    else
-      try raw.toInt
-      catch { case _: NumberFormatException =>
-        throw new IllegalArgumentException(
-          s"$key must be an int (empty/unset = derive from corpus size); " +
-            s"got '$raw'")
-      }
-  }
+      derive: Long => Int): Int =
+    graft.util.Knob.optInt(s, key,
+      "empty/unset = derive from corpus size", min = 1)
+      .getOrElse(derive(Dedup.memoizedCount(corpus)))
 
   /** ceil(log2 N) clamped to [4, 24]: random-hyperplane sign bits per LSH
     * band so that 2^bits ~ N keeps expected bucket occupancy O(1) — the

@@ -165,16 +165,6 @@ object ScaleFence {
           "stream to a table first, or use the streaming-safe dedup path " +
           "(dropDuplicatesWithinWatermark / IdempotentWriter).")
 
-  /** Parse a long session conf, naming the key and offending value on a
-    * malformed setting instead of surfacing a bare NumberFormatException.
-    */
-  private def confLong(df: DataFrame, key: String, default: Long): Long = {
-    val raw = df.sparkSession.conf.get(key, default.toString)
-    try raw.trim.toLong
-    catch {
-      case _: NumberFormatException =>
-        throw new IllegalArgumentException(
-          s"$key must be a long (-1 disables the fence); got '$raw'")
-    }
-  }
+  private def confLong(df: DataFrame, key: String, default: Long): Long =
+    graft.util.Knob.long(df.sparkSession, key, default, "-1 disables the fence")
 }

@@ -218,6 +218,7 @@ object Similarity {
     */
   def lshNearDup(vectors: DataFrame, idCol: String, vecCol: String,
       threshold: Double, bands: Int = 8, bitsPerBand: Int = 6): DataFrame = {
+    require(bitsPerBand >= 1, s"bitsPerBand must be >= 1, got $bitsPerBand")
     require(bitsPerBand <= 62, "band chunk packs into a long")
     // dimension probe tolerates empty input / null vectors (mirror
     // cosineNearDup's empty-in-empty-out behavior instead of throwing).

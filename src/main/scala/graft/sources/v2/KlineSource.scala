@@ -83,16 +83,9 @@ class KlineTable(props: Map[String, String]) extends Table with SupportsRead {
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new KlineScanBuilder(path,
-      Option(options.get("limit")).map { raw =>
-        // name the offending option, same contract as the Scale knobs —
-        // a bare NumberFormatException gives no clue WHICH option broke
-        try raw.trim.toInt
-        catch {
-          case _: NumberFormatException =>
-            throw new IllegalArgumentException(
-              s"graft-klines option 'limit' must be an int; got '$raw'")
-        }
-      }.getOrElse(Int.MaxValue))
+      Option(options.get("limit"))
+        .map(graft.util.Knob.parseInt("graft-klines option 'limit'", _, ""))
+        .getOrElse(Int.MaxValue))
 }
 
 class KlineScanBuilder(path: String, limit: Int) extends ScanBuilder

@@ -16,8 +16,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   *   width = clamp(ceil(bytes / 64 MiB), 2, 200)
   *
-  * - `graft.drain.partitions` (session conf or system property) overrides
-  *   the derivation outright — the explicit production knob.
+  * - `graft.drain.partitions` (session conf, an int >= 1) overrides the
+  *   derivation outright — the explicit production knob.
   * - 64 MiB per partition: a replay step's worth of state folding per
   *   store keeps each store's working set far below executor memory while
   *   bounding store-count overhead.
@@ -37,22 +37,12 @@ object DrainWidth {
   private val MaxPartitions: Long = 200L
 
   /** Derived width for a drain whose replay input totals `bytes`. */
-  def forBytes(s: SparkSession, bytes: Long): Int = {
-    val explicit = s.conf.get(PartitionsKey,
-      sys.props.getOrElse(PartitionsKey, ""))
-    if (explicit.nonEmpty) {
-      val v = try explicit.trim.toInt catch {
-        case _: NumberFormatException =>
-          throw new IllegalArgumentException(
-            s"$PartitionsKey must be an int; got '$explicit'")
-      }
-      require(v >= 1, s"$PartitionsKey must be >= 1, got $v")
-      v
-    } else {
+  def forBytes(s: SparkSession, bytes: Long): Int =
+    graft.util.Knob.optInt(s, PartitionsKey,
+      "overrides the derived drain width", min = 1).getOrElse {
       val derived = (math.max(0L, bytes) + BytesPerPartition - 1) / BytesPerPartition
       math.min(MaxPartitions, math.max(2L, derived)).toInt
     }
-  }
 
   /** Total data bytes under a local/Hadoop path (recursive; missing or
     * unstat-able paths count 0 — the drain then just takes the floor, with

@@ -15,8 +15,11 @@ import graft.operators.Joins
   * batch replays after failure.
   *
   * Scale note: the anti-join reads back only the key columns (column-pruned
-  * scan); with a partitioned sink, partition filters keep the read-back
-  * bounded by the batch's key range rather than the full history.
+  * scan), but no sink is partitioned and [[appendNew]] pushes no key
+  * filter, so every batch reads back every key the sink holds: the cost
+  * grows with the history, not the batch (about 261 KB per ingest cycle
+  * in perfbench's `ingest_cycle`). Bounding it by the batch is ROADMAP
+  * direction 4.
   */
 object IdempotentWriter {
 

@@ -78,17 +78,8 @@ object LandingZone {
       filesPerStep: Int = DrainFilesPerStep): String = {
     require(filesPerStep >= 1,
       s"stage: filesPerStep must be >= 1, got $filesPerStep")
-    val maxStepBytes = {
-      val raw = first.sparkSession.conf.get(MaxStepBytesKey,
-        sys.props.getOrElse(MaxStepBytesKey, DefaultMaxStepBytes.toString))
-      try raw.trim.toLong
-      catch {
-        case _: NumberFormatException =>
-          throw new IllegalArgumentException(
-            s"$MaxStepBytesKey must be a long (-1 disables the guard); " +
-              s"got '$raw'")
-      }
-    }
+    val maxStepBytes = graft.util.Knob.long(first.sparkSession,
+      MaxStepBytesKey, DefaultMaxStepBytes, "-1 disables the guard")
     val staged = graft.util.TempDirs.create("graft-landing")
     val t0 = System.currentTimeMillis() - 60000L
 

@@ -3,13 +3,12 @@ package graft
 import graft.operators.Scale
 
 /** Round-13 corpus-derived index parameters (VERDICT r12 #2): with no
-  * session conf / system property, ANN/LSH index parameters derive from
-  * the corpus row count (bits = ceil(log2 N), centroids = ceil(sqrt N),
-  * both clamped) instead of test-SF constants that would be wrong at
-  * production scale. The driver gate (Verify/Bench) and this test base
-  * pin the oracle-replayed constants via builder conf
-  * (`graft.Session.gatePins`); an empty-string
-  * conf explicitly opts back into derivation.
+  * session conf, ANN/LSH index parameters derive from the corpus row
+  * count (bits = ceil(log2 N), centroids = ceil(sqrt N), both clamped)
+  * instead of test-SF constants that would be wrong at production scale.
+  * The oracle gate (Verify/Bench) and this test base pin the
+  * oracle-replayed constants via builder conf (`graft.Session.gatePins`);
+  * an empty-string conf explicitly opts back into derivation.
   */
 class DerivedKnobSpec extends SparkTestBase {
 
@@ -31,31 +30,49 @@ class DerivedKnobSpec extends SparkTestBase {
     assert(Scale.deriveCentroids(Long.MaxValue) == 65536)
   }
 
-  test("precedence: session conf > system property > derived; " +
+  test("precedence: session conf > derived; a system property is ignored; " +
       "empty conf explicitly opts into derivation; malformed is named") {
     val s2 = spark.newSession()
     import s2.implicits._
     val corpus = (1 to 100).toDF("x")
     val key = "graft.test.derivedKnob"
-    // no conf, no prop -> derived from the (memoized) corpus count
+    // no conf -> derived from the (memoized) corpus count
     assert(Scale.derivedIntKnob(s2, key, corpus, Scale.deriveCentroids) == 10)
-    // system property beats derivation
+    // a JVM system property is not a second source for graft.* keys
     sys.props(key) = "33"
+    try assert(Scale.derivedIntKnob(s2, key, corpus, _ => 999) == 999)
+    finally sys.props.remove(key)
+    // session conf beats derivation
+    s2.conf.set(key, "44")
     try {
-      assert(Scale.derivedIntKnob(s2, key, corpus, _ => 999) == 33)
-      // session conf beats the property
-      s2.conf.set(key, "44")
       assert(Scale.derivedIntKnob(s2, key, corpus, _ => 999) == 44)
-      // empty-string conf = explicit derive, even with the property set
+      // empty-string conf = explicit derive
       s2.conf.set(key, "")
       assert(Scale.derivedIntKnob(s2, key, corpus, _ => 77) == 77)
-    } finally { sys.props.remove(key); s2.conf.unset(key) }
+    } finally s2.conf.unset(key)
     s2.conf.set(key, "abc")
     try {
       val e = intercept[IllegalArgumentException](
         Scale.derivedIntKnob(s2, key, corpus, _ => 1))
       assert(e.getMessage.contains(key))
     } finally s2.conf.unset(key)
+  }
+
+  test("the derived index keys reject values below 1, naming the key") {
+    // 0 centroids is an empty centroid set (an empty result, no error) and
+    // 0 LSH bits is one bucket; the key must be named before any job runs
+    val gated: Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame)] = Seq(
+      "graft.lsh.bitsPerBand" -> graft.queries.Ext2Queries.lshAnn,
+      "graft.semdedup.centroids" -> graft.queries.Ext12Queries.semDedup,
+      "graft.ivf.centroids" -> graft.queries.Ext28Queries.knnClassify)
+    for ((key, query) <- gated; v <- Seq("0", "-2")) {
+      val child = spark.newSession()
+      child.conf.set(key, v)
+      val e = intercept[IllegalArgumentException](query(child, dir).count())
+      assert(e.getMessage.contains(key) && e.getMessage.contains(v),
+        s"$key=$v: error must name the key and value: ${e.getMessage}")
+    }
   }
 
   test("round-14: derivedIntKnob trims like intKnob — padded values parse, " +
@@ -72,16 +89,17 @@ class DerivedKnobSpec extends SparkTestBase {
     finally s2.conf.unset(key)
   }
 
-  test("round-13: intKnob names the offending key/value on a malformed " +
-      "setting and trims whitespace (parity with derivedIntKnob/confLong)") {
+  test("Knob names the offending key/value on a malformed setting and " +
+      "trims whitespace") {
     val s2 = spark.newSession()
     val key = "graft.test.intKnob"
+    def read = graft.util.Knob.optInt(s2, key, "")
     s2.conf.set(key, " 8 ")
-    try assert(Scale.intKnob(s2, key, 1) == 8)
+    try assert(read.contains(8))
     finally s2.conf.unset(key)
     s2.conf.set(key, "1_000")
     try {
-      val e = intercept[IllegalArgumentException](Scale.intKnob(s2, key, 1))
+      val e = intercept[IllegalArgumentException](read)
       assert(e.getMessage.contains(key) && e.getMessage.contains("1_000"))
     } finally s2.conf.unset(key)
   }
