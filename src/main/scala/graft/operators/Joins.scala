@@ -26,10 +26,12 @@ object Joins {
     * Keys are NOT NULL in the reference DDL so a plain (non null-safe) anti-join
     * is correct. `existing` should be pre-projected to the key columns so the
     * shuffle carries no payload; when the sink's key set is small (or pruned by
-    * partition filters) Catalyst/AQE will broadcast it.
+    * partition filters) Catalyst/AQE will broadcast it. Duplicate keys in
+    * `existing` do not change a left-anti result, so it is not deduplicated
+    * (that would cost an aggregate and a shuffle over the whole sink).
     */
   def antiJoinNew(incoming: DataFrame, existing: DataFrame, keys: Seq[String]): DataFrame =
-    incoming.join(existing.select(keys.map(col): _*).dropDuplicates(keys), keys, "left_anti")
+    incoming.join(existing.select(keys.map(col): _*), keys, "left_anti")
 
   /** get-or-create surrogate keys for a dimension (reference:
     * dags/consumer_prices.py:31-39 and dags/consumer_news.py:52-57 do this

@@ -1,10 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.Schemas
 import graft.operators.{Indicators, Joins}
+import graft.streaming.IdempotentWriter
 
 /** Batch indicator job — full parity with the reference's analytical core
   * (dags/spark_job_1.py:11-97), recomposed Spark-first:
@@ -63,27 +64,21 @@ object IndicatorJob {
   /** End-to-end run against a parquet warehouse directory: reads
     * `$dir/kline_fact` and `$dir/indicator_fact` (if it holds data),
     * appends only new indicator rows. Re-running on unchanged input
-    * appends nothing.
+    * appends nothing. Both reads take their schema from a footer on the
+    * driver ([[IdempotentWriter.readSink]]), so neither runs an inference
+    * job.
     * Returns the number of rows appended.
     */
   def run(spark: SparkSession, klineFactPath: String, indicatorFactPath: String,
       typeDim: DataFrame, n: Int = 14): Long = {
-    val klines = spark.read.parquet(klineFactPath)
+    val klines = IdempotentWriter.readSink(spark, klineFactPath)
+      .getOrElse(spark.read.parquet(klineFactPath))
     val computed = computeIndicators(klines, typeDim, n)
     // data files, not the path: a sink holding only a dead first append's
     // committer files would fail schema inference on every later run
-    val fresh = if (graft.streaming.IdempotentWriter.sinkHasData(spark, indicatorFactPath)) {
-      val existing = spark.read.parquet(indicatorFactPath).select(keyCols.map(col): _*)
-      newOnly(computed, existing)
-    } else computed
-    // Single write action; count via accumulator-free observe would need a
-    // listener — a persisted count is fine here (fresh is small post-anti-join).
-    val toWrite = fresh.persist()
-    try {
-      val nRows = toWrite.count()
-      if (nRows > 0)
-        toWrite.write.mode(SaveMode.Append).parquet(indicatorFactPath)
-      nRows
-    } finally toWrite.unpersist() // a failed append must not leak the cache
+    val fresh = IdempotentWriter.readSink(spark, indicatorFactPath)
+      .fold(computed)(existing => newOnly(computed, existing.select(keyCols.map(col): _*)))
+    // fresh is small after the anti-join; an empty result appends nothing
+    IdempotentWriter.appendNonEmpty(fresh, indicatorFactPath)
   }
 }

@@ -45,10 +45,24 @@ object Drain {
     *    (see [[LandingZone]]); drains without a watermark never schedule
     *    one. A production continuous stream keeps Spark's default — no-data
     *    batches are how idle streams evict state on time.
+    *  - No artifact isolation (`spark.sql.artifact.isolation.enabled=false`):
+    *    Spark keys its generated-code cache on (session class loader, code),
+    *    and an isolated session — and every per-query clone of it — brings
+    *    its own class loader, so each drain recompiled the classes the same
+    *    drain compiled an hour before. Without isolation the child, and the
+    *    clone each of its streaming queries runs on, share the application
+    *    class loader and reuse those classes. Isolation only scopes
+    *    artifacts (jars, files) added to a session at runtime; the library
+    *    adds none. Set before the child's first use, which is when Spark
+    *    reads it.
+    *
+    * The memory-sink drains ([[toMemory]]), `q_state_inspect` and the
+    * bounded (`availableNow`) [[Pipelines.start]] drains all run on it.
     */
   private[graft] def childSession(s: SparkSession, width: Int,
       rocksDb: Boolean = false): SparkSession = {
     val ss = s.newSession()
+    ss.conf.set("spark.sql.artifact.isolation.enabled", "false")
     ss.conf.set("spark.sql.shuffle.partitions", width.toString)
     ss.conf.set(ProviderKey,
       if (rocksDb) RocksDbProvider else s.conf.get(ProviderKey))
@@ -116,13 +130,18 @@ object Drain {
 
   private[graft] def trackedCount: Int = tracked.size()
 
+  /** Register `q` with the teardown sweep ([[stopLeftovers]]): a query on
+    * a child session is invisible to the root session's manager. */
+  private[graft] def track(q: StreamingQuery): Unit =
+    tracked.add(new java.lang.ref.WeakReference(q))
+
   /** Await `q` up to `timeoutMs`; on timeout stop the query and throw. */
   def awaitOrFail(q: StreamingQuery, what: String,
       timeoutMs: Long = 300000L): Unit = {
     // registered BEFORE the wait: a drain that times out (or whose stop()
     // fails) leaves its query findable by the teardown sweep even though
     // it lives on a child session invisible to the root session's manager
-    tracked.add(new java.lang.ref.WeakReference(q))
+    track(q)
     if (!q.awaitTermination(timeoutMs)) {
       val timeout = new IllegalStateException(
         s"$what drain did not terminate within ${timeoutMs / 1000}s; " +

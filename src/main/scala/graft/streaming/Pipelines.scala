@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -106,6 +106,16 @@ object Pipelines {
   /** Start a pipeline into an idempotent parquet sink. `availableNow = true`
     * is the Airflow-style run-to-completion drain (T6/T7); false runs
     * continuously at `cadence` (T5; 10s prices / 30s news in the reference).
+    *
+    * A bounded drain runs on [[Drain.childSession]] at the caller's
+    * `spark.sql.shuffle.partitions`: it pays for its data batch only (no
+    * trailing no-data batch after the watermark advances), reuses the
+    * classes the previous drain of the same flow compiled, and is
+    * registered with the teardown sweep [[Drain.stopLeftovers]]. The
+    * flow's analyzed plan is re-bound there, so a flow reading a temp view
+    * of the caller still resolves. A continuous stream runs on the
+    * caller's session and keeps Spark's no-data batches, which evict idle
+    * state on time.
     */
   def start(
       flow: DataFrame,
@@ -113,10 +123,21 @@ object Pipelines {
       checkpoint: String,
       keys: Seq[String],
       availableNow: Boolean = true,
-      cadence: String = "10 seconds"): StreamingQuery =
-    flow.writeStream
+      cadence: String = "10 seconds"): StreamingQuery = {
+    val caller = flow.sparkSession
+    val (df, trigger) =
+      if (availableNow) {
+        val ss = Drain.childSession(caller,
+          caller.conf.get("spark.sql.shuffle.partitions").toInt)
+        (GraftColumnBridge.ofRows(ss, flow.queryExecution.analyzed),
+          Trigger.AvailableNow())
+      } else (flow, Trigger.ProcessingTime(cadence))
+    val q = df.writeStream
       .foreachBatch(IdempotentWriter.appendNew(sinkPath, keys) _)
       .option("checkpointLocation", checkpoint)
-      .trigger(if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime(cadence))
+      .trigger(trigger)
       .start()
+    if (availableNow) Drain.track(q)
+    q
+  }
 }

@@ -17,6 +17,30 @@ class StreamingSpec extends SparkTestBase {
 
   private def tmp(prefix: String) = graft.util.TempDirs.create(prefix).toString
 
+  /** One kline message for `symbol` opening `hour` hours after 2024-01-01. */
+  private def kline(symbol: String, hour: Int): String = {
+    val open = 1704067200000L + hour * 3600000L
+    s"""{"symbol":"$symbol","interval":"1h","open_time":$open,"open":"1.0","high":"1.1","low":"0.9","close":"1.05","volume":"10.0","close_time":${open + 3599999},"fetched_at":"2024-01-02T00:00:00"}"""
+  }
+
+  /** Land `lines` as one new file of a file-replay source directory. */
+  private def land(dir: String, name: String, lines: Seq[String]): Unit = {
+    Files.createDirectories(java.nio.file.Paths.get(dir))
+    Files.write(java.nio.file.Paths.get(dir, name),
+      lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+  }
+
+  /** Drain the price flow over `src` to completion into `sink`. */
+  private def drainPrices(src: String, sink: String, ckpt: String): Unit =
+    graft.streaming.Drain.awaitOrFail(Pipelines.start(
+      Pipelines.priceFlow(spark.readStream.schema("value STRING").text(src)),
+      sink, ckpt, Pipelines.klineKeys), "prices")
+
+  /** The visible data files of a parquet sink. */
+  private def dataFiles(sink: String): Seq[String] =
+    new java.io.File(sink).list().toSeq
+      .filterNot(n => n.startsWith("_") || n.startsWith(".")).sorted
+
   test("priceFlow through MemoryStream: duplicates collapse, malformed rows dropped (T3/T4)") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[String]
@@ -25,6 +49,8 @@ class StreamingSpec extends SparkTestBase {
     val q = Pipelines.start(flow, sink, tmp("graft-ckpt"), Pipelines.klineKeys,
       availableNow = false, cadence = "1 second")
     try {
+      // a continuous stream runs on the caller's session
+      assert(spark.streams.active.exists(_.id == q.id))
       // 4 clean fixtures + a re-send of the first + one malformed message
       mem.addData(WireQueries.priceFixtures: _*)
       mem.addData(WireQueries.priceFixtures.head)
@@ -64,8 +90,12 @@ class StreamingSpec extends SparkTestBase {
     val sink = tmp("graft-replay") + "/out"
     val batch = Seq((1, "a"), (2, "b")).toDF("id", "v")
     IdempotentWriter.appendNew(sink, Seq("id"))(batch, 0L)
+    val files = dataFiles(sink)
     IdempotentWriter.appendNew(sink, Seq("id"))(batch, 0L) // replay after "crash"
-    IdempotentWriter.appendNew(sink, Seq("id"))(Seq((2, "b"), (3, "c")).toDF("id", "v"), 1L)
+    IdempotentWriter.appendNew(sink, Seq("id"))(batch.limit(0), 1L) // empty batch
+    // neither wrote a zero-row file for every later read-back to open
+    assert(dataFiles(sink) == files)
+    IdempotentWriter.appendNew(sink, Seq("id"))(Seq((2, "b"), (3, "c")).toDF("id", "v"), 2L)
     val out = spark.read.parquet(sink)
     assert(out.count() == 3)
     assert(out.select("id").as[Int].collect().toSet == Set(1, 2, 3))
@@ -169,12 +199,70 @@ class StreamingSpec extends SparkTestBase {
     val q = Pipelines.start(Pipelines.priceFlow(stream), sink,
       tmp("graft-an-ckpt"), Pipelines.klineKeys, availableNow = true)
     q.awaitTermination()
+    // one data batch: no trailing no-data batch after the watermark advances
+    assert(q.recentProgress.length == 1)
 
     val streamed = spark.read.parquet(sink).orderBy("symbol", "interval")
       .drop("fetched_at").collect().map(_.toString).toSeq
     val batch = graft.sources.KafkaJson.parsePrices(WireQueries.priceFixtures.toDF("value"))
       .orderBy("symbol", "interval").drop("fetched_at").collect().map(_.toString).toSeq
     assert(streamed == batch)
+  }
+
+  test("repeated bounded drains of one flow reuse its compiled classes") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val src = tmp("graft-codegen-src")
+    val (sink, ckpt) = (tmp("graft-codegen") + "/klines", tmp("graft-codegen-ckpt"))
+    // the first drain lands into an empty sink, the next two take the
+    // anti-join path: the third compiles only what the second did not
+    land(src, "part-0.txt", WireQueries.priceFixtures)
+    drainPrices(src, sink, ckpt)
+    land(src, "part-1.txt", Seq(kline("SOLUSDT", 1)))
+    drainPrices(src, sink, ckpt)
+    land(src, "part-2.txt", Seq(kline("SOLUSDT", 2)))
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    drainPrices(src, sink, ckpt)
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(spark.read.parquet(sink).count() == 6)
+    assert(compiles <= 4, s"$compiles classes compiled by a repeated drain")
+  }
+
+  test("the sink drops a key re-sent into a fresh checkpoint (no dedup " +
+      "state left), and its footer schema is the inferred schema") {
+    val sink = tmp("graft-resend") + "/klines"
+    val first = tmp("graft-resend-src1")
+    land(first, "part-0.txt", WireQueries.priceFixtures)
+    drainPrices(first, sink, tmp("graft-resend-ckpt1"))
+    // a restarted producer re-sends an old kline after the dedup horizon:
+    // a new checkpoint holds no dedup state, so only the sink backstops it
+    val second = tmp("graft-resend-src2")
+    land(second, "part-0.txt",
+      Seq(WireQueries.priceFixtures.head, kline("SOLUSDT", 5)))
+    drainPrices(second, sink, tmp("graft-resend-ckpt2"))
+    val keys = spark.read.parquet(sink)
+      .select(concat_ws("|", $"symbol", $"interval", $"open_time")).as[String].collect()
+    assert(keys.length == 5 && keys.distinct.length == 5)
+
+    val news = tmp("graft-footer") + "/news"
+    val newsSrc = tmp("graft-footer-src")
+    land(newsSrc, "part-0.txt", WireQueries.newsFixtures)
+    graft.streaming.Drain.awaitOrFail(Pipelines.start(
+      Pipelines.newsFlow(spark.readStream.schema("value STRING").text(newsSrc)),
+      news, tmp("graft-footer-ckpt"), Pipelines.newsKeys), "news")
+    val dir = tmp("graft-footer-ind")
+    (0 until 20).map(h => (1, 1, h)).toDF("symbol_id", "interval_id", "h")
+      .select($"symbol_id", $"interval_id",
+        timestamp_seconds($"h" * 3600).as("close_time"),
+        (sin($"h") + 100.0).as("close_price"))
+      .write.parquet(s"$dir/kline_fact")
+    graft.pipeline.IndicatorJob.run(spark, s"$dir/kline_fact",
+      s"$dir/indicator_fact",
+      graft.model.Schemas.indicatorTypeSeed.toDF("type_id", "type_name"))
+    for (p <- Seq(sink, news, s"$dir/indicator_fact")) {
+      val inferred = spark.read.parquet(p).schema
+      assert(IdempotentWriter.sinkSchema(spark, p).isDefined, s"no footer schema in $p")
+      assert(IdempotentWriter.readSink(spark, p).get.schema == inferred, p)
+    }
   }
 
   test("Drain's registry does not grow across repeated completed drains") {
@@ -302,7 +390,8 @@ class StreamingSpec extends SparkTestBase {
     // every key a drain's child session overrides
     val keys = Seq("spark.sql.shuffle.partitions",
       "spark.sql.streaming.noDataMicroBatches.enabled",
-      "spark.sql.streaming.stateStore.providerClass")
+      "spark.sql.streaming.stateStore.providerClass",
+      "spark.sql.artifact.isolation.enabled")
     val beforeConf = keys.map(k => k -> caller.conf.getOption(k))
     val beforeViews = caller.catalog.listTables().count()
     def stream() = {
