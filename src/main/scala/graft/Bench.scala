@@ -54,22 +54,14 @@ object Bench {
     // staging cost the first run did — a warm re-run of a cold-staged
     // query would mask a staging-path regression behind the memo
     val stagedBy = scala.collection.mutable.Map.empty[String, Seq[String]]
-    // whether each query TOUCHED the dedup probe memo (hit or miss — either
-    // way the query depends on it): lets the noise-guard re-run invalidate
-    // the memo only for a query that uses it, instead of the round-12
-    // global clear that made a LATER memo-dependent query in the same
-    // sweep pay a probe inside its timed region
-    val touchedProbeMemo = scala.collection.mutable.Map.empty[String, Boolean]
     def materialize(name: String): Double = {
       graft.streaming.StagedDirs.drainRecentlyStaged() // discard stale log
-      val d0 = graft.operators.Dedup.docCountTouches.get()
       val t0 = System.nanoTime()
       try {
         SparkEntry.queries(name)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
         val t = (System.nanoTime() - t0) / 1e9
         stagedBy(name) = graft.streaming.StagedDirs.drainRecentlyStaged()
-        touchedProbeMemo(name) = graft.operators.Dedup.docCountTouches.get() > d0
         t
       } catch { case e: Throwable =>
         // e.toString, not getMessage: an NPE's message is null, which
@@ -153,13 +145,6 @@ object Bench {
             f"[bench] $n%s $t%.2f s > 2x anchor $a%.2f s - re-running once")
           graft.streaming.StagedDirs.invalidate(
             stagedBy.getOrElse(n, Nil))
-          // invalidate the probe memo ONLY if this query touched it
-          // (tracked above): a dedup-probe-gated re-run must pay the probe
-          // job again or the min-merge measures less work — but clearing
-          // the memo for an UNGATED query would push the cost into a later
-          // probe-dependent query's timed region instead
-          if (touchedProbeMemo.getOrElse(n, false))
-            graft.operators.Dedup.invalidateDocCountCache()
           val t2 = materialize(n)
           n -> (if (t2 >= 0) math.min(t, t2) else t)
         case _ => n -> t

@@ -30,7 +30,7 @@ object Plans {
       "q_cosine_topk" -> "Brute-force top-k: window row_number over codegen'd scores",
       "q_asof_join" -> "AS-OF join: one Exchange + one Sort, carry-forward last() window",
       "q_session_window" -> "Event-time session windows",
-      "q_minhash_neardup" -> "MinHash-LSH: band-bucket self-join, signature/set verify joins broadcast below graft.dedup.broadcastMaxDocs (200k docs) and sort-merge above",
+      "q_minhash_neardup" -> "MinHash-LSH: band-bucket self-join, signature/set verify joins broadcast while the input size estimate is within spark.sql.autoBroadcastJoinThreshold (about 200k docs at the 10 MiB default) and sort-merge above",
       "q_asof_native" -> "NATIVE as-of: custom AsOfJoinExec, two per-side Exchanges, no union/window",
       "q_cube" -> "CUBE grouping sets: one Expand pass, partial HashAggregate before the single shuffle",
       "q_range_frame" -> "Time-RANGE frame: one Exchange + one WindowExec over a 4-column pruned scan",
@@ -115,11 +115,11 @@ object Plans {
       "q_dedup_clusters" -> "Connected-component dedup clusters: prefix-filtered pair graph (lossless Bayardo filter — same pair set as the fenced all-pairs verifier, corpus-scale cost), components via single-task union-find below the 5M-edge cutoff — the tail plan is one narrow shuffle, round-count-free",
       "q_assoc_rules" -> "Association rules: basket matrix collapses to distinct (order, brand) FIRST, pair self-join keyed on the basket id — pair space is |items|^2, never |orders|^2; support thresholds as scalar broadcasts",
       "q_lpa_communities" -> "Label propagation: each round is one join + two aggregates on the |items|^2-bounded edge list; the corpus builds edge weights once — rounds iterate over the EDGE graph, not the corpus",
-      "q_jaccard_prefix" -> "Prefix-filtered Jaccard pairs: rarity-ordered prefix postings probe the full postings (broadcast below the doc cutoff), in-row verify — same output contract as the fenced q_ngram_jaccard at corpus-scale cost",
+      "q_jaccard_prefix" -> "Prefix-filtered Jaccard pairs: rarity-ordered prefix postings probe the full postings (per-doc set table broadcast under the dedup size gate), in-row verify — same output contract as the fenced q_ngram_jaccard at corpus-scale cost",
       "q_item_similarity" -> "Item-item cosine: pair join keyed on the CUSTOMER (the sparse nonzero coordinate) — cost is Σ_customers (items-per-customer)^2, never |items|^2 x |customers|; exact BIGINT dot products, top-3 window per brand",
       "q_recursive_cte" -> "Recursive-CTE hierarchy walk: level-synchronous iteration, each level an equi-join materialized once — the tail plan is the final level's narrow shuffle, no driver-side loop",
       "q_lift_curve" -> "Lift/capture deciles: ONE sort under the ntile window, cumulative windows share it, scalar totals broadcast (1-row nested loop) — deciles, not the corpus, feed every aggregate after the first pass",
-      "q_ngram_jaccard" -> "Exact n-gram Jaccard (the FENCED all-pairs verifier tier): postings self-join on the shingle key with per-doc size tables broadcast below graft.dedup.broadcastMaxDocs — quadratic by DESIGN, ScaleFenced at corpus scale; q_jaccard_prefix is the production path",
+      "q_ngram_jaccard" -> "Exact n-gram Jaccard (the FENCED all-pairs verifier tier): postings self-join on the shingle key with the per-doc size table (one row per doc) always broadcast — quadratic by DESIGN, ScaleFenced at corpus scale; q_jaccard_prefix is the production path",
       "q_khop_reach" -> "k-hop BFS reachability: 4 unrolled levels, each one shuffled frontier-vs-edges semi-join + distinct + anti-join vs discovered — join count bounded by the hop constant, never corpus-quadratic",
       "q_tpch_q16" -> "TPC-H Q16: NOT-IN as broadcast anti-join, part dim broadcast — the two-phase COUNT(DISTINCT supplier) is the only corpus shuffle",
       "q_approx_quantile" -> "Approximate quantiles: ONE shuffle into the partial/final percentile_approx sketch pair, exact p50 audit in the same pass — no windows, no joins",

@@ -103,207 +103,31 @@ object Dedup {
     shinglePostings(df, idCol, textCol, n)
       .select(col("id"), xxhash64(col("shingle")).as("shingle"))
 
-  /** Corpora at or below this doc count broadcast their per-doc
-    * signature/shingle-set tables into the candidate stream; larger corpora
-    * shuffle the candidates against them sort-merge instead. The per-doc
-    * tables carry a ~1 KB array per doc, so the 200k default keeps each
-    * broadcast around ~200 MB — comfortably inside executor memory while
-    * still covering every corpus where the broadcast is the clear win
-    * (candidates ≫ docs). Found empirically: at the 100x scale probe
-    * (500k docs) the unconditioned broadcast OOM'd the driver. ANY
-    * negative value means always broadcast (no probe), 0 never; a
-    * non-numeric value is rejected with the conf key named. Read from the
-    * session conf through [[graft.util.Knob]]. */
-  private[graft] def docBroadcastCutoff(df: DataFrame): Long =
-    graft.util.Knob.long(df.sparkSession, "graft.dedup.broadcastMaxDocs",
-      200000L, "any negative = always broadcast, 0 = never, " +
-        "N > 0 = broadcast up to N docs")
-
-  /** Memoized corpus counts for the broadcast probe, keyed by the
-    * CANONICALIZED analyzed plan (+ owning session + input-file-set token,
-    * see [[memoizedCount]]'s staleness guard): composed queries that
-    * feed one input through several gated operators (q_curation_funnel
-    * pays exact dedup AND cluster canonicals over the same docs) execute
-    * the upstream plan for the probe ONCE, not once per operator. Bounded
-    * LRU — each entry is one plan reference + a Long, and distinct gated
-    * inputs per JVM are few, but the bound makes the worst case explicit. */
-  private val docCountCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[
-        (org.apache.spark.sql.SparkSession,
-          org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String),
-        java.lang.Long](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[
-            (org.apache.spark.sql.SparkSession,
-              org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String),
-            java.lang.Long]): Boolean = size() > 64
-    })
-  private[graft] val docCountProbeRuns =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Total [[memoizedCount]] calls, hit or miss — lets Bench detect
-    * whether a query DEPENDS on the probe memo at all (a before/after
-    * delta), so its noise-guard re-run invalidates the memo only for
-    * probe-gated queries instead of globally (a global clear made a later
-    * unrelated query in the same sweep pay a probe inside its timed
-    * region). */
-  private[graft] val docCountTouches =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Drop all memoized probe counts so the next gated operator pays a
-    * genuinely fresh probe job. Measurement honesty, same contract as
-    * StagedDirs.invalidate: Bench's noise-guard re-run calls this,
-    * otherwise the re-run of a dedup-gated query would skip the probe job
-    * the first run paid and min-merge could mask a probe-path regression
-    * behind the memo. */
-  def invalidateDocCountCache(): Unit = docCountCache.clear()
-
-  /** Staleness token for [[memoizedCount]]'s key: an MD5 over (a) every
-    * path `df.inputFiles` reports — which covers V1 relations, DSv2 file
-    * scans, Hive tables, and custom file relations alike — and (b) one
-    * stat block per file index the plan exposes (per-file length + mtime
-    * from the driver-cached index for V1 HadoopFsRelation and DSv2
-    * FileTable; the index's total size where per-file stats are not
-    * exposed). Paths alone would miss a same-NAME in-place rewrite (a
-    * fixture regenerated under a constant filename); stats alone would
-    * narrow coverage to the two stat-bearing source shapes. Entries are
-    * digested LENGTH-PREFIXED, so no separator choice can make two
-    * different entry sets collide (paths may contain anything but NUL,
-    * including newlines). Non-file inputs contribute nothing and fall
-    * back to plan equality (sound: an in-memory relation's data IS part
-    * of its canonicalized plan). Returns None when some file index
-    * exposes NO per-file stats (a custom non-partitioning-aware
-    * FileIndex): its index-level sizeInBytes may be an estimate, so a
-    * same-name same-estimated-size rewrite would collide — such plans
-    * are not memoized at all rather than memoized with a weaker
-    * guarantee than this contract promises. A catalog-backed table
-    * (CatalogFileIndex — the Hive-metastore shape a production corpus
-    * actually has) is NOT such a case: its listing is materialized via
-    * `filterPartitions(Nil)` into a partitioning-aware index first, so
-    * catalog tables keep full per-file-stat memoization instead of
-    * falling to the probe-every-call path.
-    *
-    * Returning Some for plans with NO file index at all is sound only
-    * when the leaves carry their data or generate it deterministically
-    * (LocalRelation — data is part of the canonicalized plan — Range,
-    * OneRowRelation, in-memory caches of those). An EXTERNAL non-file
-    * leaf (a JDBCRelation, a custom DSv2 table) canonicalizes equal
-    * across server-side data changes, so plan equality would freeze the
-    * count — and round 13 widened this memo to index-parameter
-    * derivation, making a frozen count doubly wrong. Such plans return
-    * None (probe every call). */
-  private def inputFilesToken(df: DataFrame): Option[String] = {
-    import org.apache.spark.sql.catalyst.plans.logical.{
-      LocalRelation, OneRowRelation, Range => LogicalRange}
-    import org.apache.spark.sql.execution.datasources.{
-      CatalogFileIndex, FileIndex, HadoopFsRelation, LogicalRelation,
-      PartitioningAwareFileIndex}
-    import org.apache.spark.sql.execution.datasources.v2.{
-      DataSourceV2Relation, FileTable}
-    val analyzed = df.queryExecution.analyzed
-    // subquery plans (scalar/EXISTS/IN) are NOT reached by collect/
-    // collectLeaves on the outer plan — a filter like `region IN (SELECT
-    // ... FROM jdbc_tbl)` would otherwise pass the leaf guard while its
-    // external subquery changes server-side under an equal canonical plan
-    val allPlans = analyzed +: analyzed.subqueriesAll
-    val indexes: Seq[FileIndex] = allPlans.flatMap(_.collect {
-      case lr: LogicalRelation => lr.relation match {
-        case fs: HadoopFsRelation => Seq(fs.location)
-        case _ => Seq.empty[FileIndex]
-      }
-      case r: DataSourceV2Relation => r.table match {
-        case ft: FileTable => Seq(ft.fileIndex)
-        case _ => Seq.empty[FileIndex]
-      }
-    }).flatten.map {
-      // materialize a catalog table's listing (per-file stats included)
-      case c: CatalogFileIndex => c.filterPartitions(Nil)
-      case other => other
-    }
-    // every leaf must be file-backed or self-describing for plan
-    // equality (+ file token) to imply data equality
-    val leavesGuarded = allPlans.flatMap(_.collectLeaves()).forall {
-      case lr: LogicalRelation => lr.relation.isInstanceOf[HadoopFsRelation]
-      case r: DataSourceV2Relation => r.table.isInstanceOf[FileTable]
-      // a LocalRelation's data IS its canonicalized plan (sound), but the
-      // memo key then RETAINS that data in a JVM-global map — bound the
-      // retention to small fixtures; big in-memory corpora re-probe
-      // (their count is cheap relative to having built them in memory)
-      case l: LocalRelation => l.data.length <= 10000
-      case _: OneRowRelation | _: LogicalRange => true
-      case _ => false
-    }
-    if (!leavesGuarded ||
-        !indexes.forall(_.isInstanceOf[PartitioningAwareFileIndex])) None
-    else {
-      val statEntries: Seq[String] = indexes.map {
-        case p: PartitioningAwareFileIndex =>
-          p.allFiles()
-            .map(f => s"${f.getPath} ${f.getLen} ${f.getModificationTime}")
-            .sorted.mkString("stats:", "|", "")
-        case other => // unreachable (forall guard above); keep total
-          other.inputFiles.sorted.mkString("size-only:", "|",
-            s"|${other.sizeInBytes}")
-      }
-      val entries = (df.inputFiles.toSeq ++ statEntries).sorted
-      val md = java.security.MessageDigest.getInstance("MD5")
-      entries.foreach { e =>
-        val b = e.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        md.update(java.nio.ByteBuffer.allocate(4).putInt(b.length).array())
-        md.update(b)
-      }
-      Some(java.util.Base64.getEncoder.encodeToString(md.digest()))
-    }
+  /** True iff the gated operators may broadcast their per-doc
+    * signature/shingle-set tables into the candidate stream; otherwise
+    * those joins run sort-merge. The gate is Spark's own: the optimizer's
+    * size estimate of the input's `(idCol, textCol)` projection must be at
+    * or below `spark.sql.autoBroadcastJoinThreshold` (a negative threshold
+    * never broadcasts). The per-doc tables carry a ~1 KB array per doc, so
+    * a big corpus must stay off the broadcast path — at the 100x scale
+    * probe (500k docs, ~25 MB estimated) the unconditioned broadcast OOM'd
+    * the driver. At the fixtures' ~51 B per doc the 10 MiB default admits
+    * about 200k docs; clusters with roomier drivers raise the threshold.
+    * The estimate is plan metadata (file sizes scaled to the projected
+    * columns), so no job runs. An input Spark cannot size reports
+    * `spark.sql.defaultSizeInBytes` and is never broadcast: the guard fails
+    * closed. */
+  private def broadcastDocs(df: DataFrame, idCol: String,
+      textCol: String): Boolean = {
+    val threshold =
+      df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    threshold >= 0 && df.select(col(idCol), col(textCol))
+      .queryExecution.optimizedPlan.stats.sizeInBytes <= threshold
   }
 
-  /** Shared with [[Scale.derivedIntKnob]] (round 13): index-parameter
-    * derivation rides the same memoized, staleness-guarded corpus count
-    * as the broadcast probe. */
-  private[graft] def memoizedCount(df: DataFrame): Long = {
-    // STALENESS GUARD: two fresh reads of one parquet path canonicalize
-    // EQUAL (verified empirically — InMemoryFileIndex does not partake in
-    // plan equality), so a plan-only key would keep returning a count
-    // taken before the dir was appended/rewritten and wave a grown corpus
-    // past the broadcast cutoff — the driver-OOM the cutoff exists to
-    // prevent. Folding the input-file token into the key makes a
-    // file-level change (new/removed part files, or a same-name rewrite —
-    // caught by per-file length/mtime) a cache miss.
-    docCountTouches.incrementAndGet()
-    inputFilesToken(df) match {
-      case None =>
-        // a file index without per-file stats cannot be staleness-guarded
-        // (see inputFilesToken): pay the probe every time rather than
-        // memoize with a weaker guarantee — correctness (the OOM cutoff)
-        // beats the probe's one metadata-count job
-        docCountProbeRuns.incrementAndGet()
-        df.count()
-      case Some(token) =>
-        val key =
-          (df.sparkSession, df.queryExecution.analyzed.canonicalized, token)
-        val cached = docCountCache.get(key)
-        if (cached ne null) cached.longValue()
-        else {
-          // count OUTSIDE the map lock — it runs a Spark job; a duplicate
-          // probe under a race is cheaper than serializing jobs on the cache
-          docCountProbeRuns.incrementAndGet()
-          val n = df.count()
-          docCountCache.put(key, java.lang.Long.valueOf(n))
-          n
-        }
-    }
-  }
-
-  /** True iff the doc count clears [[docBroadcastCutoff]]: the gated
-    * operators then broadcast their per-doc tables, else they join them
-    * sort-merge. The count is one lightweight eager job (column-pruned to
-    * a metadata count for parquet inputs), MEMOIZED per canonical input
-    * plan so repeated gated operators over the same input (and re-runs in
-    * bench / the determinism spec) never re-execute the upstream plan for
-    * the probe. */
-  private def broadcastDocs(df: DataFrame): Boolean = {
-    val cut = docBroadcastCutoff(df)
-    cut < 0L || (cut > 0L && memoizedCount(df) <= cut)
-  }
+  /** Kept for callers compiled against the former per-input doc-count
+    * memo; there is no memo any more, so this does nothing. */
+  def invalidateDocCountCache(): Unit = ()
 
   // --- set-similarity core ---------------------------------------------------
   // The pair operators below share these pieces; each operator keeps only
@@ -488,7 +312,8 @@ object Dedup {
     * at 64 bands — so the verified output matches the exact algorithm's
     * output in expectation AND the exact filter guarantees precision. The
     * per-doc signature/shingle-set tables are broadcast into the candidate
-    * stream up to [[docBroadcastCutoff]] docs (default 200k), above which
+    * stream while the input's size estimate clears [[broadcastDocs]]'s
+    * gate (Spark's `spark.sql.autoBroadcastJoinThreshold`), above which
     * those joins run sort-merge.
     */
   def minhashNearDup(df: DataFrame, idCol: String, textCol: String,
@@ -501,7 +326,7 @@ object Dedup {
     require(bands > 0 && k >= bands && k % bands == 0,
       s"minhashNearDup: k ($k) must be a positive multiple of bands " +
         s"($bands) — each band hashes k/bands signature rows")
-    val bcast = broadcastDocs(df)
+    val bcast = broadcastDocs(df, idCol, textCol)
     // postings feed signatures + exact-verify sets; signatures feed banding
     // + both estimate joins
     val postings = pin(hashedPostings(df, idCol, textCol, n))
@@ -809,12 +634,12 @@ object Dedup {
     * the postings, and the rarity ordering puts the high-fanout (common)
     * shingles at prefix tails, so bucket sizes collapse versus the full
     * postings self-join. The per-doc shingle-set table is broadcast into the
-    * candidate stream up to [[docBroadcastCutoff]] docs, same posture as
+    * candidate stream under [[broadcastDocs]]'s size gate, same posture as
     * [[minhashNearDup]].
     */
   def jaccardPrefixPairs(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, threshold: Double = 0.5): DataFrame = {
-    val bcast = broadcastDocs(df)
+    val bcast = broadcastDocs(df, idCol, textCol)
     val sh = pin(hashedPostings(df, idCol, textCol, n))
     // ceil over an epsilon-nudged product: t*sz can land one double ULP
     // ABOVE the exact rational value (e.g. 0.3*10 = 3.0000000000000004),
@@ -863,7 +688,7 @@ object Dedup {
     */
   def containmentPrefixPairs(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, threshold: Double = 0.8): DataFrame = {
-    val bcast = broadcastDocs(df)
+    val bcast = broadcastDocs(df, idCol, textCol)
     val sh = pin(hashedPostings(df, idCol, textCol, n))
     val sizes = broadcast(sizesOf(sh))
     // (1-t) itself is inexact in doubles (1.0-0.8 = 0.19999999999999996),

@@ -13,11 +13,8 @@ object Scale {
   /** Integer scale knob whose DEFAULT derives from the corpus size
     * instead of being a constant: the session conf wins (read through
     * [[graft.util.Knob]], so it is trimmed and must be >= 1), and an unset
-    * or blank key yields `derive(N)` where N is the corpus row count —
-    * memoized per (session, canonical plan, input-file-set token) by
-    * [[Dedup.memoizedCount]], the same staleness-guarded count the dedup
-    * broadcast probe uses, so the probe job runs once per distinct corpus
-    * per JVM no matter how many knobs consult it.
+    * or blank key yields `derive(N)` where N is the corpus row count
+    * (one `corpus.count()` job, paid only by an unconfigured call).
     *
     * Gate queries pin index parameters (centroid counts, LSH bits) to
     * small oracle-replayable values by SETTING the conf (Verify, Bench and
@@ -34,7 +31,7 @@ object Scale {
       derive: Long => Int): Int =
     graft.util.Knob.optInt(s, key,
       "empty/unset = derive from corpus size", min = 1)
-      .getOrElse(derive(Dedup.memoizedCount(corpus)))
+      .getOrElse(derive(corpus.count()))
 
   /** ceil(log2 N) clamped to [4, 24]: random-hyperplane sign bits per LSH
     * band so that 2^bits ~ N keeps expected bucket occupancy O(1) — the

@@ -1,5 +1,13 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+
 import graft.operators.Dedup
 
 /** Dedup ladder on planted near-duplicates: a base corpus plus controlled
@@ -175,172 +183,142 @@ class DedupSpec extends SparkTestBase {
     assert(pref == full)
   }
 
-  test("docBroadcastCutoff: any negative = always, 0 = never, " +
-      "malformed value names the conf key (round-12 contract fix)") {
-    val key = "graft.dedup.broadcastMaxDocs"
-    def withConf[A](v: String)(f: => A): A = {
-      spark.conf.set(key, v)
-      try f finally spark.conf.unset(key)
+  /** The three operators whose per-doc table joins the broadcast gate
+    * decides, over `docs`. */
+  private def gated(docs: DataFrame): Seq[(String, () => DataFrame)] = Seq(
+    "jaccardPrefixPairs" -> (() =>
+      Dedup.jaccardPrefixPairs(docs, "doc_id", "text")),
+    "containmentPrefixPairs" -> (() =>
+      Dedup.containmentPrefixPairs(docs, "doc_id", "text")),
+    "minhashNearDup" -> (() =>
+      Dedup.minhashNearDup(docs, "doc_id", "text")))
+
+  /** `body` with the given session confs set, restored after. */
+  private def withConfs[A](kvs: (String, String)*)(body: => A): A = {
+    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
-    assert(withConf("-1")(Dedup.docBroadcastCutoff(corpus)) == -1L)
-    assert(withConf("-7")(Dedup.docBroadcastCutoff(corpus)) == -7L)
-    assert(withConf("0")(Dedup.docBroadcastCutoff(corpus)) == 0L)
-    assert(withConf("123")(Dedup.docBroadcastCutoff(corpus)) == 123L)
-    // padded values parse like every other graft knob
-    assert(withConf(" 123 ")(Dedup.docBroadcastCutoff(corpus)) == 123L)
-    val e = intercept[IllegalArgumentException] {
-      withConf("not-a-number")(Dedup.docBroadcastCutoff(corpus))
-    }
-    assert(e.getMessage.contains(key),
-      s"error must name the conf key: ${e.getMessage}")
-    assert(e.getMessage.contains("not-a-number"))
-    // semantics: -7 (any negative) must broadcast exactly like -1 — both
-    // skip the count probe entirely
-    val runsBefore = Dedup.docCountProbeRuns.get()
-    withConf("-7")(Dedup.minhashNearDup(corpus, "doc_id", "text").count())
-    withConf("0")(Dedup.minhashNearDup(corpus, "doc_id", "text").count())
-    assert(Dedup.docCountProbeRuns.get() == runsBefore,
-      "negative and zero cutoffs must never run the count probe")
   }
 
-  test("sort-merge verify (cutoff 0) returns the same rows as broadcast " +
-      "verify (cutoff -1)") {
-    val key = "graft.dedup.broadcastMaxDocs"
-    def rows(cutoff: String)(op: => org.apache.spark.sql.DataFrame) = {
-      spark.conf.set(key, cutoff)
-      try {
-        val df = op
-        val smj = df.queryExecution.executedPlan.collect {
-          case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j
-        }
-        (smj.size, df.collect().map(_.toSeq).toSet)
-      } finally spark.conf.unset(key)
-    }
-    // static plans with no size-based broadcast, so cutoff 0 really runs
-    // the per-doc table joins sort-merge
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      Seq[(String, () => org.apache.spark.sql.DataFrame)](
-        "jaccardPrefixPairs" -> (() =>
-          Dedup.jaccardPrefixPairs(corpus, "doc_id", "text")),
-        "containmentPrefixPairs" -> (() =>
-          Dedup.containmentPrefixPairs(corpus, "doc_id", "text")),
-        "minhashNearDup" -> (() =>
-          Dedup.minhashNearDup(corpus, "doc_id", "text"))
-      ).foreach { case (name, op) =>
-        val (smjMerge, merged) = rows("0")(op())
-        val (smjBcast, bcast) = rows("-1")(op())
+  /** The optimizer's size estimate of `docs`' `(doc_id, text)` projection —
+    * what the broadcast gate compares against Spark's threshold. */
+  private def estimate(docs: DataFrame): BigInt =
+    docs.select("doc_id", "text").queryExecution.optimizedPlan.stats.sizeInBytes
+
+  /** True iff `p` outputs a per-doc table's column: the MinHash
+    * signatures (`sig`) or the sorted shingle sets (`set`). */
+  private def outputsPerDoc(p: SparkPlan): Boolean =
+    p.output.exists(a => a.name == "sig" || a.name == "set")
+
+  test("sort-merge verify (threshold -1) returns the same rows as " +
+      "broadcast verify (threshold above the estimate)") {
+    val above = (estimate(corpus) + 1).toString
+    // static plans, so the sort-merge arm really runs the per-doc table
+    // joins sort-merge instead of AQE re-planning them from runtime sizes
+    withConfs("spark.sql.adaptive.enabled" -> "false") {
+      gated(corpus).foreach { case (name, op) =>
+        def rows(threshold: String) =
+          withConfs("spark.sql.autoBroadcastJoinThreshold" -> threshold) {
+            val df = op()
+            val smj = df.queryExecution.executedPlan.collect {
+              case j: SortMergeJoinExec => j
+            }
+            (smj.size, df.collect().map(_.toSeq).toSet)
+          }
+        val (smjMerge, merged) = rows("-1")
+        val (smjBcast, bcast) = rows(above)
         assert(bcast.nonEmpty, s"$name: fixture must yield pairs")
         assert(merged == bcast, s"$name: sort-merge rows differ")
         assert(smjMerge > smjBcast,
-          s"$name: cutoff 0 must plan the doc-table joins sort-merge " +
+          s"$name: threshold -1 must plan the doc-table joins sort-merge " +
             s"($smjMerge vs $smjBcast sort-merge joins)")
       }
-    } finally {
-      spark.conf.unset("spark.sql.adaptive.enabled")
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
   }
 
-  test("broadcast count probe is memoized per canonical input plan") {
-    // derived (non-parquet-metadata) input: probe must execute its plan
-    // at most once across repeated gated operators and re-invocations
-    val derived = corpus.filter($"doc_id" >= 0L)
-      .withColumn("text2", $"text")
-    val runsBefore = Dedup.docCountProbeRuns.get()
-    Dedup.minhashNearDup(derived, "doc_id", "text").count()
-    val afterFirst = Dedup.docCountProbeRuns.get()
-    assert(afterFirst == runsBefore + 1, "first gated call probes once")
-    // same canonical plan, different operator + re-run: no new probe
-    Dedup.jaccardPrefixPairs(derived, "doc_id", "text")
-    Dedup.minhashNearDup(derived, "doc_id", "text").count()
-    assert(Dedup.docCountProbeRuns.get() == afterFirst,
-      "repeat gated calls over the same input must reuse the cached count")
-  }
-
-  test("probe memo goes stale-safe when the corpus files change " +
-      "(a rewritten dir must re-probe, not reuse the old count)") {
-    val dir = graft.util.TempDirs.create("graft-dedup-stale")
-    corpus.limit(2).write.mode("overwrite").parquet(dir.toString)
-    val runs0 = Dedup.docCountProbeRuns.get()
-    Dedup.minhashNearDup(
-      spark.read.parquet(dir.toString), "doc_id", "text").count()
-    assert(Dedup.docCountProbeRuns.get() == runs0 + 1)
-    // grow the corpus in place — fresh reads of the same path canonicalize
-    // EQUAL, so without the file-set token the stale 2-doc count would
-    // wave the bigger corpus past the broadcast cutoff
+  test("the broadcast gate runs no job, follows the size estimate and " +
+      "never broadcasts an input without size statistics") {
+    val dir = graft.util.TempDirs.create("graft-dedup-gate")
     corpus.write.mode("overwrite").parquet(dir.toString)
-    Dedup.minhashNearDup(
-      spark.read.parquet(dir.toString), "doc_id", "text").count()
-    assert(Dedup.docCountProbeRuns.get() == runs0 + 2,
-      "changed input files must force a fresh probe count")
+    // read (and infer the schema) before counting: only the operators'
+    // construction is under test
+    val docs = spark.read.parquet(dir.toString)
+    val est = estimate(docs)
+    assert(jobsDuring(gated(docs).foreach(_._2())) == 0,
+      "constructing the gated operators must start no Spark job")
+    // static plans, so the checks see the gate's choice rather than AQE's
+    // runtime one
+    withConfs("spark.sql.adaptive.enabled" -> "false") {
+      // Spark's own join selection sizes the per-doc tables at 2/3 of the
+      // input's estimate (24- vs 36-byte rows); half the estimate is below
+      // both, so any broadcast of them would be the gate's hint
+      withConfs("spark.sql.autoBroadcastJoinThreshold" -> (est / 2).toString) {
+        gated(docs).foreach { case (name, op) =>
+          assertPerDocSortMerge(s"$name over an estimate above the threshold",
+            op())
+        }
+      }
+      // a DSv2 source without statistics reports
+      // spark.sql.defaultSizeInBytes, whatever its real size
+      val zone = graft.util.TempDirs.create("dedup-kline-gate")
+      java.nio.file.Files.writeString(zone.resolve("BTCUSDT-1m.jsonl"),
+        "alpha beta gamma\ndelta epsilon zeta\nalpha beta gamma\n")
+      val kline = spark.read.format("graft-klines")
+        .option("path", zone.toString).load()
+        .selectExpr("xxhash64(value) AS doc_id", "value AS text")
+      gated(kline).foreach { case (name, op) =>
+        assertPerDocSortMerge(s"$name over an input Spark cannot size", op())
+      }
+    }
   }
 
-  test("probe memo staleness guard catches a same-NAME in-place rewrite " +
-      "(constant filename, different bytes)") {
-    val dir = graft.util.TempDirs.create("graft-dedup-samename")
-    val f = dir.resolve("docs.parquet")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get("/root/testdata/sf0.001/documents.parquet"), f)
-    val runs0 = Dedup.docCountProbeRuns.get()
-    Dedup.minhashNearDup(
-      spark.read.parquet(f.toString), "doc_id", "text").count()
-    assert(Dedup.docCountProbeRuns.get() == runs0 + 1)
-    // replace the SAME path with a different-size file: the path set is
-    // unchanged, so a paths-only token would reuse the stale count
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get("/root/testdata/sf0.01/documents.parquet"), f,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    Dedup.minhashNearDup(
-      spark.read.parquet(f.toString), "doc_id", "text").count()
-    assert(Dedup.docCountProbeRuns.get() == runs0 + 2,
-      "a same-name rewrite that changes the byte size must re-probe")
+  /** `df`'s static plan joins its per-doc tables sort-merge and broadcasts
+    * none of them. */
+  private def assertPerDocSortMerge(what: String, df: DataFrame): Unit = {
+    val plan = df.queryExecution.executedPlan
+    assert(!plan.exists {
+      case b: BroadcastExchangeExec => outputsPerDoc(b)
+      case _ => false
+    }, s"$what: the per-doc tables must not be broadcast:\n$plan")
+    assert(plan.exists {
+      case j: SortMergeJoinExec => outputsPerDoc(j)
+      case _ => false
+    }, s"$what: the per-doc tables must join sort-merge:\n$plan")
   }
 
-  test("invalidateDocCountCache forces a fresh probe " +
-      "(bench noise-guard contract)") {
-    val derived = corpus.filter($"doc_id" >= 0L).withColumn("text3", $"text")
-    Dedup.minhashNearDup(derived, "doc_id", "text").count() // prime
-    val primed = Dedup.docCountProbeRuns.get()
-    Dedup.invalidateDocCountCache()
-    Dedup.minhashNearDup(derived, "doc_id", "text").count()
-    assert(Dedup.docCountProbeRuns.get() == primed + 1,
-      "post-invalidation gated call must pay a genuinely fresh probe job")
-  }
-
-  test("probe memo coverage by source shape (round-13 leaf guard): " +
-      "catalog tables memoize, external non-file leaves probe every call") {
-    // CATALOG-backed table (CatalogFileIndex — the Hive-metastore shape a
-    // production corpus has): the round-13 fix materializes its listing
-    // via filterPartitions(Nil), so it keeps per-file-stat memoization
-    spark.sql("DROP TABLE IF EXISTS dedup_cat_probe")
-    corpus.write.mode("overwrite").saveAsTable("dedup_cat_probe")
-    val cat = spark.table("dedup_cat_probe")
-    val r0 = Dedup.docCountProbeRuns.get()
-    Dedup.minhashNearDup(cat, "doc_id", "text").count()
-    val r1 = Dedup.docCountProbeRuns.get()
-    assert(r1 == r0 + 1, "first catalog-table call probes once")
-    Dedup.minhashNearDup(cat, "doc_id", "text").count()
-    assert(Dedup.docCountProbeRuns.get() == r1,
-      "catalog-backed corpus must reuse the memoized count")
-    spark.sql("DROP TABLE dedup_cat_probe")
-    // EXTERNAL non-file leaf (custom DSv2 table that is not a FileTable):
-    // plan equality cannot see server-side data changes, so such inputs
-    // must pay the probe on every call instead of memoizing a count that
-    // could go stale invisibly
-    val zone = graft.util.TempDirs.create("dedup-kline-probe")
-    java.nio.file.Files.writeString(zone.resolve("BTCUSDT-1m.jsonl"),
-      "alpha beta gamma\ndelta epsilon zeta\nalpha beta gamma\n")
-    val kline = spark.read.format("graft-klines")
-      .option("path", zone.toString).load()
-      .selectExpr("xxhash64(value) AS doc_id", "value AS text")
-    val k0 = Dedup.docCountProbeRuns.get()
-    Dedup.minhashNearDup(kline, "doc_id", "text").count()
-    Dedup.minhashNearDup(kline, "doc_id", "text").count()
-    assert(Dedup.docCountProbeRuns.get() == k0 + 2,
-      "external non-file leaves must probe per call (no staleness guard " +
-        "is possible, so no memoization is allowed)")
+  /** Jobs `body` starts, counted on the listener bus. The bus delivers
+    * asynchronously and in order, so `body` is fenced by two marker jobs:
+    * once the closing marker is seen, every job `body` started was too,
+    * and anything queued before the opening marker is left out. */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val bus = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    val open = s"dedup-spec-open-${java.util.UUID.randomUUID}"
+    val close = s"dedup-spec-close-${java.util.UUID.randomUUID}"
+    def marker(name: String): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(bus)
+    try {
+      marker(open)
+      body
+      marker(close)
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!seen.contains(close) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(seen.contains(close), "closing marker job never delivered")
+      seen.asScala.toSeq.dropWhile(_ != open).drop(1).takeWhile(_ != close).size
+    } finally sc.removeSparkListener(bus)
   }
 
   test("round-14: degenerate index parameters throw at call time — " +

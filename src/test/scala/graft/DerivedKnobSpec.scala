@@ -36,7 +36,7 @@ class DerivedKnobSpec extends SparkTestBase {
     import s2.implicits._
     val corpus = (1 to 100).toDF("x")
     val key = "graft.test.derivedKnob"
-    // no conf -> derived from the (memoized) corpus count
+    // no conf -> derived from the corpus count
     assert(Scale.derivedIntKnob(s2, key, corpus, Scale.deriveCentroids) == 10)
     // a JVM system property is not a second source for graft.* keys
     sys.props(key) = "33"
