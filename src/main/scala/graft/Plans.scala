@@ -95,7 +95,7 @@ object Plans {
       "q_boilerplate" -> "Boilerplate detection: postings + df aggregate + join back — linear shuffles on shingle/doc keys, no pair joins anywhere",
       "q_kn_bigram" -> "Kneser-Ney bigram LM: corpus collapses once to (doc,w1,w2,cnt); every model table re-aggregates from it and broadcasts back — model scales with vocabulary, not corpus",
       "q_graph_jaccard" -> "Neighbor-set Jaccard: wedge equi-join on the shared neighbor (Σ deg² bounded), degree tables broadcast, left-anti vs existing edges",
-      "q_curation_funnel" -> "Curation funnel: three drop-set branches (window dedup, cluster pick, df-share screen) union-distinct into one anti-join — each branch its own proven scale shape",
+      "q_curation_funnel" -> "Curation funnel: one documents read, each doc row flagged by the exact-dup window and left-joined to the near-dup (cluster pick) and boilerplate (df-share screen) drop sets, one row per doc_id each, then one aggregate yields all six columns — no checkpoint, no cross join, each drop set its own proven scale shape",
       "q_aroon" -> "Aroon: window channel extremes + BUCKETED band join picking the last equal bar — equi-join on (symbol, width-14 bucket) probing the 2 adjacent buckets, so join WORK is linear (<=14·28 comparisons per bucket), never bars² per symbol; deterministic tie-break",
       "q_trix" -> "TRIX: triple-EMA recursion as a per-symbol fold (aggregate HOF projection) — zero joins, zero window state",
       "q_split_leakage" -> "Split-leakage audit: prefix-filtered pair stream + two broadcast split joins — corpus-scale safe, no all-pairs anywhere",

@@ -143,9 +143,14 @@ object Ext32Queries {
     * partial-aggregates and shuffles on the shingle/doc key, the
     * 100 TB-safe shape (no pair joins at all).
     */
-  def boilerplate(s: SparkSession, dir: String): DataFrame = {
-    val sh = Dedup.hashedPostings(
-      Tables.documents(s, dir), "doc_id", "text", n = 3)
+  def boilerplate(s: SparkSession, dir: String): DataFrame =
+    boilerplateOn(Tables.documents(s, dir))
+
+  /** [[boilerplate]] over a caller-supplied documents frame (only doc_id
+    * and text are read), so [[Ext33Queries.curationFunnel]] screens the
+    * same read it dedups. */
+  def boilerplateOn(docs: DataFrame): DataFrame = {
+    val sh = Dedup.hashedPostings(docs, "doc_id", "text", n = 3)
     val df = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
     sh.join(df, "shingle")
       .groupBy(col("id").as("doc_id"))

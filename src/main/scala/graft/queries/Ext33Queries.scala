@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.operators.Dedup
 import graft.sources.Tables
 
 /** Round-8 extension batch 3: the language-model / graph / funnel closers.
@@ -23,8 +22,8 @@ import graft.sources.Tables
   * Scale shapes: KN model tables all derive from the (w1,w2) count table
   * and broadcast back (vocabulary-sized, not corpus-sized); the wedge join
   * is the bounded-degree equi-join proven in PlanSpec for adamic-adar; the
-  * funnel unions three doc_id drop sets (each the output of an
-  * already-scale-shaped operator) and anti-joins once.
+  * funnel flags each doc row against three drop rungs (each the output of
+  * an already-scale-shaped operator) and counts them in one aggregate.
   */
 object Ext33Queries {
 
@@ -173,44 +172,39 @@ object Ext33Queries {
     * survives the union of all three (count + chars). The three drop sets
     * are each the output of an independently oracle-gated operator; this
     * query pins their COMPOSITION, the thing a pipeline actually ships.
+    *
+    * One plan over one documents read: every doc row carries its exact-dup
+    * flag (a window over the text hash), is left-joined to the near-dup and
+    * boilerplate drop sets (each one row per doc_id, so the joins never
+    * multiply rows) and all six columns come out of one aggregate. The
+    * same read feeds [[LlmQueries.dedupClustersOn]], so its pinned
+    * postings/prefix plans are the ones q_cluster_canonical and
+    * q_dedup_clusters build next and hit in the cache.
     */
   def curationFunnel(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"),
-      col("n_chars"))
-    // each drop set has TWO consumers (the union feeding the anti-join and
-    // its own count) — lazy localCheckpoints materialize each once instead
-    // of re-running the window / cluster / shingle pipelines per consumer
-    val wExact = Window.partitionBy(md5(col("text"))).orderBy(col("doc_id"))
-    val exactDrop = docs
-      .withColumn("rn", row_number().over(wExact))
-      .filter(col("rn") > 1).select(col("doc_id"))
-      .localCheckpoint(eager = false)
-    val members = LlmQueries.dedupClusters(s, dir)
+    val docs = Tables.documents(s, dir)
     val wCluster = Window.partitionBy(col("cluster_id"))
       .orderBy(col("n_chars").desc, col("doc_id").asc)
-    val nearDrop = members
+    val nearDrop = LlmQueries.dedupClustersOn(docs)
       .join(docs.select(col("doc_id"), col("n_chars")), "doc_id")
       .withColumn("rk", row_number().over(wCluster))
-      .filter(col("rk") > 1).select(col("doc_id"))
-      .localCheckpoint(eager = false)
-    val boilerDrop = Ext32Queries.boilerplate(s, dir).select(col("doc_id"))
-      .localCheckpoint(eager = false)
-    val allDrops = exactDrop.unionByName(nearDrop).unionByName(boilerDrop)
-      .distinct()
-    val kept = docs.join(allDrops, Seq("doc_id"), "left_anti")
-    val counts = Seq(
-      ("exact_drop", exactDrop), ("neardup_drop", nearDrop),
-      ("boilerplate_drop", boilerDrop))
-      .map { case (name, d) =>
-        d.agg(count(lit(1)).as(name))
-      }
-    docs.agg(count(lit(1)).as("n_docs"))
-      .crossJoin(broadcast(counts(0)))
-      .crossJoin(broadcast(counts(1)))
-      .crossJoin(broadcast(counts(2)))
-      .crossJoin(broadcast(
-        kept.agg(count(lit(1)).as("n_kept"),
-          sum(col("n_chars")).as("kept_chars"))))
+      .filter(col("rk") > 1).select(col("doc_id"), lit(true).as("near"))
+    val boilerDrop = Ext32Queries.boilerplateOn(docs)
+      .select(col("doc_id"), lit(true).as("boiler"))
+    val wExact = Window.partitionBy(md5(col("text"))).orderBy(col("doc_id"))
+    val flagged = docs
+      .select(col("doc_id"), col("n_chars"),
+        (row_number().over(wExact) > 1).as("exact"))
+      .join(nearDrop, Seq("doc_id"), "left")
+      .join(boilerDrop, Seq("doc_id"), "left")
+    val kept = !col("exact") && col("near").isNull && col("boiler").isNull
+    flagged.agg(
+      count(lit(1)).as("n_docs"),
+      count(when(col("exact"), 1)).as("exact_drop"),
+      count(col("near")).as("neardup_drop"),
+      count(col("boiler")).as("boilerplate_drop"),
+      count(when(kept, 1)).as("n_kept"),
+      sum(when(kept, col("n_chars"))).as("kept_chars"))
   }
 
   val curationFunnelOracle: String =

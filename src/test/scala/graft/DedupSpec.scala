@@ -1,8 +1,5 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
@@ -247,7 +244,7 @@ class DedupSpec extends SparkTestBase {
     // construction is under test
     val docs = spark.read.parquet(dir.toString)
     val est = estimate(docs)
-    assert(jobsDuring(gated(docs).foreach(_._2())) == 0,
+    assert(JobFence.jobsDuring(spark)(gated(docs).foreach(_._2())) == 0,
       "constructing the gated operators must start no Spark job")
     // static plans, so the checks see the gate's choice rather than AQE's
     // runtime one
@@ -275,6 +272,23 @@ class DedupSpec extends SparkTestBase {
     }
   }
 
+  test("a refused broadcast stays refused when Spark's own join selection " +
+      "would admit the per-doc tables (static plans, threshold one byte " +
+      "under the input estimate)") {
+    val dir = graft.util.TempDirs.create("graft-dedup-closed")
+    corpus.write.mode("overwrite").parquet(dir.toString)
+    val docs = spark.read.parquet(dir.toString)
+    // Spark sizes the per-doc tables at 2/3 of the input's estimate, so
+    // they fit this threshold while the input itself does not
+    withConfs("spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" ->
+          (estimate(docs) - 1).toString) {
+      gated(docs).foreach { case (name, op) =>
+        assertPerDocSortMerge(s"$name one byte under the threshold", op())
+      }
+    }
+  }
+
   /** `df`'s static plan joins its per-doc tables sort-merge and broadcasts
     * none of them. */
   private def assertPerDocSortMerge(what: String, df: DataFrame): Unit = {
@@ -287,38 +301,6 @@ class DedupSpec extends SparkTestBase {
       case j: SortMergeJoinExec => outputsPerDoc(j)
       case _ => false
     }, s"$what: the per-doc tables must join sort-merge:\n$plan")
-  }
-
-  /** Jobs `body` starts, counted on the listener bus. The bus delivers
-    * asynchronously and in order, so `body` is fenced by two marker jobs:
-    * once the closing marker is seen, every job `body` started was too,
-    * and anything queued before the opening marker is left out. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val bus = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
-    }
-    val open = s"dedup-spec-open-${java.util.UUID.randomUUID}"
-    val close = s"dedup-spec-close-${java.util.UUID.randomUUID}"
-    def marker(name: String): Unit = {
-      sc.setJobDescription(name)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-    }
-    sc.addSparkListener(bus)
-    try {
-      marker(open)
-      body
-      marker(close)
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      while (!seen.contains(close) && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      assert(seen.contains(close), "closing marker job never delivered")
-      seen.asScala.toSeq.dropWhile(_ != open).drop(1).takeWhile(_ != close).size
-    } finally sc.removeSparkListener(bus)
   }
 
   test("round-14: degenerate index parameters throw at call time — " +

@@ -2,11 +2,13 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.queries.Ext33Queries
+import graft.operators.Dedup
+import graft.queries.{Ext32Queries, Ext33Queries, LlmQueries}
 import graft.sources.Tables
 
 /** Semantic invariants for batch 3 (KN bigram LM, graph Jaccard, the
-  * curation funnel) — value parity is the DuckDB oracle's job.
+  * curation funnel); value parity is the DuckDB oracle's job, except the
+  * funnel's, which is also recomputed here from the standalone operators.
   */
 class Ext33Spec extends SparkTestBase {
 
@@ -59,5 +61,34 @@ class Ext33Spec extends SparkTestBase {
     // fire and none may go negative (sf0.01's oracle gate covers values)
     assert(Seq(e, nd, b).forall(_ >= 0) && union > 0,
       s"funnel dropped nothing: $e/$nd/$b")
+  }
+
+  test("curation funnel: every column equals its recomputation from the " +
+    "standalone exact, cluster-canonical and boilerplate operators") {
+    val r = Ext33Queries.curationFunnel(spark, sf).head()
+    val docs = Tables.documents(spark, sf)
+    val chars = docs.select("doc_id", "n_chars").collect()
+      .map(d => d.getLong(0) -> d.getLong(1)).toMap
+    val exact = Dedup.exact(docs, "doc_id", "text").collect()
+    val canonical = Ext32Queries.clusterCanonical(spark, sf).collect()
+    val members = LlmQueries.dedupClusters(spark, sf).collect()
+      .map(_.getAs[Long]("doc_id")).toSet
+    val boiler = Ext32Queries.boilerplate(spark, sf)
+    val boilerIds = boiler.select("doc_id").collect().map(_.getLong(0)).toSet
+    Dedup.unpersistIntermediates(blocking = true)
+    // each exact group keeps its minimum doc_id, each cluster its canonical
+    val exactIds = chars.keySet -- exact.map(_.getAs[Long]("keeper_doc_id"))
+    val nearIds = members -- canonical.map(_.getAs[Long]("canonical_id"))
+    val kept = chars -- (exactIds ++ nearIds ++ boilerIds)
+    assert(r.getAs[Long]("n_docs") == chars.size)
+    assert(r.getAs[Long]("exact_drop") ==
+      exact.map(_.getAs[Long]("n_copies") - 1).sum)
+    assert(r.getAs[Long]("neardup_drop") ==
+      canonical.map(_.getAs[Long]("n_members") - 1).sum)
+    assert(r.getAs[Long]("boilerplate_drop") == boiler.count())
+    assert(r.getAs[Long]("n_kept") == kept.size)
+    assert(r.getAs[Long]("kept_chars") == kept.values.sum)
+    // the rungs this corpus plants, so no equality above holds vacuously
+    assert(exactIds.nonEmpty || nearIds.nonEmpty || boilerIds.nonEmpty)
   }
 }

@@ -1020,7 +1020,10 @@ class PlanSpec extends SparkTestBase {
     // cartesian assertion holds for every query in the table).
     final case class Budget(sh: Int, smj: Int, bhj: Int, bnlj: Int, win: Int)
     val budgets = Seq(
-      "q_curation_funnel" -> Budget(6, 1, 0, 4, 0),
+      // one flag aggregate over one documents read: two windows (exact-dup
+      // flag, cluster pick) and four equi-joins (near-dup score join,
+      // boilerplate df join, the two drop-set left joins), no nested loop
+      "q_curation_funnel" -> Budget(6, 1, 3, 0, 2),
       // round-16 memberLabels collapse: the singleton anti-join + corpus
       // re-scan + filter/union/distinct tail left the plan — ZERO
       // exchanges remain (the heavy work sits inside the checkpointed
