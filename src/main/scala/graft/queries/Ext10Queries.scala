@@ -24,42 +24,12 @@ object Ext10Queries {
     * share that partitioning. The reference stores 1h/1d klines; this is the
     * operator that derives one interval from another instead of re-fetching.
     */
-  def ohlcResample(s: SparkSession, dir: String): DataFrame = {
-    Tables.events(s, dir).createOrReplaceTempView("events_ohlc")
-    s.sql(
-      """WITH h AS (
-        |  SELECT event_type, ts_us div 3600000000 * 3600000000 AS hr_us,
-        |    value, ts_us, event_id
-        |  FROM events_ohlc
-        |), w AS (
-        |  SELECT event_type, hr_us, value,
-        |    first_value(value) OVER (PARTITION BY event_type, hr_us
-        |      ORDER BY ts_us, event_id) AS o,
-        |    first_value(value) OVER (PARTITION BY event_type, hr_us
-        |      ORDER BY ts_us DESC, event_id DESC) AS c
-        |  FROM h
-        |)
-        |SELECT event_type, hr_us, MAX(o) AS open, MAX(value) AS high,
-        |  MIN(value) AS low, MAX(c) AS close, COUNT(*) AS n
-        |FROM w GROUP BY event_type, hr_us""".stripMargin)
-  }
+  private val ohlcResampleQ: OracleSql.Dialect => String = OracleSql.barsQ(
+    "SELECT event_type, hr_us, open, high, low, close, vol AS n FROM bars")
 
-  val ohlcResampleOracle: String =
-    """WITH h AS (
-      |  SELECT event_type, epoch_us(ts) // 3600000000 * 3600000000 AS hr_us,
-      |    value, epoch_us(ts) AS ts_us, event_id
-      |  FROM events
-      |), w AS (
-      |  SELECT event_type, hr_us, value,
-      |    first_value(value) OVER (PARTITION BY event_type, hr_us
-      |      ORDER BY ts_us, event_id) AS o,
-      |    first_value(value) OVER (PARTITION BY event_type, hr_us
-      |      ORDER BY ts_us DESC, event_id DESC) AS c
-      |  FROM h
-      |)
-      |SELECT event_type, hr_us, MAX(o) AS open, MAX(value) AS high,
-      |  MIN(value) AS low, MAX(c) AS close, COUNT(*) AS n
-      |FROM w GROUP BY event_type, hr_us""".stripMargin
+  def ohlcResample(s: SparkSession, dir: String): DataFrame =
+    OracleSql.sparkQ(s, dir, ohlcResampleQ)
+  val ohlcResampleOracle: String = ohlcResampleQ(OracleSql.DuckDb)
 
   /** Volume-weighted average price per (type, day): price quantized to its
     * 2-decimal grid, volume integral from the JSON payload — the weighted sum

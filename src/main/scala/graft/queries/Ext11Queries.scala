@@ -263,64 +263,25 @@ object Ext11Queries {
         .select(col("fp"), col("n_tokens"), col("pred_lang"), col("quality"))
     }
 
-  val docPipelineOracle: String = {
-    val stop = TextAnalysis.enStopwords.map("'" + _ + "'").mkString("[", ", ", "]")
-    val scoreExprs = TextAnalysis.langMarkers.map { case (l, m) =>
-      val list = m.map("'" + _ + "'").mkString("[", ", ", "]")
-      s"len(list_intersect(list_distinct(string_split(text, ' ')), $list)) AS s_$l"
-    }.mkString(",\n      |    ")
-    val langs = TextAnalysis.langMarkers.map(_._1)
-    val best = "greatest(" + langs.map("s_" + _).mkString(", ") + ")"
-    val cases = langs.map(l => s"WHEN s_$l = best THEN '$l'").mkString(" ")
+  val docPipelineOracle: String =
     s"""WITH m AS (
        |  SELECT text, md5(text) AS fp,
        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-       |    CAST(length(text) AS DOUBLE) AS chars,
-       |    len(regexp_extract_all(text, '[^A-Za-z0-9 ]')) AS n_punct,
-       |    len(string_split(text, ' ')) AS n_toks,
-       |    len(list_filter(string_split(text, ' '),
-       |        t -> list_contains($stop, t))) AS n_stop,
-       |    CAST(length(replace(text, ' ', '')) AS DOUBLE) AS alpha_chars,
-       |    $scoreExprs
+       |    ${OracleSql.qualityInputs},
+       |    ${OracleSql.langScores}
        |  FROM documents
        |), b AS (
-       |  SELECT *, $best AS best FROM m
+       |  SELECT *, ${OracleSql.langBest} AS best FROM m
        |), q AS (
-       |  SELECT fp, n_tokens,
-       |    CASE WHEN best <= 0 THEN 'und' $cases END AS pred_lang,
-       |    ROUND(
-       |      (chars / (chars + 500.0))
-       |      * (1.0 - n_punct / greatest(chars, 1.0))
-       |      * (CASE WHEN n_stop * 1.0 / n_toks BETWEEN 0.01 AND 0.6
-       |         THEN 1.0 ELSE 0.5 END)
-       |      * (CASE WHEN alpha_chars / n_toks BETWEEN 2.0 AND 12.0
-       |         THEN 1.0 ELSE 0.3 END),
-       |      6) AS quality
+       |  SELECT fp, n_tokens, ${OracleSql.langPredicted} AS pred_lang,
+       |    ${OracleSql.qualityScore} AS quality
        |  FROM b
        |)
        |SELECT DISTINCT fp, n_tokens, pred_lang, quality
        |FROM q WHERE quality > 0.2 AND n_tokens >= 10""".stripMargin
-  }
 
   val bloomCleanOracle: String =
-    """WITH tok AS (
-      |  SELECT doc_id, unnest(string_split(text, ' ')) AS w,
-      |         generate_subscripts(string_split(text, ' '), 1) AS pos
-      |  FROM documents
-      |), sh AS (
-      |  SELECT doc_id,
-      |    w || ' ' || lead(w, 1) OVER win || ' ' || lead(w, 2) OVER win
-      |      || ' ' || lead(w, 3) OVER win || ' ' || lead(w, 4) OVER win
-      |      || ' ' || lead(w, 5) OVER win || ' ' || lead(w, 6) OVER win
-      |      || ' ' || lead(w, 7) OVER win AS s
-      |  FROM tok WINDOW win AS (PARTITION BY doc_id ORDER BY pos)
-      |  QUALIFY lead(w, 7) OVER win IS NOT NULL
-      |), ds AS (SELECT DISTINCT doc_id, s FROM sh),
-      |ev AS (SELECT DISTINCT s FROM ds WHERE doc_id % 100 = 0),
-      |bad AS (
-      |  SELECT DISTINCT t.doc_id FROM ds t JOIN ev ON t.s = ev.s
-      |  WHERE t.doc_id % 100 <> 0
-      |)
-      |SELECT doc_id FROM documents
-      |WHERE doc_id % 100 <> 0 AND doc_id NOT IN (SELECT doc_id FROM bad)""".stripMargin
+    s"""SELECT doc_id FROM documents
+       |WHERE doc_id % 100 <> 0 AND doc_id NOT IN (
+       |  SELECT doc_id FROM (\n${Ext7Queries.decontaminateOracle}\n) q)""".stripMargin
 }

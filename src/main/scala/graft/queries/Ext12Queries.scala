@@ -18,16 +18,7 @@ import graft.sources.Tables
   */
 object Ext12Queries {
 
-  /** DuckDB-side cosine over list columns, same left-to-right double
-    * arithmetic as [[Similarity.cosine]] (mirrors LlmQueries.cosSql).
-    */
-  private val cosSql: (String, String) => String = (a, b) =>
-    s"""list_sum(list_transform(range(1, len($a) + 1),
-       |      i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))
-       |  / (sqrt(list_sum(list_transform(range(1, len($a) + 1),
-       |      i -> CAST($a[i] AS DOUBLE) * CAST($a[i] AS DOUBLE))))
-       |   * sqrt(list_sum(list_transform(range(1, len($b) + 1),
-       |      i -> CAST($b[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))))""".stripMargin
+  import OracleSql.cosSql
 
   // --- semantic dedup ---------------------------------------------------------
 
@@ -242,42 +233,11 @@ object Ext12Queries {
     * exceeds the mean pair flow (data-adaptive threshold, so the graph is
     * meaningful at every scale factor).
     */
-  def triangleCount(s: SparkSession, dir: String): DataFrame = {
-    val flows = Tables.lineitem(s, dir)
-      .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-      .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.supplier(s, dir)),
-        col("l_suppkey") === col("s_suppkey"))
-      .filter(col("c_nationkey") =!= col("s_nationkey"))
-      .groupBy(least(col("c_nationkey"), col("s_nationkey")).as("u"),
-        greatest(col("c_nationkey"), col("s_nationkey")).as("v"))
-      .agg(count(lit(1)).as("w"))
-      // read twice (mean-threshold pass + the filtered edge pass): without
-      // this the 4-table lineitem join — the dominant cost — runs twice
-      .localCheckpoint(eager = false)
-    val avgW = flows.agg(avg(col("w")).as("_avg_w"))
-    val edges = flows.crossJoin(broadcast(avgW))
-      .filter(col("w") > col("_avg_w"))
-      .select(col("u"), col("v"))
-    Graphs.triangleCount(edges, "u", "v")
-  }
+  def triangleCount(s: SparkSession, dir: String): DataFrame =
+    Graphs.triangleCount(OracleSql.tradeEdges(s, dir), "u", "v")
 
-  // pw/e MATERIALIZED: un-materialized, DuckDB re-inlines the 4-table
-  // lineitem join at every one of e's six references (>180 s at sf0.1;
-  // 0.1 s materialized) — the multiply-referenced-CTE pathology pinned
-  // by QueriesSmokeSpec's slow-oracle tripwire.
   val triangleCountOracle: String =
-    """WITH pw AS MATERIALIZED (
-      |  SELECT least(c.c_nationkey, s.s_nationkey) AS u,
-      |    greatest(c.c_nationkey, s.s_nationkey) AS v, COUNT(*) AS w
-      |  FROM lineitem l
-      |    JOIN orders o ON l.l_orderkey = o.o_orderkey
-      |    JOIN customer c ON o.o_custkey = c.c_custkey
-      |    JOIN supplier s ON l.l_suppkey = s.s_suppkey
-      |  WHERE c.c_nationkey <> s.s_nationkey
-      |  GROUP BY 1, 2
-      |), e AS MATERIALIZED (
-      |  SELECT u, v FROM pw WHERE w > (SELECT AVG(w) FROM pw))
+    s"""WITH ${OracleSql.tradeEdgesSql}
       |SELECT
       |  (SELECT COUNT(DISTINCT n) FROM
       |    (SELECT u AS n FROM e UNION ALL SELECT v FROM e)) AS n_nodes,

@@ -389,7 +389,7 @@ object Ext15Queries {
   }
 
   val rrfFusionOracle: String = {
-    val cos = Ext15Queries.cosSql("q.qvec", "c.cvec")
+    val cos = OracleSql.cosSql("q.qvec", "c.cvec")
     s"""WITH q AS (
        |  SELECT vec_id AS query_id, embedding AS qvec FROM embeddings
        |  WHERE vec_id < 10
@@ -421,9 +421,6 @@ object Ext15Queries {
        |QUALIFY row_number() OVER (
        |  PARTITION BY query_id ORDER BY rrf DESC, neighbor_id) <= 5""".stripMargin
   }
-
-  private[queries] def cosSql(a: String, b: String): String =
-    OracleSql.cosSql(a, b)
 
   // --- language modelling ------------------------------------------------------
 

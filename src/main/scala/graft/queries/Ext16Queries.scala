@@ -179,11 +179,9 @@ object Ext16Queries {
     * zero arithmetic-parity surface. One shuffle to the (event_type, hour)
     * grain, then a per-series LAG pass over the tiny candle table.
     */
-  /** The pattern scan rides Ext19's shared hourly-bars CTE via its
-    * sparkQ/duckQ helpers (round-13 consolidation: this file used to carry
-    * a verbatim second copy of the bars resample, which a bars fix in
-    * Ext19 would silently have left behind). The body CONTINUES the WITH
-    * clause sparkQ/duckQ open (`, lagged AS ...`). */
+  /** The pattern scan rides the shared hourly-bars CTE
+    * ([[OracleSql.barsQ]]); the body CONTINUES its WITH clause
+    * (`, lagged AS ...`). */
   private val candleBody: String =
     """, lagged AS (
       |  SELECT event_type, hr_us, open, high, low, close,
@@ -203,10 +201,10 @@ object Ext16Queries {
       |WHERE abs(close - open) <= 0.1 * (high - low)""".stripMargin
 
   def candlePatterns(s: SparkSession, dir: String): DataFrame =
-    Ext19Queries.sparkQ(s, dir, Ext19Queries.barsSpark, candleBody)
+    OracleSql.sparkQ(s, dir, OracleSql.barsQ(candleBody))
 
   val candlePatternsOracle: String =
-    Ext19Queries.duckQ(Ext19Queries.barsDuck, candleBody)
+    OracleSql.barsQ(candleBody)(OracleSql.DuckDb)
 
   // --- prices ------------------------------------------------------------------
 

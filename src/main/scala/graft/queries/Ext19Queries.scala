@@ -3,8 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
-
 /** Round-6 extension: the technical-analysis indicator tier. The reference
   * pipeline's whole analytical surface is kline indicators — SMA-14, RSI and
   * Bollinger bands over hourly candles (`dags/spark_job_1.py:25-46`, the
@@ -37,58 +35,7 @@ import graft.sources.Tables
   */
 object Ext19Queries {
 
-  /** Hourly OHLC bars per event_type — the `q_ohlc_resample` candle shape
-    * with an integer volume column. Spark side (reads the `events_ta` view).
-    */
-  private[queries] val barsSpark: String =
-    """WITH h AS (
-      |  SELECT event_type, ts_us div 3600000000 * 3600000000 AS hr_us,
-      |    value, ts_us, event_id
-      |  FROM events_ta
-      |), w AS (
-      |  SELECT event_type, hr_us, value,
-      |    first_value(value) OVER (PARTITION BY event_type, hr_us
-      |      ORDER BY ts_us, event_id) AS o,
-      |    first_value(value) OVER (PARTITION BY event_type, hr_us
-      |      ORDER BY ts_us DESC, event_id DESC) AS c
-      |  FROM h
-      |)
-      |SELECT event_type, hr_us, MAX(o) AS open, MAX(value) AS high,
-      |  MIN(value) AS low, MAX(c) AS close, CAST(COUNT(*) AS BIGINT) AS vol
-      |FROM w GROUP BY event_type, hr_us""".stripMargin
-
-  /** The identical bars CTE for DuckDB (reads the `events` parquet). */
-  private[queries] val barsDuck: String =
-    """WITH h AS (
-      |  SELECT event_type, epoch_us(ts) // 3600000000 * 3600000000 AS hr_us,
-      |    value, epoch_us(ts) AS ts_us, event_id
-      |  FROM events
-      |), w AS (
-      |  SELECT event_type, hr_us, value,
-      |    first_value(value) OVER (PARTITION BY event_type, hr_us
-      |      ORDER BY ts_us, event_id) AS o,
-      |    first_value(value) OVER (PARTITION BY event_type, hr_us
-      |      ORDER BY ts_us DESC, event_id DESC) AS c
-      |  FROM h
-      |)
-      |SELECT event_type, hr_us, MAX(o) AS open, MAX(value) AS high,
-      |  MIN(value) AS low, MAX(c) AS close, CAST(COUNT(*) AS BIGINT) AS vol
-      |FROM w GROUP BY event_type, hr_us""".stripMargin
-
-  /** Daily bars — same shape at day grain, for the pivot-point query. */
-  private val dailyBarsSpark: String =
-    barsSpark.replace("3600000000", "86400000000")
-  private val dailyBarsDuck: String =
-    barsDuck.replace("3600000000", "86400000000")
-
-  private[queries] def sparkQ(s: SparkSession, dir: String, bars: String,
-      body: String): DataFrame = {
-    Tables.events(s, dir).createOrReplaceTempView("events_ta")
-    s.sql(s"WITH bars AS (\n$bars\n)\n$body")
-  }
-
-  private[queries] def duckQ(bars: String, body: String): String =
-    s"WITH bars AS (\n$bars\n)\n$body"
+  import OracleSql.{DayUs, DuckDb, barsCte, barsQ, sparkQ}
 
   // --- window-expressible indicators (engine-neutral ANSI bodies) ------------
 
@@ -122,8 +69,8 @@ object Ext19Queries {
       |WHERE rn >= 16""".stripMargin
 
   def stochastic(s: SparkSession, dir: String): DataFrame =
-    sparkQ(s, dir, barsSpark, stochasticBody)
-  val stochasticOracle: String = duckQ(barsDuck, stochasticBody)
+    sparkQ(s, dir, barsQ(stochasticBody))
+  val stochasticOracle: String = barsQ(stochasticBody)(DuckDb)
 
   /** Average True Range (SMA-14 variant): true range folds the overnight gap
     * into the bar range via the previous close; first bar falls back to
@@ -156,8 +103,8 @@ object Ext19Queries {
       |WHERE rn >= 15""".stripMargin
 
   def atr(s: SparkSession, dir: String): DataFrame =
-    sparkQ(s, dir, barsSpark, atrBody)
-  val atrOracle: String = duckQ(barsDuck, atrBody)
+    sparkQ(s, dir, barsQ(atrBody))
+  val atrOracle: String = barsQ(atrBody)(DuckDb)
 
   /** Donchian channel (20-bar) with breakout flags against the PREVIOUS bar's
     * channel — comparing against the current channel can never break out
@@ -190,8 +137,8 @@ object Ext19Queries {
       |WHERE rn >= 21""".stripMargin
 
   def donchian(s: SparkSession, dir: String): DataFrame =
-    sparkQ(s, dir, barsSpark, donchianBody)
-  val donchianOracle: String = duckQ(barsDuck, donchianBody)
+    sparkQ(s, dir, barsQ(donchianBody))
+  val donchianOracle: String = barsQ(donchianBody)(DuckDb)
 
   /** On-balance volume: cumulative volume signed by the close-to-close
     * direction. All-integer arithmetic after the sign cast, so the running
@@ -210,8 +157,8 @@ object Ext19Queries {
       |)""".stripMargin
 
   def obv(s: SparkSession, dir: String): DataFrame =
-    sparkQ(s, dir, barsSpark, obvBody)
-  val obvOracle: String = duckQ(barsDuck, obvBody)
+    sparkQ(s, dir, barsQ(obvBody))
+  val obvOracle: String = barsQ(obvBody)(DuckDb)
 
   /** Williams %R: the stochastic's mirror, scaled to [−100, 0]. The `+ 0`
     * collapses IEEE −0.0 to +0.0 (when close == channel high, DuckDB's ROUND
@@ -232,8 +179,8 @@ object Ext19Queries {
       |WHERE rn >= 14""".stripMargin
 
   def williamsR(s: SparkSession, dir: String): DataFrame =
-    sparkQ(s, dir, barsSpark, williamsBody)
-  val williamsROracle: String = duckQ(barsDuck, williamsBody)
+    sparkQ(s, dir, barsQ(williamsBody))
+  val williamsROracle: String = barsQ(williamsBody)(DuckDb)
 
   /** Money Flow Index: volume-weighted RSI over the typical price. Equal
     * consecutive typical prices contribute to neither flow (the published
@@ -267,8 +214,8 @@ object Ext19Queries {
       |WHERE rn >= 15""".stripMargin
 
   def mfi(s: SparkSession, dir: String): DataFrame =
-    sparkQ(s, dir, barsSpark, mfiBody)
-  val mfiOracle: String = duckQ(barsDuck, mfiBody)
+    sparkQ(s, dir, barsQ(mfiBody))
+  val mfiOracle: String = barsQ(mfiBody)(DuckDb)
 
   /** Floor-trader pivot points from the PREVIOUS day's OHLC, with today's
     * close classified against the R1/S1 band — daily bars, one lag.
@@ -299,8 +246,8 @@ object Ext19Queries {
       |)""".stripMargin
 
   def pivotPoints(s: SparkSession, dir: String): DataFrame =
-    sparkQ(s, dir, dailyBarsSpark, pivotBody)
-  val pivotPointsOracle: String = duckQ(dailyBarsDuck, pivotBody)
+    sparkQ(s, dir, barsQ(pivotBody, DayUs))
+  val pivotPointsOracle: String = barsQ(pivotBody, DayUs)(DuckDb)
 
   /** Commodity Channel Index: deviation of the typical price from its 20-bar
     * SMA, scaled by the window's mean absolute deviation. MAD has no window
@@ -310,10 +257,8 @@ object Ext19Queries {
     * abs-sum sequential and bit-equal. The list is bounded at 20 elements —
     * constant memory per row, window-shuffle scale shape unchanged.
     */
-  def cci(s: SparkSession, dir: String): DataFrame = {
-    Tables.events(s, dir).createOrReplaceTempView("events_ta")
-    s.sql(s"""WITH bars AS (\n$barsSpark\n)
-      |SELECT event_type, hr_us, ROUND((tp - sma_tp)
+  def cci(s: SparkSession, dir: String): DataFrame =
+    sparkQ(s, dir, barsQ("""SELECT event_type, hr_us, ROUND((tp - sma_tp)
       |    / NULLIF(CAST(0.015 AS DOUBLE) * (aggregate(tps, CAST(0.0 AS DOUBLE),
       |      (acc, x) -> acc + ABS(x - sma_tp)) / 20), 0), 6) AS cci
       |FROM (
@@ -328,12 +273,10 @@ object Ext19Queries {
       |  WINDOW w20 AS (PARTITION BY event_type ORDER BY hr_us
       |    ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
       |)
-      |WHERE rn >= 20""".stripMargin)
-  }
+      |WHERE rn >= 20""".stripMargin))
 
   val cciOracle: String =
-    s"""WITH bars AS (\n$barsDuck\n)
-      |SELECT event_type, hr_us, ROUND((tp - sma_tp)
+    barsQ("""SELECT event_type, hr_us, ROUND((tp - sma_tp)
       |    / NULLIF(CAST(0.015 AS DOUBLE) * (list_sum(list_transform(tps,
       |      x -> ABS(x - sma_tp))) / 20), 0), 6) AS cci
       |FROM (
@@ -348,7 +291,7 @@ object Ext19Queries {
       |  WINDOW w20 AS (PARTITION BY event_type ORDER BY hr_us
       |    ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
       |)
-      |WHERE rn >= 20""".stripMargin
+      |WHERE rn >= 20""".stripMargin)(DuckDb)
 
   // --- recursive folds (per-symbol sorted-series state) ----------------------
 
@@ -360,8 +303,7 @@ object Ext19Queries {
     * Scala, `CAST(2.0 AS DOUBLE)/13` in the oracle).
     */
   def macd(s: SparkSession, dir: String): DataFrame = {
-    Tables.events(s, dir).createOrReplaceTempView("events_ta")
-    val bars = s.sql(s"WITH b AS (\n$barsSpark\n) SELECT event_type, hr_us, close FROM b")
+    val bars = sparkQ(s, dir, barsQ("SELECT event_type, hr_us, close FROM bars"))
     val a12 = lit(2.0 / 13.0)
     val a26 = lit(2.0 / 27.0)
     val a9 = lit(2.0 / 10.0)
@@ -393,7 +335,7 @@ object Ext19Queries {
   }
 
   val macdOracle: String =
-    s"""WITH RECURSIVE bars AS MATERIALIZED (\n$barsDuck\n),
+    s"""WITH RECURSIVE ${barsCte(DuckDb, materialized = true)},
       |seq AS MATERIALIZED (
       |  SELECT event_type, close,
       |    CAST(row_number() OVER (PARTITION BY event_type ORDER BY hr_us)
@@ -431,9 +373,7 @@ object Ext19Queries {
     * keeps per symbol.
     */
   def heikinAshi(s: SparkSession, dir: String): DataFrame = {
-    Tables.events(s, dir).createOrReplaceTempView("events_ta")
-    val bars = s.sql(
-      s"WITH b AS (\n$barsSpark\n) SELECT event_type, hr_us, open, high, low, close FROM b")
+    val bars = sparkQ(s, dir, barsQ("SELECT event_type, hr_us, open, high, low, close FROM bars"))
     val vals = array_sort(col("raw"))
     val b1 = element_at(vals, 1)
     val haC1 = (b1.getField("open") + b1.getField("high")
@@ -465,7 +405,7 @@ object Ext19Queries {
   }
 
   val heikinAshiOracle: String =
-    s"""WITH RECURSIVE bars AS MATERIALIZED (\n$barsDuck\n),
+    s"""WITH RECURSIVE ${barsCte(DuckDb, materialized = true)},
       |seq AS MATERIALIZED (
       |  SELECT event_type, open, high, low, close,
       |    CAST(row_number() OVER (PARTITION BY event_type ORDER BY hr_us)

@@ -29,57 +29,16 @@ import graft.sources.Tables
   */
 object Ext20Queries {
 
-  /** The nation trade-flow edge list: customer nation — supplier nation
-    * pairs weighted by line count, thresholded above the mean weight (same
-    * graph as `q_triangle_count`, `graft.operators.Graphs` scaladoc).
-    */
-  private def nationFlowEdges(s: SparkSession, dir: String): DataFrame = {
-    val flows = Tables.lineitem(s, dir)
-      .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-      .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.supplier(s, dir)),
-        col("l_suppkey") === col("s_suppkey"))
-      .filter(col("c_nationkey") =!= col("s_nationkey"))
-      .groupBy(least(col("c_nationkey"), col("s_nationkey")).as("u"),
-        greatest(col("c_nationkey"), col("s_nationkey")).as("v"))
-      .agg(count(lit(1)).as("w"))
-      // read twice (mean-threshold pass + the filtered edge pass): without
-      // this the 4-table lineitem join — the dominant cost — runs twice
-      .localCheckpoint(eager = false)
-    val avgW = flows.agg(avg(col("w")).as("_avg_w"))
-    flows.crossJoin(broadcast(avgW))
-      .filter(col("w") > col("_avg_w"))
-      .select(col("u"), col("v"))
-  }
-
-  // MATERIALIZED: pw (the 4-table lineitem join, the dominant cost) is
-  // referenced twice by e, and e is referenced by every consumer — DuckDB
-  // inlines un-materialized CTEs at each reference, re-running the join
-  // per copy (>180 s at sf0.1 vs 0.1 s materialized; the same pathology
-  // as the k-core oracles, see QueriesSmokeSpec's slow-oracle tripwire).
-  private val nationFlowEdgesSql: String =
-    """pw AS MATERIALIZED (
-      |  SELECT least(c.c_nationkey, s.s_nationkey) AS u,
-      |    greatest(c.c_nationkey, s.s_nationkey) AS v, COUNT(*) AS w
-      |  FROM lineitem l
-      |    JOIN orders o ON l.l_orderkey = o.o_orderkey
-      |    JOIN customer c ON o.o_custkey = c.c_custkey
-      |    JOIN supplier s ON l.l_suppkey = s.s_suppkey
-      |  WHERE c.c_nationkey <> s.s_nationkey
-      |  GROUP BY 1, 2
-      |), e AS MATERIALIZED (
-      |  SELECT u, v FROM pw WHERE w > (SELECT AVG(w) FROM pw))""".stripMargin
-
   /** Adamic–Adar link prediction over the trade graph
     * ([[Graphs.adamicAdar]]): which non-adjacent nation pairs share the most
     * (inverse-log-weighted) trading neighbors.
     */
   def adamicAdar(s: SparkSession, dir: String): DataFrame =
-    Graphs.adamicAdar(nationFlowEdges(s, dir), "u", "v")
+    Graphs.adamicAdar(OracleSql.tradeEdges(s, dir), "u", "v")
       .select(col("u"), col("v"), col("common"), col("aa_score"))
 
   val adamicAdarOracle: String =
-    s"""WITH $nationFlowEdgesSql,
+    s"""WITH ${OracleSql.tradeEdgesSql},
       |adj AS MATERIALIZED (
       |  SELECT u AS z, v AS n FROM e UNION ALL SELECT v AS z, u AS n FROM e),
       |deg AS (SELECT z, COUNT(*) AS d FROM adj GROUP BY z),
@@ -103,7 +62,7 @@ object Ext20Queries {
     * one shuffled semi-join + distinct, all integer arithmetic (exact).
     */
   def khopReach(s: SparkSession, dir: String): DataFrame = {
-    val e = nationFlowEdges(s, dir)
+    val e = OracleSql.tradeEdges(s, dir)
     val adj = e.select(col("u").as("src"), col("v").as("dst"))
       .unionAll(e.select(col("v").as("src"), col("u").as("dst")))
       .distinct()
@@ -125,7 +84,7 @@ object Ext20Queries {
   }
 
   val khopReachOracle: String =
-    s"""WITH $nationFlowEdgesSql,
+    s"""WITH ${OracleSql.tradeEdgesSql},
       |adj AS MATERIALIZED (SELECT DISTINCT * FROM (
       |  SELECT u AS src, v AS dst FROM e UNION ALL SELECT v, u FROM e)),
       |h0 AS (SELECT n_nationkey AS node FROM nation WHERE n_regionkey = 0),

@@ -180,20 +180,8 @@ object Ext21Queries {
     * struct-fold shape and recursive-CTE oracle as `q_macd`.
     */
   def kalman1d(s: SparkSession, dir: String): DataFrame = {
-    Tables.events(s, dir).createOrReplaceTempView("events_ta")
-    val bars = s.sql(
-      """WITH h AS (
-        |  SELECT event_type, ts_us div 3600000000 * 3600000000 AS hr_us,
-        |    value, ts_us, event_id
-        |  FROM events_ta
-        |), w AS (
-        |  SELECT event_type, hr_us, value,
-        |    first_value(value) OVER (PARTITION BY event_type, hr_us
-        |      ORDER BY ts_us DESC, event_id DESC) AS c
-        |  FROM h
-        |)
-        |SELECT event_type, hr_us, MAX(c) AS close
-        |FROM w GROUP BY event_type, hr_us""".stripMargin)
+    val bars = OracleSql.sparkQ(s, dir,
+      OracleSql.barsQ("SELECT event_type, hr_us, close FROM bars"))
     val vals = transform(array_sort(col("raw")), x => x.getField("close"))
     val seed = struct(element_at(vals, 1).as("x"), lit(1.0).as("p"))
     val folded = aggregate(
@@ -215,19 +203,8 @@ object Ext21Queries {
   }
 
   val kalman1dOracle: String =
-    """WITH RECURSIVE h AS (
-      |  SELECT event_type, epoch_us(ts) // 3600000000 * 3600000000 AS hr_us,
-      |    value, epoch_us(ts) AS ts_us, event_id
-      |  FROM events
-      |), w AS (
-      |  SELECT event_type, hr_us, value,
-      |    first_value(value) OVER (PARTITION BY event_type, hr_us
-      |      ORDER BY ts_us DESC, event_id DESC) AS c
-      |  FROM h
-      |), bars AS MATERIALIZED (
-      |  SELECT event_type, hr_us, MAX(c) AS close
-      |  FROM w GROUP BY event_type, hr_us
-      |), seq AS MATERIALIZED (
+    s"""WITH RECURSIVE ${OracleSql.barsCte(OracleSql.DuckDb, materialized = true)},
+      |seq AS MATERIALIZED (
       |  SELECT event_type, close,
       |    CAST(row_number() OVER (PARTITION BY event_type ORDER BY hr_us)
       |      AS BIGINT) AS i
@@ -247,18 +224,6 @@ object Ext21Queries {
       |  ROUND(r.x, 6) AS x_est, ROUND(r.p, 6) AS p_est
       |FROM rec r JOIN nn ON nn.event_type = r.event_type AND r.i = nn.n""".stripMargin
 
-  private val tradeEdgesSql: String =
-    """pw AS (
-      |  SELECT least(c.c_nationkey, s.s_nationkey) AS u,
-      |    greatest(c.c_nationkey, s.s_nationkey) AS v, COUNT(*) AS w
-      |  FROM lineitem l
-      |    JOIN orders o ON l.l_orderkey = o.o_orderkey
-      |    JOIN customer c ON o.o_custkey = c.c_custkey
-      |    JOIN supplier s ON l.l_suppkey = s.s_suppkey
-      |  WHERE c.c_nationkey <> s.s_nationkey
-      |  GROUP BY 1, 2
-      |), e AS MATERIALIZED (SELECT u, v FROM pw WHERE w > (SELECT AVG(w) FROM pw))""".stripMargin
-
   /** 3-round 2-core peel over the trade graph: iteratively drop nodes of
     * degree < 2 and the edges touching them (three unrolled rounds — fixed
     * deterministic semantics; the oracle replays the identical rounds).
@@ -266,25 +231,11 @@ object Ext21Queries {
     * shape (each round: degree aggregate + semi-join, one shuffle pair).
     */
   def twoCore(s: SparkSession, dir: String): DataFrame = {
-    val e0 = {
-      val flows = Tables.lineitem(s, dir)
-        .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-        .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.supplier(s, dir)),
-          col("l_suppkey") === col("s_suppkey"))
-        .filter(col("c_nationkey") =!= col("s_nationkey"))
-        .groupBy(least(col("c_nationkey"), col("s_nationkey")).as("u"),
-          greatest(col("c_nationkey"), col("s_nationkey")).as("v"))
-        .agg(count(lit(1)).as("w"))
-      val avgW = e0Avg(flows)
-      flows.crossJoin(broadcast(avgW)).filter(col("w") > col("_avg_w"))
-        .select(col("u"), col("v"))
-        // each peel round reads its input ~3 times (degree pass + two
-        // semi-joins): without truncating the lineage the 4-table edge
-        // build would be re-planned ~3^rounds times (measured 23 s vs ~2 s
-        // at sf0.1). Same lazy-checkpoint idiom as Graphs.triangleCount.
-        .localCheckpoint(eager = false)
-    }
+    // each peel round reads its input ~3 times (degree pass + two
+    // semi-joins): the edge list and every round are lazily checkpointed,
+    // else the 4-table edge build is re-planned ~3^rounds times (measured
+    // 23 s vs ~2 s at sf0.1)
+    val e0 = OracleSql.tradeEdges(s, dir)
     def peel(e: DataFrame): DataFrame = {
       val deg = e.select(col("u").as("node")).unionAll(e.select(col("v").as("node")))
         .groupBy("node").agg(count(lit(1)).as("d"))
@@ -306,11 +257,8 @@ object Ext21Queries {
         coalesce(col("in_2core"), lit(0)).as("in_2core"))
   }
 
-  private def e0Avg(flows: DataFrame): DataFrame =
-    flows.agg(avg(col("w")).as("_avg_w"))
-
   val twoCoreOracle: String =
-    s"""WITH $tradeEdgesSql,
+    s"""WITH ${OracleSql.tradeEdgesSql},
       |d1 AS MATERIALIZED (SELECT node FROM (SELECT u AS node FROM e UNION ALL SELECT v FROM e)
       |  GROUP BY node HAVING COUNT(*) >= 2),
       |e1 AS MATERIALIZED (SELECT u, v FROM e WHERE u IN (SELECT node FROM d1)

@@ -20,61 +20,15 @@ import graft.sources.Tables
   */
 object Ext22Queries {
 
+  import OracleSql.{DuckDb, barsQ, retsQ, sparkQ}
+
   /** Longest up-streak per symbol via gaps-and-islands: direction flag per
     * hourly bar, island id = row_number − row_number-within-direction (all
     * integer), then max island length. The islands idiom runs entirely
     * inside the symbol partition — one bar shuffle + one window pass.
     */
-  def streaks(s: SparkSession, dir: String): DataFrame = {
-    Tables.events(s, dir).createOrReplaceTempView("events_ta")
-    s.sql(
-      """WITH h AS (
-        |  SELECT event_type, ts_us div 3600000000 * 3600000000 AS hr_us,
-        |    value, ts_us, event_id
-        |  FROM events_ta
-        |), w AS (
-        |  SELECT event_type, hr_us, value,
-        |    first_value(value) OVER (PARTITION BY event_type, hr_us
-        |      ORDER BY ts_us DESC, event_id DESC) AS c
-        |  FROM h
-        |), bars AS (
-        |  SELECT event_type, hr_us, MAX(c) AS close
-        |  FROM w GROUP BY event_type, hr_us
-        |), d AS (
-        |  SELECT event_type, hr_us,
-        |    CASE WHEN close > lag(close) OVER wb THEN 1 ELSE 0 END AS up,
-        |    CAST(row_number() OVER wb AS BIGINT) AS rn
-        |  FROM bars WINDOW wb AS (PARTITION BY event_type ORDER BY hr_us)
-        |), isl AS (
-        |  SELECT event_type, up,
-        |    rn - CAST(row_number() OVER (PARTITION BY event_type, up
-        |      ORDER BY rn) AS BIGINT) AS grp
-        |  FROM d
-        |), runs AS (
-        |  SELECT event_type, up, grp, CAST(COUNT(*) AS BIGINT) AS len
-        |  FROM isl GROUP BY event_type, up, grp
-        |)
-        |SELECT event_type,
-        |  MAX(CASE WHEN up = 1 THEN len ELSE 0 END) AS max_up_streak,
-        |  MAX(CASE WHEN up = 0 THEN len ELSE 0 END) AS max_down_streak,
-        |  CAST(SUM(CASE WHEN up = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_up_runs
-        |FROM runs GROUP BY event_type""".stripMargin)
-  }
-
-  val streaksOracle: String =
-    """WITH h AS (
-      |  SELECT event_type, epoch_us(ts) // 3600000000 * 3600000000 AS hr_us,
-      |    value, epoch_us(ts) AS ts_us, event_id
-      |  FROM events
-      |), w AS (
-      |  SELECT event_type, hr_us, value,
-      |    first_value(value) OVER (PARTITION BY event_type, hr_us
-      |      ORDER BY ts_us DESC, event_id DESC) AS c
-      |  FROM h
-      |), bars AS (
-      |  SELECT event_type, hr_us, MAX(c) AS close
-      |  FROM w GROUP BY event_type, hr_us
-      |), d AS (
+  private val streaksBody: String =
+    """, d AS (
       |  SELECT event_type, hr_us,
       |    CASE WHEN close > lag(close) OVER wb THEN 1 ELSE 0 END AS up,
       |    CAST(row_number() OVER wb AS BIGINT) AS rn
@@ -93,6 +47,10 @@ object Ext22Queries {
       |  MAX(CASE WHEN up = 0 THEN len ELSE 0 END) AS max_down_streak,
       |  CAST(SUM(CASE WHEN up = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_up_runs
       |FROM runs GROUP BY event_type""".stripMargin
+
+  def streaks(s: SparkSession, dir: String): DataFrame =
+    sparkQ(s, dir, barsQ(streaksBody))
+  val streaksOracle: String = barsQ(streaksBody)(DuckDb)
 
   /** Calendar seasonality: (day-of-week, hour-of-day) activity profile per
     * event type — each cell's share of its stream plus the seasonal index
@@ -262,66 +220,8 @@ object Ext22Queries {
     * Gram shape as `q_power_iteration` — corpus collapses before any wide
     * state.
     */
-  def portfolioVar(s: SparkSession, dir: String): DataFrame = {
-    Tables.events(s, dir).createOrReplaceTempView("events_ta")
-    s.sql(
-      """WITH h AS (
-        |  SELECT event_type, ts_us div 3600000000 * 3600000000 AS hr_us,
-        |    value, ts_us, event_id
-        |  FROM events_ta
-        |), w AS (
-        |  SELECT event_type, hr_us, value,
-        |    first_value(value) OVER (PARTITION BY event_type, hr_us
-        |      ORDER BY ts_us DESC, event_id DESC) AS c
-        |  FROM h
-        |), bars AS (
-        |  SELECT event_type, hr_us, MAX(c) AS close
-        |  FROM w GROUP BY event_type, hr_us
-        |), r AS (
-        |  SELECT event_type, hr_us,
-        |    ln(close / lag(close) OVER (PARTITION BY event_type
-        |      ORDER BY hr_us)) AS ret
-        |  FROM bars
-        |), rr AS (SELECT * FROM r WHERE ret IS NOT NULL),
-        |pair AS (
-        |  SELECT a.event_type AS ta, b.event_type AS tb,
-        |    COUNT(*) AS n, SUM(a.ret) AS sa, SUM(b.ret) AS sb,
-        |    SUM(a.ret * b.ret) AS sab
-        |  FROM rr a JOIN rr b ON a.hr_us = b.hr_us
-        |  GROUP BY a.event_type, b.event_type
-        |), cov AS (
-        |  SELECT ta, tb,
-        |    sab / n - (sa / n) * (sb / n) AS c
-        |  FROM pair
-        |), k AS (SELECT CAST(COUNT(DISTINCT ta) AS BIGINT) AS nk FROM cov)
-        |SELECT
-        |  ROUND(SUM(c) / (nk * nk), 6) AS portfolio_var,
-        |  ROUND(SUM(CASE WHEN ta = tb THEN sqrt(c) ELSE 0 END) / nk
-        |    / sqrt(SUM(c) / (nk * nk)), 6) AS diversification_ratio,
-        |  CAST(nk AS INT) AS n_assets
-        |FROM cov CROSS JOIN k GROUP BY nk""".stripMargin)
-  }
-
-  val portfolioVarOracle: String =
-    """WITH h AS (
-      |  SELECT event_type, epoch_us(ts) // 3600000000 * 3600000000 AS hr_us,
-      |    value, epoch_us(ts) AS ts_us, event_id
-      |  FROM events
-      |), w AS (
-      |  SELECT event_type, hr_us, value,
-      |    first_value(value) OVER (PARTITION BY event_type, hr_us
-      |      ORDER BY ts_us DESC, event_id DESC) AS c
-      |  FROM h
-      |), bars AS (
-      |  SELECT event_type, hr_us, MAX(c) AS close
-      |  FROM w GROUP BY event_type, hr_us
-      |), r AS (
-      |  SELECT event_type, hr_us,
-      |    ln(close / lag(close) OVER (PARTITION BY event_type
-      |      ORDER BY hr_us)) AS ret
-      |  FROM bars
-      |), rr AS (SELECT * FROM r WHERE ret IS NOT NULL),
-      |pair AS (
+  private val portfolioVarBody: String =
+    """, pair AS (
       |  SELECT a.event_type AS ta, b.event_type AS tb,
       |    COUNT(*) AS n, SUM(a.ret) AS sa, SUM(b.ret) AS sb,
       |    SUM(a.ret * b.ret) AS sab
@@ -339,67 +239,16 @@ object Ext22Queries {
       |  CAST(nk AS INT) AS n_assets
       |FROM cov CROSS JOIN k GROUP BY nk""".stripMargin
 
+  def portfolioVar(s: SparkSession, dir: String): DataFrame =
+    sparkQ(s, dir, retsQ(portfolioVarBody))
+  val portfolioVarOracle: String = retsQ(portfolioVarBody)(DuckDb)
+
   /** Jarque-Bera normality statistic per symbol over hourly log returns:
     * JB = n/6·(S² + K²/4) from the same central-moment aggregates as
     * `q_moments` (round-6 double sums; n is exact).
     */
-  def jarqueBera(s: SparkSession, dir: String): DataFrame = {
-    Tables.events(s, dir).createOrReplaceTempView("events_ta")
-    s.sql(
-      """WITH h AS (
-        |  SELECT event_type, ts_us div 3600000000 * 3600000000 AS hr_us,
-        |    value, ts_us, event_id
-        |  FROM events_ta
-        |), w AS (
-        |  SELECT event_type, hr_us, value,
-        |    first_value(value) OVER (PARTITION BY event_type, hr_us
-        |      ORDER BY ts_us DESC, event_id DESC) AS c
-        |  FROM h
-        |), bars AS (
-        |  SELECT event_type, hr_us, MAX(c) AS close
-        |  FROM w GROUP BY event_type, hr_us
-        |), r AS (
-        |  SELECT event_type,
-        |    ln(close / lag(close) OVER (PARTITION BY event_type
-        |      ORDER BY hr_us)) AS ret
-        |  FROM bars
-        |), rr AS (SELECT * FROM r WHERE ret IS NOT NULL),
-        |m AS (
-        |  SELECT event_type, AVG(ret) AS mu FROM rr GROUP BY event_type
-        |)
-        |SELECT rr.event_type, CAST(COUNT(*) AS BIGINT) AS n,
-        |  ROUND(AVG(POW(ret - mu, 3)) / POW(AVG(POW(ret - mu, 2)), 1.5), 6)
-        |    AS skew,
-        |  ROUND(AVG(POW(ret - mu, 4)) / POW(AVG(POW(ret - mu, 2)), 2) - 3, 6)
-        |    AS ex_kurt,
-        |  ROUND(CAST(COUNT(*) AS DOUBLE) / 6 * (
-        |    POW(AVG(POW(ret - mu, 3)) / POW(AVG(POW(ret - mu, 2)), 1.5), 2)
-        |    + POW(AVG(POW(ret - mu, 4)) / POW(AVG(POW(ret - mu, 2)), 2) - 3, 2)
-        |      / 4), 6) AS jarque_bera
-        |FROM rr JOIN m ON rr.event_type = m.event_type
-        |GROUP BY rr.event_type""".stripMargin)
-  }
-
-  val jarqueBeraOracle: String =
-    """WITH h AS (
-      |  SELECT event_type, epoch_us(ts) // 3600000000 * 3600000000 AS hr_us,
-      |    value, epoch_us(ts) AS ts_us, event_id
-      |  FROM events
-      |), w AS (
-      |  SELECT event_type, hr_us, value,
-      |    first_value(value) OVER (PARTITION BY event_type, hr_us
-      |      ORDER BY ts_us DESC, event_id DESC) AS c
-      |  FROM h
-      |), bars AS (
-      |  SELECT event_type, hr_us, MAX(c) AS close
-      |  FROM w GROUP BY event_type, hr_us
-      |), r AS (
-      |  SELECT event_type,
-      |    ln(close / lag(close) OVER (PARTITION BY event_type
-      |      ORDER BY hr_us)) AS ret
-      |  FROM bars
-      |), rr AS (SELECT * FROM r WHERE ret IS NOT NULL),
-      |m AS (
+  private val jarqueBeraBody: String =
+    """, m AS (
       |  SELECT event_type, AVG(ret) AS mu FROM rr GROUP BY event_type
       |)
       |SELECT rr.event_type, CAST(COUNT(*) AS BIGINT) AS n,
@@ -413,4 +262,8 @@ object Ext22Queries {
       |      / 4), 6) AS jarque_bera
       |FROM rr JOIN m ON rr.event_type = m.event_type
       |GROUP BY rr.event_type""".stripMargin
+
+  def jarqueBera(s: SparkSession, dir: String): DataFrame =
+    sparkQ(s, dir, retsQ(jarqueBeraBody))
+  val jarqueBeraOracle: String = retsQ(jarqueBeraBody)(DuckDb)
 }

@@ -1,9 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
-import graft.sources.Tables
 
 /** Round-6 extension batch 5: the risk-metrics suite a quant desk computes
   * over the reference's kline series — Sharpe/Sortino, up/down market
@@ -20,38 +17,7 @@ import graft.sources.Tables
   */
 object Ext23Queries {
 
-  /** Shared SQL: hourly bars → per-symbol log returns, Spark (events_ta
-    * view) and DuckDB (events table) variants.
-    */
-  private def retsCte(src: String, hrExpr: String, tsExpr: String): String =
-    s"""h AS (
-      |  SELECT event_type, $hrExpr AS hr_us, value, $tsExpr AS ts_o, event_id
-      |  FROM $src
-      |), w AS (
-      |  SELECT event_type, hr_us, value,
-      |    first_value(value) OVER (PARTITION BY event_type, hr_us
-      |      ORDER BY ts_o DESC, event_id DESC) AS c
-      |  FROM h
-      |), bars AS (
-      |  SELECT event_type, hr_us, MAX(c) AS close
-      |  FROM w GROUP BY event_type, hr_us
-      |), r0 AS (
-      |  SELECT event_type, hr_us, close,
-      |    ln(close / lag(close) OVER (PARTITION BY event_type
-      |      ORDER BY hr_us)) AS ret
-      |  FROM bars
-      |), rr AS (SELECT * FROM r0 WHERE ret IS NOT NULL)""".stripMargin
-
-  private val retsSpark: String = retsCte("events_ta",
-    "ts_us div 3600000000 * 3600000000", "ts_us")
-  private val retsDuck: String = retsCte("events",
-    "epoch_us(ts) // 3600000000 * 3600000000", "epoch_us(ts)")
-
-  private def sparkQ(s: SparkSession, dir: String, body: String): DataFrame = {
-    Tables.events(s, dir).createOrReplaceTempView("events_ta")
-    s.sql(s"WITH $retsSpark\n$body")
-  }
-  private def duckQ(body: String): String = s"WITH $retsDuck\n$body"
+  import OracleSql.{DuckDb, retsQ, sparkQ}
 
   /** Sharpe and Sortino (rf = 0) per symbol, annualized by √(24·365) hourly
     * bars. Downside deviation uses the 0-target full-count convention
@@ -65,8 +31,8 @@ object Ext23Queries {
       |FROM rr GROUP BY event_type""".stripMargin
 
   def sharpeSortino(s: SparkSession, dir: String): DataFrame =
-    sparkQ(s, dir, sharpeBody)
-  val sharpeSortinoOracle: String = duckQ(sharpeBody)
+    sparkQ(s, dir, retsQ(sharpeBody))
+  val sharpeSortinoOracle: String = retsQ(sharpeBody)(DuckDb)
 
   /** Up/down market capture vs the equal-weight hourly market return:
     * capture = mean(asset | market up) / mean(market | market up), and the
@@ -88,8 +54,8 @@ object Ext23Queries {
       |FROM j GROUP BY event_type""".stripMargin
 
   def upDownCapture(s: SparkSession, dir: String): DataFrame =
-    sparkQ(s, dir, captureBody)
-  val upDownCaptureOracle: String = duckQ(captureBody)
+    sparkQ(s, dir, retsQ(captureBody))
+  val upDownCaptureOracle: String = retsQ(captureBody)(DuckDb)
 
   /** Drawdown durations: underwater flag (close < running peak), islands
     * over consecutive underwater bars, longest spell + deepest drawdown per
@@ -125,8 +91,8 @@ object Ext23Queries {
       |FROM spells GROUP BY event_type""".stripMargin
 
   def drawdownDuration(s: SparkSession, dir: String): DataFrame =
-    sparkQ(s, dir, ddBody)
-  val drawdownDurationOracle: String = duckQ(ddBody)
+    sparkQ(s, dir, retsQ(ddBody))
+  val drawdownDurationOracle: String = retsQ(ddBody)(DuckDb)
 
   /** Hurst exponent by rescaled range over two chunk sizes (16 and 64
     * bars): per chunk, R/S = (max − min of the cumulative mean-deviation)
@@ -174,8 +140,8 @@ object Ext23Queries {
       |FROM rs16 a JOIN rs64 b ON a.event_type = b.event_type""".stripMargin
 
   def hurst(s: SparkSession, dir: String): DataFrame =
-    sparkQ(s, dir, hurstBody)
-  val hurstOracle: String = duckQ(hurstBody)
+    sparkQ(s, dir, retsQ(hurstBody))
+  val hurstOracle: String = retsQ(hurstBody)(DuckDb)
     .replace(" div 16", " // 16").replace(" div 64", " // 64")
 
   /** Information ratio vs the equal-weight market: annualized mean active
@@ -195,8 +161,8 @@ object Ext23Queries {
       |FROM act GROUP BY event_type""".stripMargin
 
   def informationRatio(s: SparkSession, dir: String): DataFrame =
-    sparkQ(s, dir, irBody)
-  val informationRatioOracle: String = duckQ(irBody)
+    sparkQ(s, dir, retsQ(irBody))
+  val informationRatioOracle: String = retsQ(irBody)(DuckDb)
 
   /** Historical VaR(95) and expected shortfall per symbol via EXACT order
     * statistics: k = ceil(0.05·n), VaR = −(k-th smallest return), ES =
@@ -204,10 +170,8 @@ object Ext23Queries {
     * sorted k-element tail — bit-identical on both engines, no
     * interpolation anywhere.
     */
-  def varEs(s: SparkSession, dir: String): DataFrame = {
-    Tables.events(s, dir).createOrReplaceTempView("events_ta")
-    s.sql(s"""WITH $retsSpark,
-      |arr AS (
+  def varEs(s: SparkSession, dir: String): DataFrame =
+    sparkQ(s, dir, retsQ(""", arr AS (
       |  SELECT event_type, sort_array(collect_list(ret)) AS a,
       |    CAST(COUNT(*) AS BIGINT) AS n
       |  FROM rr GROUP BY event_type
@@ -220,12 +184,10 @@ object Ext23Queries {
       |  ROUND(-element_at(a, k), 6) AS var_95,
       |  ROUND(-aggregate(slice(a, 1, k), CAST(0.0 AS DOUBLE),
       |    (acc, x) -> acc + x) / k, 6) AS es_95
-      |FROM kk""".stripMargin)
-  }
+      |FROM kk""".stripMargin))
 
   val varEsOracle: String =
-    s"""WITH $retsDuck,
-      |arr AS (
+    retsQ(""", arr AS (
       |  SELECT event_type, list_sort(list(ret)) AS a,
       |    CAST(COUNT(*) AS BIGINT) AS n
       |  FROM rr GROUP BY event_type
@@ -237,7 +199,7 @@ object Ext23Queries {
       |SELECT event_type, n, k,
       |  ROUND(-a[k], 6) AS var_95,
       |  ROUND(-list_sum(a[1:k]) / k, 6) AS es_95
-      |FROM kk""".stripMargin
+      |FROM kk""".stripMargin)(DuckDb)
 
   /** Calmar (annualized return over max drawdown) and Omega (gain/loss
     * ratio at threshold 0) per symbol — the two drawdown/partial-moment
@@ -265,8 +227,8 @@ object Ext23Queries {
       |FROM agg a JOIN dd d ON a.event_type = d.event_type""".stripMargin
 
   def calmarOmega(s: SparkSession, dir: String): DataFrame =
-    sparkQ(s, dir, calmarBody)
-  val calmarOmegaOracle: String = duckQ(calmarBody)
+    sparkQ(s, dir, retsQ(calmarBody))
+  val calmarOmegaOracle: String = retsQ(calmarBody)(DuckDb)
 
   /** Pairs-trading spread monitor for the (click, view) pair: log price
     * ratio of the hourly closes, z-scored against the full-sample spread
@@ -289,8 +251,8 @@ object Ext23Queries {
       |WHERE abs((sp.spread - st.mu) / st.sd) > 1.5""".stripMargin
 
   def pairsSpread(s: SparkSession, dir: String): DataFrame =
-    sparkQ(s, dir, pairsBody)
-  val pairsSpreadOracle: String = duckQ(pairsBody)
+    sparkQ(s, dir, retsQ(pairsBody))
+  val pairsSpreadOracle: String = retsQ(pairsBody)(DuckDb)
 
   /** Portfolio turnover of the value-weighted 5-symbol book at DAILY
     * rebalance grain (hourly bars are too sparse at the smallest scale
@@ -328,8 +290,8 @@ object Ext23Queries {
       |FROM per_day""".stripMargin
 
   def turnover(s: SparkSession, dir: String): DataFrame =
-    sparkQ(s, dir, turnoverBody)
-  val turnoverOracle: String = duckQ(turnoverBody)
+    sparkQ(s, dir, retsQ(turnoverBody))
+  val turnoverOracle: String = retsQ(turnoverBody)(DuckDb)
     .replace(" div 86400000000", " // 86400000000")
 
   /** Jensen's alpha vs the equal-weight market: per-symbol CAPM beta from
@@ -351,6 +313,6 @@ object Ext23Queries {
       |FROM j GROUP BY event_type""".stripMargin
 
   def jensenAlpha(s: SparkSession, dir: String): DataFrame =
-    sparkQ(s, dir, jensenBody)
-  val jensenAlphaOracle: String = duckQ(jensenBody)
+    sparkQ(s, dir, retsQ(jensenBody))
+  val jensenAlphaOracle: String = retsQ(jensenBody)(DuckDb)
 }

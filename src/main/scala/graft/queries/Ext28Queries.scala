@@ -60,10 +60,7 @@ object Ext28Queries {
         round(col("n_correct").cast("double") / col("n"), 6))
   }
 
-  private val cosSql: (String, String) => String = (a, b) =>
-    s"""list_dot_product($a, $b)
-       | / sqrt(list_dot_product($a, $a) * list_dot_product($b, $b))"""
-      .stripMargin.replaceAll("\n", "")
+  import OracleSql.dotCosSql
 
   val knnClassifyOracle: String =
     s"""WITH cent AS (
@@ -71,19 +68,19 @@ object Ext28Queries {
        |  WHERE vec_id < 10
        |), assign AS (
        |  SELECT e.vec_id AS neighbor_id, e.embedding AS cv, e.label AS plabel,
-       |    c.centroid_id, ${cosSql("e.embedding", "c.centv")} AS aff
+       |    c.centroid_id, ${dotCosSql("e.embedding", "c.centv")} AS aff
        |  FROM embeddings e, cent c
        |  QUALIFY row_number() OVER (
        |    PARTITION BY e.vec_id ORDER BY aff DESC, c.centroid_id) = 1
        |), probes AS (
        |  SELECT q.vec_id AS query_id, q.embedding AS qv, q.label,
-       |    c.centroid_id, ${cosSql("q.embedding", "c.centv")} AS caff
+       |    c.centroid_id, ${dotCosSql("q.embedding", "c.centv")} AS caff
        |  FROM embeddings q, cent c
        |  QUALIFY row_number() OVER (
        |    PARTITION BY q.vec_id ORDER BY caff DESC, c.centroid_id) <= 2
        |), neigh AS (
        |  SELECT p.query_id, p.label, a.neighbor_id, a.plabel,
-       |    ${cosSql("p.qv", "a.cv")} AS cos
+       |    ${dotCosSql("p.qv", "a.cv")} AS cos
        |  FROM probes p JOIN assign a USING (centroid_id)
        |  WHERE a.neighbor_id <> p.query_id
        |  QUALIFY row_number() OVER (

@@ -177,14 +177,7 @@ object Ext2Queries {
       .select(col("id_1"), col("id_2"), round(col("cos"), 6).as("cos"))
   }
 
-  val lshAnnOracle: String = {
-    val cosSql: (String, String) => String = (a, b) =>
-      s"""list_sum(list_transform(range(1, len($a) + 1),
-         |      i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))
-         |  / (sqrt(list_sum(list_transform(range(1, len($a) + 1),
-         |      i -> CAST($a[i] AS DOUBLE) * CAST($a[i] AS DOUBLE))))
-         |   * sqrt(list_sum(list_transform(range(1, len($b) + 1),
-         |      i -> CAST($b[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))))""".stripMargin
+  val lshAnnOracle: String =
     s"""WITH dims AS (SELECT CAST(r.range AS INT) AS d FROM range(64) r),
        |planes AS (
        |  SELECT CAST(j.range AS INT) AS j, dims.d,
@@ -209,12 +202,11 @@ object Ext2Queries {
        |    ON a.band = b.band AND a.chunk = b.chunk AND a.vec_id < b.vec_id
        |)
        |SELECT c.id_1, c.id_2,
-       |  ROUND(${cosSql("ea.embedding", "eb.embedding")}, 6) AS cos
+       |  ROUND(${OracleSql.cosSql("ea.embedding", "eb.embedding")}, 6) AS cos
        |FROM cand c
        |JOIN embeddings ea ON ea.vec_id = c.id_1
        |JOIN embeddings eb ON eb.vec_id = c.id_2
-       |WHERE ${cosSql("ea.embedding", "eb.embedding")} >= 0.45""".stripMargin
-  }
+       |WHERE ${OracleSql.cosSql("ea.embedding", "eb.embedding")} >= 0.45""".stripMargin
 
   // --- multimodal resize planning --------------------------------------------
 

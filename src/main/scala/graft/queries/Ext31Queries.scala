@@ -3,8 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
-
 /** Round-8 extension: technical-analysis indicator tier 2. Completes the
   * candle toolbox begun in [[Ext19Queries]] (the reference pipeline's SMA /
   * RSI / Bollinger surface, `dags/spark_job_1.py:25-46`, the reference's
@@ -28,7 +26,7 @@ import graft.sources.Tables
   */
 object Ext31Queries {
 
-  import Ext19Queries.{barsSpark, barsDuck, sparkQ, duckQ}
+  import OracleSql.{DuckDb, barsCte, barsQ, sparkQ}
 
   /** Vortex Indicator (14): VI+ = Σ|high − prev_low| / Σ TR,
     * VI− = Σ|low − prev_high| / Σ TR over the trailing 14 bars. The first
@@ -68,8 +66,8 @@ object Ext31Queries {
       |WHERE rn >= 15""".stripMargin
 
   def vortex(s: SparkSession, dir: String): DataFrame =
-    sparkQ(s, dir, barsSpark, vortexBody)
-  val vortexOracle: String = duckQ(barsDuck, vortexBody)
+    sparkQ(s, dir, barsQ(vortexBody))
+  val vortexOracle: String = barsQ(vortexBody)(DuckDb)
 
   /** Ichimoku Cloud: conversion (9-bar midpoint), base (26), leading span A
     * ((conv+base)/2 from 26 bars back — the value PLOTTED at this bar),
@@ -109,8 +107,8 @@ object Ext31Queries {
       |WHERE rn >= 78""".stripMargin
 
   def ichimoku(s: SparkSession, dir: String): DataFrame =
-    sparkQ(s, dir, barsSpark, ichimokuBody)
-  val ichimokuOracle: String = duckQ(barsDuck, ichimokuBody)
+    sparkQ(s, dir, barsQ(ichimokuBody))
+  val ichimokuOracle: String = barsQ(ichimokuBody)(DuckDb)
 
   /** Chaikin Money Flow (20): Σ(money-flow volume) / Σ(volume) over 20
     * bars, where MFV = close-location value × volume. Flat bars
@@ -138,8 +136,8 @@ object Ext31Queries {
       |WHERE rn >= 20""".stripMargin
 
   def cmf(s: SparkSession, dir: String): DataFrame =
-    sparkQ(s, dir, barsSpark, cmfBody)
-  val cmfOracle: String = duckQ(barsDuck, cmfBody)
+    sparkQ(s, dir, barsQ(cmfBody))
+  val cmfOracle: String = barsQ(cmfBody)(DuckDb)
 
   /** Ulcer Index (14): RMS of the percentage drawdown from the trailing
     * 14-bar close high. Two stacked windows (drawdown, then its mean
@@ -171,8 +169,8 @@ object Ext31Queries {
       |WHERE rn >= 27""".stripMargin
 
   def ulcer(s: SparkSession, dir: String): DataFrame =
-    sparkQ(s, dir, barsSpark, ulcerBody)
-  val ulcerOracle: String = duckQ(barsDuck, ulcerBody)
+    sparkQ(s, dir, barsQ(ulcerBody))
+  val ulcerOracle: String = barsQ(ulcerBody)(DuckDb)
 
   /** Chande Momentum Oscillator (14): 100·(Σup − Σdown)/(Σup + Σdown) over
     * close-to-close moves — RSI's unsmoothed cousin, symmetric in
@@ -204,8 +202,8 @@ object Ext31Queries {
       |WHERE rn >= 15""".stripMargin
 
   def cmo(s: SparkSession, dir: String): DataFrame =
-    sparkQ(s, dir, barsSpark, cmoBody)
-  val cmoOracle: String = duckQ(barsDuck, cmoBody)
+    sparkQ(s, dir, barsQ(cmoBody))
+  val cmoOracle: String = barsQ(cmoBody)(DuckDb)
 
   /** Aroon (14): 100·(14 − bars_since_extreme)/14 for the channel high and
     * low. "Bars since the most recent max" is an argmax — tie-ambiguous if
@@ -261,13 +259,11 @@ object Ext31Queries {
       |    ORDER BY hr_us) AS INT) - 1) / 14.0) AS INT) AS bkt
       |FROM bars""".stripMargin
 
-  def aroon(s: SparkSession, dir: String): DataFrame = {
-    Tables.events(s, dir).createOrReplaceTempView("events_ta")
-    s.sql(s"WITH bars AS (\n$barsSpark\n), nb AS (\n$aroonNb\n)\n$aroonBody")
-  }
+  private val aroonQ: OracleSql.Dialect => String =
+    barsQ(s", nb AS (\n$aroonNb\n)\n$aroonBody")
 
-  val aroonOracle: String =
-    s"WITH bars AS (\n$barsDuck\n), nb AS (\n$aroonNb\n)\n$aroonBody"
+  def aroon(s: SparkSession, dir: String): DataFrame = sparkQ(s, dir, aroonQ)
+  val aroonOracle: String = aroonQ(DuckDb)
 
   /** TRIX (15): 1-bar rate of change of the triple-smoothed EMA — three
     * chained recursive smoothers, so a per-symbol fold like
@@ -276,9 +272,7 @@ object Ext31Queries {
     * (triple-EMA and the last TRIX reading).
     */
   def trix(s: SparkSession, dir: String): DataFrame = {
-    Tables.events(s, dir).createOrReplaceTempView("events_ta")
-    val bars = s.sql(s"WITH b AS (\n$barsSpark\n) " +
-      "SELECT event_type, hr_us, close FROM b")
+    val bars = sparkQ(s, dir, barsQ("SELECT event_type, hr_us, close FROM bars"))
     val a = lit(0.125)
     val vals = transform(array_sort(col("raw")), x => x.getField("close"))
     val c1 = element_at(vals, 1)
@@ -305,7 +299,7 @@ object Ext31Queries {
   }
 
   val trixOracle: String =
-    s"""WITH RECURSIVE bars AS MATERIALIZED (\n$barsDuck\n),
+    s"""WITH RECURSIVE ${barsCte(DuckDb, materialized = true)},
       |seq AS MATERIALIZED (
       |  SELECT event_type, close,
       |    CAST(row_number() OVER (PARTITION BY event_type ORDER BY hr_us)
@@ -342,9 +336,7 @@ object Ext31Queries {
     * sides, so the doubles are bit-equal before the output ROUND.
     */
   def keltner(s: SparkSession, dir: String): DataFrame = {
-    Tables.events(s, dir).createOrReplaceTempView("events_ta")
-    val bars = s.sql(s"WITH b AS (\n$barsSpark\n) " +
-      "SELECT event_type, hr_us, high, low, close FROM b")
+    val bars = sparkQ(s, dir, barsQ("SELECT event_type, hr_us, high, low, close FROM bars"))
     val a = lit(2.0 / 21.0)
     val vals = array_sort(col("raw"))
     val b1 = element_at(vals, 1)
@@ -389,7 +381,7 @@ object Ext31Queries {
   }
 
   val keltnerOracle: String =
-    s"""WITH RECURSIVE bars AS MATERIALIZED (\n$barsDuck\n),
+    s"""WITH RECURSIVE ${barsCte(DuckDb, materialized = true)},
       |seq AS MATERIALIZED (
       |  SELECT event_type, high, low, close,
       |    (high + low + close) / 3 AS tp,

@@ -97,22 +97,7 @@ object Ext32Queries {
         round(col("containment"), 6).as("containment"))
 
   val containmentOracle: String =
-    """WITH tok AS (
-      |  SELECT doc_id, unnest(string_split(text, ' ')) AS w,
-      |         generate_subscripts(string_split(text, ' '), 1) AS pos
-      |  FROM documents
-      |), sh AS (
-      |  SELECT doc_id,
-      |    w || ' ' || lead(w, 1) OVER win || ' ' || lead(w, 2) OVER win AS s
-      |  FROM tok WINDOW win AS (PARTITION BY doc_id ORDER BY pos)
-      |  QUALIFY lead(w, 2) OVER win IS NOT NULL
-      |), ds AS (SELECT DISTINCT doc_id, s FROM sh),
-      |sizes AS (SELECT doc_id, count(*) AS sz FROM ds GROUP BY doc_id),
-      |inter AS (
-      |  SELECT a.doc_id AS id_1, b.doc_id AS id_2, count(*) AS i
-      |  FROM ds a JOIN ds b ON a.s = b.s AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2
-      |), both_dirs AS (
+    s"""WITH ${OracleSql.overlapCtes}, both_dirs AS (
       |  SELECT id_1 AS sub_id, id_2 AS super_id,
       |    CAST(i AS DOUBLE) / s1.sz AS containment
       |  FROM inter JOIN sizes s1 ON id_1 = s1.doc_id
@@ -163,16 +148,7 @@ object Ext32Queries {
   }
 
   val boilerplateOracle: String =
-    """WITH tok AS (
-      |  SELECT doc_id, unnest(string_split(text, ' ')) AS w,
-      |         generate_subscripts(string_split(text, ' '), 1) AS pos
-      |  FROM documents
-      |), sh AS (
-      |  SELECT doc_id,
-      |    w || ' ' || lead(w, 1) OVER win || ' ' || lead(w, 2) OVER win AS s
-      |  FROM tok WINDOW win AS (PARTITION BY doc_id ORDER BY pos)
-      |  QUALIFY lead(w, 2) OVER win IS NOT NULL
-      |), ds AS (SELECT DISTINCT doc_id, s FROM sh),
+    s"""WITH ${OracleSql.shingleCtes(3)},
       |freq AS (SELECT s, COUNT(*) AS df FROM ds GROUP BY s),
       |per AS (
       |  SELECT ds.doc_id, COUNT(*) AS n_sh,
@@ -281,28 +257,8 @@ object Ext32Queries {
     * cartesian — and the closure check is a semi-join against the
     * canonical edge list.
     */
-  /** The nation trade graph's canonical (u < v) edge list — the
-    * [[Ext12Queries.triangleCount]] construction, shared by the graph
-    * queries in this tier and [[Ext33Queries]].
-    */
-  private[queries] def tradeEdges(s: SparkSession, dir: String): DataFrame = {
-    val flows = Tables.lineitem(s, dir)
-      .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-      .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.supplier(s, dir)),
-        col("l_suppkey") === col("s_suppkey"))
-      .filter(col("c_nationkey") =!= col("s_nationkey"))
-      .groupBy(least(col("c_nationkey"), col("s_nationkey")).as("u"),
-        greatest(col("c_nationkey"), col("s_nationkey")).as("v"))
-      .agg(count(lit(1)).as("w"))
-    val avgW = flows.agg(avg(col("w")).as("_avg_w"))
-    flows.crossJoin(broadcast(avgW))
-      .filter(col("w") > col("_avg_w"))
-      .select(col("u"), col("v"))
-  }
-
   def clusteringCoeff(s: SparkSession, dir: String): DataFrame = {
-    val edges = tradeEdges(s, dir)
+    val edges = OracleSql.tradeEdges(s, dir)
     val sym = edges.select(col("u").as("a"), col("v").as("b"))
       .unionByName(edges.select(col("v").as("a"), col("u").as("b")))
     val deg = sym.groupBy(col("a").as("node")).agg(count(lit(1)).as("degree"))
@@ -311,7 +267,8 @@ object Ext32Queries {
         col("s1.a") === col("s2.a") && col("s1.b") < col("s2.b"))
       .select(col("s1.a").as("center"), col("s1.b").as("x"),
         col("s2.b").as("y"))
-    val closed = wedges.join(edges,
+    // the edge list has at most nations² rows: broadcast the closure check
+    val closed = wedges.join(broadcast(edges),
         wedges("x") === edges("u") && wedges("y") === edges("v"),
         "left_semi")
       .groupBy(col("center")).agg(count(lit(1)).as("triangles"))
@@ -323,20 +280,9 @@ object Ext32Queries {
           6).as("coeff"))
   }
 
-  // pw/e/sym MATERIALIZED: see triangleCountOracle — un-materialized CTE
-  // re-inlining re-runs the lineitem join per reference (>180 s at sf0.1).
+  // sym MATERIALIZED like pw/e (the OracleSql MATERIALIZED rule)
   val clusteringCoeffOracle: String =
-    """WITH pw AS MATERIALIZED (
-      |  SELECT least(c.c_nationkey, s.s_nationkey) AS u,
-      |    greatest(c.c_nationkey, s.s_nationkey) AS v, COUNT(*) AS w
-      |  FROM lineitem l
-      |    JOIN orders o ON l.l_orderkey = o.o_orderkey
-      |    JOIN customer c ON o.o_custkey = c.c_custkey
-      |    JOIN supplier s ON l.l_suppkey = s.s_suppkey
-      |  WHERE c.c_nationkey <> s.s_nationkey
-      |  GROUP BY 1, 2
-      |), e AS MATERIALIZED (
-      |  SELECT u, v FROM pw WHERE w > (SELECT AVG(w) FROM pw)),
+    s"""WITH ${OracleSql.tradeEdgesSql},
       |sym AS MATERIALIZED (
       |  SELECT u AS a, v AS b FROM e UNION ALL SELECT v, u FROM e),
       |deg AS (SELECT a AS node, COUNT(*) AS degree FROM sym GROUP BY a),

@@ -114,7 +114,7 @@ object Ext33Queries {
     * the Jaccard score instead of the rarity-weighted sum.
     */
   def graphJaccard(s: SparkSession, dir: String): DataFrame = {
-    val edges = Ext32Queries.tradeEdges(s, dir)
+    val edges = OracleSql.tradeEdges(s, dir)
     val sym = edges.select(col("u").as("a"), col("v").as("b"))
       .unionByName(edges.select(col("v").as("a"), col("u").as("b")))
     val deg = sym.groupBy(col("a").as("node")).agg(count(lit(1)).as("degree"))
@@ -133,20 +133,9 @@ object Ext33Queries {
           .as("jaccard"))
   }
 
-  // pw/e/sym MATERIALIZED: see Ext12Queries.triangleCountOracle — DuckDB
-  // re-inlines un-materialized CTEs per reference (>180 s at sf0.1).
+  // sym MATERIALIZED like pw/e (the OracleSql MATERIALIZED rule)
   val graphJaccardOracle: String =
-    """WITH pw AS MATERIALIZED (
-      |  SELECT least(c.c_nationkey, s.s_nationkey) AS u,
-      |    greatest(c.c_nationkey, s.s_nationkey) AS v, COUNT(*) AS w
-      |  FROM lineitem l
-      |    JOIN orders o ON l.l_orderkey = o.o_orderkey
-      |    JOIN customer c ON o.o_custkey = c.c_custkey
-      |    JOIN supplier s ON l.l_suppkey = s.s_suppkey
-      |  WHERE c.c_nationkey <> s.s_nationkey
-      |  GROUP BY 1, 2
-      |), e AS MATERIALIZED (
-      |  SELECT u, v FROM pw WHERE w > (SELECT AVG(w) FROM pw)),
+    s"""WITH ${OracleSql.tradeEdgesSql},
       |sym AS MATERIALIZED (
       |  SELECT u AS a, v AS b FROM e UNION ALL SELECT v, u FROM e),
       |deg AS (SELECT a AS node, COUNT(*) AS degree FROM sym GROUP BY a),
@@ -220,23 +209,8 @@ object Ext33Queries {
       |      ORDER BY d.n_chars DESC, cl.doc_id ASC) AS rk
       |    FROM cl JOIN documents d ON d.doc_id = cl.doc_id)
       |  WHERE rk > 1
-      |), btok AS (
-      |  SELECT doc_id, unnest(string_split(text, ' ')) AS w,
-      |         generate_subscripts(string_split(text, ' '), 1) AS pos
-      |  FROM documents
-      |), bsh AS (
-      |  SELECT doc_id,
-      |    w || ' ' || lead(w, 1) OVER win || ' ' || lead(w, 2) OVER win AS sg
-      |  FROM btok WINDOW win AS (PARTITION BY doc_id ORDER BY pos)
-      |  QUALIFY lead(w, 2) OVER win IS NOT NULL
-      |), bds AS (SELECT DISTINCT doc_id, sg FROM bsh),
-      |bfreq AS (SELECT sg, COUNT(*) AS df FROM bds GROUP BY sg),
-      |boiler_drop AS (
-      |  SELECT doc_id FROM (
-      |    SELECT bds.doc_id, COUNT(*) AS n_sh,
-      |      SUM(CASE WHEN bfreq.df >= 3 THEN 1 ELSE 0 END) AS common
-      |    FROM bds JOIN bfreq USING (sg) GROUP BY bds.doc_id)
-      |  WHERE CAST(common AS DOUBLE) / n_sh >= 0.3
+      |), boiler_drop AS (
+      |  SELECT doc_id FROM (\n${Ext32Queries.boilerplateOracle}\n) b
       |), drops AS (
       |  SELECT doc_id FROM exact_drop
       |  UNION SELECT doc_id FROM near_drop

@@ -34,44 +34,33 @@ object Ext35Queries {
     * (σ = 0) emit all-'b' (z treated as 0), pinned by COALESCE on both
     * sides.
     */
-  def saxWord(s: SparkSession, dir: String): DataFrame = {
-    Tables.events(s, dir).createOrReplaceTempView("events_ta")
-    s.sql(s"""WITH bars AS (\n${Ext19Queries.barsSpark.replace("3600000000", "86400000000")}\n),
-      |z AS (
-      |  SELECT event_type, hr_us,
-      |    COALESCE((close - AVG(close) OVER wt)
-      |      / NULLIF(STDDEV_POP(close) OVER wt, 0), CAST(0.0 AS DOUBLE))
-      |      AS z
-      |  FROM bars
-      |  WINDOW wt AS (PARTITION BY event_type)
-      |)
-      |SELECT event_type,
-      |  CAST(COUNT(*) AS BIGINT) AS n_days,
-      |  array_join(transform(array_sort(collect_list(struct(hr_us, z))),
-      |    p -> CASE WHEN ROUND(p.z, 6) < -0.6745 THEN 'a'
-      |              WHEN ROUND(p.z, 6) < 0 THEN 'b'
-      |              WHEN ROUND(p.z, 6) < 0.6745 THEN 'c'
-      |              ELSE 'd' END), '') AS sax_word
-      |FROM z GROUP BY event_type""".stripMargin)
-  }
+  private def saxQ(word: String): OracleSql.Dialect => String = OracleSql.barsQ(
+    s""", z AS (
+       |  SELECT event_type, hr_us,
+       |    COALESCE((close - AVG(close) OVER wt)
+       |      / NULLIF(STDDEV_POP(close) OVER wt, 0), CAST(0.0 AS DOUBLE))
+       |      AS z
+       |  FROM bars
+       |  WINDOW wt AS (PARTITION BY event_type)
+       |)
+       |SELECT event_type,
+       |  CAST(COUNT(*) AS BIGINT) AS n_days,
+       |  $word AS sax_word
+       |FROM z GROUP BY event_type""".stripMargin, OracleSql.DayUs)
 
-  val saxWordOracle: String =
-    s"""WITH bars AS (\n${Ext19Queries.barsDuck.replace("3600000000", "86400000000")}\n),
-      |z AS (
-      |  SELECT event_type, hr_us,
-      |    COALESCE((close - AVG(close) OVER wt)
-      |      / NULLIF(STDDEV_POP(close) OVER wt, 0), CAST(0.0 AS DOUBLE))
-      |      AS z
-      |  FROM bars
-      |  WINDOW wt AS (PARTITION BY event_type)
-      |)
-      |SELECT event_type,
-      |  CAST(COUNT(*) AS BIGINT) AS n_days,
-      |  string_agg(CASE WHEN ROUND(z, 6) < -0.6745 THEN 'a'
+  def saxWord(s: SparkSession, dir: String): DataFrame =
+    OracleSql.sparkQ(s, dir, saxQ(
+      """array_join(transform(array_sort(collect_list(struct(hr_us, z))),
+        |    p -> CASE WHEN ROUND(p.z, 6) < -0.6745 THEN 'a'
+        |              WHEN ROUND(p.z, 6) < 0 THEN 'b'
+        |              WHEN ROUND(p.z, 6) < 0.6745 THEN 'c'
+        |              ELSE 'd' END), '')""".stripMargin))
+
+  val saxWordOracle: String = saxQ(
+    """string_agg(CASE WHEN ROUND(z, 6) < -0.6745 THEN 'a'
       |                  WHEN ROUND(z, 6) < 0 THEN 'b'
       |                  WHEN ROUND(z, 6) < 0.6745 THEN 'c'
-      |                  ELSE 'd' END, '' ORDER BY hr_us) AS sax_word
-      |FROM z GROUP BY event_type""".stripMargin
+      |                  ELSE 'd' END, '' ORDER BY hr_us)""".stripMargin)(OracleSql.DuckDb)
 
   /** Quantile normalization across event types. Groups differ in size, so
     * raw shared-rank averaging is WRONG (high ranks exist only in the

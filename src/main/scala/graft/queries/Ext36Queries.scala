@@ -50,16 +50,7 @@ object Ext36Queries {
   }
 
   val ngramCoverageOracle: String =
-    """WITH tok AS (
-      |  SELECT doc_id, unnest(string_split(text, ' ')) AS w,
-      |         generate_subscripts(string_split(text, ' '), 1) AS pos
-      |  FROM documents
-      |), sh AS (
-      |  SELECT doc_id,
-      |    w || ' ' || lead(w, 1) OVER win || ' ' || lead(w, 2) OVER win AS s
-      |  FROM tok WINDOW win AS (PARTITION BY doc_id ORDER BY pos)
-      |  QUALIFY lead(w, 2) OVER win IS NOT NULL
-      |), ds AS (SELECT DISTINCT doc_id, s FROM sh),
+    s"""WITH ${OracleSql.shingleCtes(3)},
       |split AS (
       |  SELECT doc_id,
       |    CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)
@@ -121,26 +112,7 @@ object Ext36Queries {
   }
 
   val weightedJaccardOracle: String =
-    """WITH tok AS (
-      |  SELECT doc_id, unnest(string_split(text, ' ')) AS w,
-      |         generate_subscripts(string_split(text, ' '), 1) AS pos
-      |  FROM documents
-      |), sh AS (
-      |  SELECT doc_id,
-      |    w || ' ' || lead(w, 1) OVER win || ' ' || lead(w, 2) OVER win AS s
-      |  FROM tok WINDOW win AS (PARTITION BY doc_id ORDER BY pos)
-      |  QUALIFY lead(w, 2) OVER win IS NOT NULL
-      |), ds AS (SELECT DISTINCT doc_id, s FROM sh),
-      |sizes AS (SELECT doc_id, count(*) AS sz FROM ds GROUP BY doc_id),
-      |inter AS (
-      |  SELECT a.doc_id AS id_1, b.doc_id AS id_2, count(*) AS i
-      |  FROM ds a JOIN ds b ON a.s = b.s AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2
-      |), pairs AS (
-      |  SELECT id_1, id_2 FROM inter
-      |  JOIN sizes s1 ON id_1 = s1.doc_id JOIN sizes s2 ON id_2 = s2.doc_id
-      |  WHERE CAST(i AS DOUBLE) / (s1.sz + s2.sz - i) >= 0.5
-      |), cnt AS (
+    s"""WITH ${OracleSql.jaccardCtes(0.5)}, cnt AS (
       |  SELECT doc_id, w, COUNT(*) AS c
       |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w
       |        FROM documents)

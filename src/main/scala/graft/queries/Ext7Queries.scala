@@ -110,19 +110,7 @@ object Ext7Queries {
       .limit(20)
 
   val dupSpansOracle: String =
-    """WITH tok AS (
-      |  SELECT doc_id, unnest(string_split(text, ' ')) AS w,
-      |         generate_subscripts(string_split(text, ' '), 1) AS pos
-      |  FROM documents
-      |), sh AS (
-      |  SELECT doc_id,
-      |    w || ' ' || lead(w, 1) OVER win || ' ' || lead(w, 2) OVER win
-      |      || ' ' || lead(w, 3) OVER win || ' ' || lead(w, 4) OVER win
-      |      || ' ' || lead(w, 5) OVER win || ' ' || lead(w, 6) OVER win
-      |      || ' ' || lead(w, 7) OVER win AS s
-      |  FROM tok WINDOW win AS (PARTITION BY doc_id ORDER BY pos)
-      |  QUALIFY lead(w, 7) OVER win IS NOT NULL
-      |), ds AS (SELECT DISTINCT doc_id, s FROM sh)
+    s"""WITH ${OracleSql.shingleCtes(8)}
       |SELECT s AS span, COUNT(*) AS n_docs
       |FROM ds GROUP BY s HAVING COUNT(*) >= 2
       |ORDER BY n_docs DESC, span LIMIT 20""".stripMargin
@@ -188,19 +176,7 @@ object Ext7Queries {
   }
 
   val decontaminateOracle: String =
-    """WITH tok AS (
-      |  SELECT doc_id, unnest(string_split(text, ' ')) AS w,
-      |         generate_subscripts(string_split(text, ' '), 1) AS pos
-      |  FROM documents
-      |), sh AS (
-      |  SELECT doc_id,
-      |    w || ' ' || lead(w, 1) OVER win || ' ' || lead(w, 2) OVER win
-      |      || ' ' || lead(w, 3) OVER win || ' ' || lead(w, 4) OVER win
-      |      || ' ' || lead(w, 5) OVER win || ' ' || lead(w, 6) OVER win
-      |      || ' ' || lead(w, 7) OVER win AS s
-      |  FROM tok WINDOW win AS (PARTITION BY doc_id ORDER BY pos)
-      |  QUALIFY lead(w, 7) OVER win IS NOT NULL
-      |), ds AS (SELECT DISTINCT doc_id, s FROM sh),
+    s"""WITH ${OracleSql.shingleCtes(8)},
       |ev AS (SELECT DISTINCT s FROM ds WHERE doc_id % 100 = 0)
       |SELECT t.doc_id, COUNT(*) AS n_contaminated_spans
       |FROM ds t JOIN ev ON t.s = ev.s

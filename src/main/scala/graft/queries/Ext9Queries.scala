@@ -615,7 +615,7 @@ object Ext9Queries {
       .select(col("query_id"), col("neighbor_id"), round(col("cos"), 6).as("cos"))
   }
 
-  private def cosSql(a: String, b: String): String = OracleSql.cosSql(a, b)
+  import OracleSql.cosSql
 
   val annRerankOracle: String =
     s"""WITH cent AS (

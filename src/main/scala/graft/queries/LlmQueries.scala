@@ -36,50 +36,31 @@ object LlmQueries {
     Tables.documents(s, dir).select(
       col("doc_id"), TextAnalysis.qualityScore(col("text")).as("quality"))
 
-  val qualityScoreOracle: String = {
-    val stop = TextAnalysis.enStopwords.map("'" + _ + "'").mkString("[", ", ", "]")
+  val qualityScoreOracle: String =
     s"""WITH m AS (
        |  SELECT doc_id,
-       |    CAST(length(text) AS DOUBLE) AS chars,
-       |    len(regexp_extract_all(text, '[^A-Za-z0-9 ]')) AS n_punct,
-       |    len(string_split(text, ' ')) AS n_toks,
-       |    len(list_filter(string_split(text, ' '), t -> list_contains($stop, t))) AS n_stop,
-       |    CAST(length(replace(text, ' ', '')) AS DOUBLE) AS alpha_chars
+       |    ${OracleSql.qualityInputs}
        |  FROM documents
        |)
-       |SELECT doc_id, ROUND(
-       |  (chars / (chars + 500.0))
-       |  * (1.0 - n_punct / greatest(chars, 1.0))
-       |  * (CASE WHEN n_stop * 1.0 / n_toks BETWEEN 0.01 AND 0.6 THEN 1.0 ELSE 0.5 END)
-       |  * (CASE WHEN alpha_chars / n_toks BETWEEN 2.0 AND 12.0 THEN 1.0 ELSE 0.3 END),
-       |  6) AS quality
+       |SELECT doc_id, ${OracleSql.qualityScore} AS quality
        |FROM m""".stripMargin
-  }
 
   def langId(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir).select(
       col("doc_id"), col("lang"),
       TextAnalysis.langId(col("text")).as("predicted"))
 
-  val langIdOracle: String = {
-    val scoreExprs = TextAnalysis.langMarkers.map { case (l, m) =>
-      val list = m.map("'" + _ + "'").mkString("[", ", ", "]")
-      s"len(list_intersect(list_distinct(string_split(text, ' ')), $list)) AS s_$l"
-    }.mkString(",\n    ")
-    val langs = TextAnalysis.langMarkers.map(_._1)
-    val best = "greatest(" + langs.map("s_" + _).mkString(", ") + ")"
-    val cases = langs.map(l => s"WHEN s_$l = best THEN '$l'").mkString(" ")
+  val langIdOracle: String =
     s"""WITH scores AS (
        |  SELECT doc_id, lang,
-       |    $scoreExprs
+       |    ${OracleSql.langScores}
        |  FROM documents
        |), b AS (
-       |  SELECT *, $best AS best FROM scores
+       |  SELECT *, ${OracleSql.langBest} AS best FROM scores
        |)
        |SELECT doc_id, lang,
-       |  CASE WHEN best <= 0 THEN 'und' $cases END AS predicted
+       |  ${OracleSql.langPredicted} AS predicted
        |FROM b""".stripMargin
-  }
 
   def fingerprintDocs(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir).select(
@@ -117,30 +98,9 @@ object LlmQueries {
       .select(col("id_1"), col("id_2"), round(col("jaccard"), 6).as("jaccard"))
 
   val ngramJaccardOracle: String =
-    """WITH tok AS (
-      |  SELECT doc_id, unnest(string_split(text, ' ')) AS w,
-      |         generate_subscripts(string_split(text, ' '), 1) AS pos
-      |  FROM documents
-      |), sh AS (
-      |  SELECT doc_id,
-      |    w || ' ' || lead(w, 1) OVER win || ' ' || lead(w, 2) OVER win AS s
-      |  FROM tok WINDOW win AS (PARTITION BY doc_id ORDER BY pos)
-      |  QUALIFY lead(w, 2) OVER win IS NOT NULL
-      |), ds AS (
-      |  SELECT DISTINCT doc_id, s FROM sh
-      |), sizes AS (
-      |  SELECT doc_id, count(*) AS sz FROM ds GROUP BY doc_id
-      |), inter AS (
-      |  SELECT a.doc_id AS id_1, b.doc_id AS id_2, count(*) AS i
-      |  FROM ds a JOIN ds b ON a.s = b.s AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2
-      |)
-      |SELECT id_1, id_2,
-      |  ROUND(CAST(i AS DOUBLE) / (s1.sz + s2.sz - i), 6) AS jaccard
-      |FROM inter
-      |JOIN sizes s1 ON id_1 = s1.doc_id
-      |JOIN sizes s2 ON id_2 = s2.doc_id
-      |WHERE CAST(i AS DOUBLE) / (s1.sz + s2.sz - i) >= 0.5""".stripMargin
+    s"""WITH ${OracleSql.jaccardCtes(JaccardThreshold)}
+       |SELECT id_1, id_2, ROUND(jaccard, 6) AS jaccard
+       |FROM pairs""".stripMargin
 
   /** MinHash-LSH with exact verification: same contract as [[ngramJaccard]]
     * (the exact filter guarantees precision; 64 2-row bands give ~1e-8 miss
@@ -187,26 +147,7 @@ object LlmQueries {
   }
 
   val dedupClustersOracle: String =
-    """WITH RECURSIVE tok AS (
-      |  SELECT doc_id, unnest(string_split(text, ' ')) AS w,
-      |         generate_subscripts(string_split(text, ' '), 1) AS pos
-      |  FROM documents
-      |), sh AS (
-      |  SELECT doc_id,
-      |    w || ' ' || lead(w, 1) OVER win || ' ' || lead(w, 2) OVER win AS s
-      |  FROM tok WINDOW win AS (PARTITION BY doc_id ORDER BY pos)
-      |  QUALIFY lead(w, 2) OVER win IS NOT NULL
-      |), ds AS (SELECT DISTINCT doc_id, s FROM sh),
-      |sizes AS (SELECT doc_id, count(*) AS sz FROM ds GROUP BY doc_id),
-      |inter AS (
-      |  SELECT a.doc_id AS id_1, b.doc_id AS id_2, count(*) AS i
-      |  FROM ds a JOIN ds b ON a.s = b.s AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2
-      |), pairs AS (
-      |  SELECT id_1, id_2 FROM inter
-      |  JOIN sizes s1 ON id_1 = s1.doc_id JOIN sizes s2 ON id_2 = s2.doc_id
-      |  WHERE CAST(i AS DOUBLE) / (s1.sz + s2.sz - i) >= 0.5
-      |), edges AS (
+    s"""WITH RECURSIVE ${OracleSql.jaccardCtes(JaccardThreshold)}, edges AS (
       |  SELECT id_1 AS src, id_2 AS dst FROM pairs
       |  UNION ALL SELECT id_2, id_1 FROM pairs
       |), reach(node, label) AS (
@@ -254,16 +195,7 @@ object LlmQueries {
     * final Hamming threshold.
     */
   def simhashOracle(maxHamming: Int): String =
-    s"""WITH tok AS (
-      |  SELECT doc_id, unnest(string_split(text, ' ')) AS w,
-      |         generate_subscripts(string_split(text, ' '), 1) AS pos
-      |  FROM documents
-      |), sh AS (
-      |  SELECT doc_id,
-      |    w || ' ' || lead(w, 1) OVER win || ' ' || lead(w, 2) OVER win AS s
-      |  FROM tok WINDOW win AS (PARTITION BY doc_id ORDER BY pos)
-      |  QUALIFY lead(w, 2) OVER win IS NOT NULL
-      |), ds AS (SELECT DISTINCT doc_id, s FROM sh),
+    s"""WITH ${OracleSql.shingleCtes(3)},
       |hashed AS (
       |  SELECT doc_id,
       |    CAST(CAST('0x' || substr(md5(s), 1, 15) AS UBIGINT) AS BIGINT) AS h
@@ -326,7 +258,7 @@ object LlmQueries {
 
   // --- embedding similarity --------------------------------------------------
 
-  private def cosSql(a: String, b: String): String = OracleSql.cosSql(a, b)
+  import OracleSql.cosSql
 
   def embedNearDup(s: SparkSession, dir: String): DataFrame =
     Similarity.cosineNearDup(Tables.embeddings(s, dir), "vec_id", "embedding", 0.45)

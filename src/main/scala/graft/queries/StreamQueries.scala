@@ -24,12 +24,11 @@ object StreamQueries {
     StructField("props", StringType)))
 
   private[graft] def eventsStream(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // The stream source needs a DECLARED schema; probe the file's physical
     // timestamp encoding with a batch schema read so the declaration matches
     // whichever the generator shipped — TIMESTAMP(NANOS) (ns longs via the
     // legacy conf) or TIMESTAMP(MICROS) (NTZ timestamp).
-    val tsType = s.read.parquet(s"$dir/events.parquet").schema("ts").dataType
+    val tsType = graft.sources.Tables.eventsRaw(s, dir).schema("ts").dataType
     // The file stream source replays a DIRECTORY; stage the table into a
     // temp dir (simulating an arriving-files landing zone). The source may
     // be a single parquet file (the driver's testdata) or a Spark-written
@@ -43,14 +42,9 @@ object StreamQueries {
     val staged = graft.streaming.StagedDirs.getOrStage(s"events|$dir") {
       stageTableCopy(s"$dir/events.parquet", "graft-stream-events", "events")
     }
-    val (tsT, tsUs) = tsType match {
-      case LongType =>
-        (timestamp_micros(expr("ts div 1000")), expr("ts div 1000"))
-      case _ => // NTZ→LTZ identity under UTC
-        (col("ts").cast("timestamp"), unix_micros(col("ts").cast("timestamp")))
-    }
+    val tsUs = graft.sources.Tables.tsMicros(tsType)
     s.readStream.schema(eventsSchema(tsType)).parquet(staged)
-      .withColumn("ts_t", tsT)
+      .withColumn("ts_t", timestamp_micros(tsUs))
       .withColumn("ts_us", tsUs)
   }
 

@@ -1,7 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Loaders for the driver-generated parquet corpus (TESTDATA.md).
   *
@@ -19,21 +20,33 @@ object Tables {
 
   /** events with `ts` replaced by `ts_us` (epoch micros, long).
     *
-    * Adaptive on the generator's physical encoding: TIMESTAMP(NANOS)
-    * arrives as ns longs (via the legacy conf) → `div 1000`;
-    * TIMESTAMP(MICROS) arrives as a (NTZ) timestamp → `unix_micros`
-    * (the NTZ→timestamp cast is identity under the UTC session timezone
-    * every entry point pins). Both land on the same epoch-µs longs the
-    * DuckDB oracle convention (`epoch_us(ts)`) produces.
+    * Sets `spark.sql.legacy.parquet.nanosAsLong=true` on the CALLER's
+    * session (a TIMESTAMP(NANOS) file cannot be read without it), so every
+    * later read in that session also sees a TIMESTAMP(NANOS) column as a
+    * long. [[eventsRaw]] and [[tsMicros]] hold the decoding, shared with
+    * [[graft.queries.StreamQueries]]' streaming read of the same file.
     */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
+    val raw = eventsRaw(spark, sfDir)
+    raw.withColumn("ts_us", tsMicros(raw.schema("ts").dataType)).drop("ts")
+  }
+
+  /** The events file as stored, read with nanosAsLong set (see [[events]]):
+    * `ts` is a ns long for TIMESTAMP(NANOS) and a timestamp_ntz for
+    * TIMESTAMP(MICROS). */
+  private[graft] def eventsRaw(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = table(spark, sfDir, "events")
-    val tsUs = raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => expr("ts div 1000")
-      case _ => unix_micros(col("ts").cast("timestamp"))
-    }
-    raw.withColumn("ts_us", tsUs).drop("ts")
+    table(spark, sfDir, "events")
+  }
+
+  /** Epoch-µs long from an [[eventsRaw]] `ts` column of type `tsType`:
+    * `ts div 1000` for the ns long, `unix_micros` for the timestamp (the
+    * NTZ→timestamp cast is identity under the UTC session timezone every
+    * entry point pins). Both land on the same epoch-µs longs the DuckDB
+    * oracle convention (`epoch_us(ts)`) produces. */
+  private[graft] def tsMicros(tsType: DataType): Column = tsType match {
+    case LongType => expr("ts div 1000")
+    case _ => unix_micros(col("ts").cast("timestamp"))
   }
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "lineitem")
