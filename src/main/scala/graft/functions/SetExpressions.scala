@@ -25,12 +25,36 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * advances both cursors on a match), so for set inputs the result equals
   * `size(array_intersect(a, b))` exactly. Unsorted input silently
   * undercounts — keep the builder [[SetFunctions.sorted_intersect_count]]
-  * paired with sorted producers only. A null element the walk reaches
-  * throws instead of reading as 0.
+  * paired with sorted producers only. A null element anywhere in either
+  * input throws instead of reading as 0.
   */
-// TEMPLATE CAUTION (same as VectorExpressions): no generated line may START
-// with '|' — Spark's code-Block interpolator strips '|' margins again;
-// keep boolean operators at end of line.
+object SetKernels {
+  val NullElement: String =
+    "sorted_intersect_count: null array element; inputs must be null-free sorted sets"
+
+  /** The null check runs up front over both whole arrays
+    * ([[ArrayNulls.hasNull]], O(n/64) on unsafe arrays), so the merge walk
+    * has no per-element branch and a null fails wherever the walk stops. */
+  def sortedIntersectCount(x: ArrayData, y: ArrayData): Int = {
+    val nx = x.numElements()
+    val ny = y.numElements()
+    if (ArrayNulls.hasNull(x, nx) || ArrayNulls.hasNull(y, ny))
+      throw new IllegalArgumentException(NullElement)
+    var i = 0
+    var j = 0
+    var c = 0
+    while (i < nx && j < ny) {
+      val xv = x.getLong(i)
+      val yv = y.getLong(j)
+      if (xv < yv) i += 1
+      else if (xv > yv) j += 1
+      else { c += 1; i += 1; j += 1 }
+    }
+    c
+  }
+}
+
+/** `sorted_intersect_count(a, b)` — see [[SetKernels]] for the contract. */
 case class SortedIntersectCount(left: Expression, right: Expression)
     extends BinaryExpression {
 
@@ -42,9 +66,7 @@ case class SortedIntersectCount(left: Expression, right: Expression)
   // fail at ANALYSIS time instead (r21 advice). Element NULLABILITY is
   // deliberately not rejected: a parquet round-trip of a null-free
   // array<long> column reads back with containsNull=true (a legitimate
-  // production shape), so null-freeness is checked per element at run
-  // time instead (generated code skips the check for a side whose type
-  // cannot hold nulls).
+  // production shape), so null-freeness is checked at run time instead.
   override def checkInputDataTypes(): TypeCheckResult = {
     def ok(dt: DataType): Boolean = dt match {
       case ArrayType(LongType, _) => true
@@ -60,74 +82,20 @@ case class SortedIntersectCount(left: Expression, right: Expression)
   // null only when a child is null (set arrays are built null-free)
   override def nullable: Boolean = left.nullable || right.nullable
 
-  private def containsNull(e: Expression): Boolean =
-    e.dataType.asInstanceOf[ArrayType].containsNull
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val nx = x.numElements()
-    val ny = y.numElements()
-    var i = 0
-    var j = 0
-    var c = 0
-    while (i < nx && j < ny) {
-      if (x.isNullAt(i) || y.isNullAt(j))
-        throw new IllegalArgumentException(SortedIntersectCount.NullElement)
-      val xv = x.getLong(i)
-      val yv = y.getLong(j)
-      if (xv < yv) i += 1
-      else if (xv > yv) j += 1
-      else { c += 1; i += 1; j += 1 }
-    }
-    c
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    SetKernels.sortedIntersectCount(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val c = ctx.freshName("c")
-      val xv = ctx.freshName("xv")
-      val yv = ctx.freshName("yv")
-      val nullChecks =
-        (if (containsNull(left)) Seq(s"$x.isNullAt($i)") else Nil) ++
-          (if (containsNull(right)) Seq(s"$y.isNullAt($j)") else Nil)
-      val nullGuard =
-        if (nullChecks.isEmpty) ""
-        else s"""if (${nullChecks.mkString(" || ")}) { throw new """ +
-          s"""IllegalArgumentException("${SortedIntersectCount.NullElement}"); }"""
-      s"""
-         |int $nx = $x.numElements();
-         |int $ny = $y.numElements();
-         |int $i = 0, $j = 0, $c = 0;
-         |while ($i < $nx && $j < $ny) {
-         |  $nullGuard
-         |  long $xv = $x.getLong($i);
-         |  long $yv = $y.getLong($j);
-         |  if ($xv < $yv) { $i++; }
-         |  else if ($xv > $yv) { $j++; }
-         |  else { $c++; $i++; $j++; }
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (x, y) => s"graft.functions.SetKernels.sortedIntersectCount($x, $y)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
 }
 
-object SortedIntersectCount {
-  val NullElement: String =
-    "sorted_intersect_count: null array element; inputs must be null-free sorted sets"
-}
-
 object SetFunctions {
   /** |a ∩ b| of two ascending-sorted null-free array<long> sets — see
-    * [[SortedIntersectCount]] for the contract. */
+    * [[SetKernels]] for the contract. */
   def sorted_intersect_count(a: Column, b: Column): Column =
     GraftColumnBridge.column(SortedIntersectCount(
       GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))

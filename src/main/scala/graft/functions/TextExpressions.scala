@@ -6,7 +6,63 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Polynomial rolling hash of a string, mod 1e9+7 — the codegen form of
+/** Kernels of the native text expressions: one method per expression over
+  * the row's `UTF8String`, called by its `nullSafeEval` and, by name, by its
+  * generated code (the [[JaroWinklerUtil]] pattern), so each body exists
+  * once for both paths.
+  */
+object TextKernels {
+
+  /** (acc * 31 + byte) % 1000000007 over the UTF-8 bytes, left to right. */
+  def polyHash(s: UTF8String): Long = {
+    val bytes = s.getBytes
+    var acc = 0L
+    var i = 0
+    while (i < bytes.length) {
+      acc = (acc * 31 + (bytes(i) & 0xff)) % 1000000007L
+      i += 1
+    }
+    acc
+  }
+
+  /** log2(n) - sum(c*log2(c))/n over the exact per-byte counts. */
+  def charEntropy(s: UTF8String): Double = {
+    val bytes = s.getBytes
+    val counts = new Array[Int](256)
+    var i = 0
+    while (i < bytes.length) { counts(bytes(i) & 0xff) += 1; i += 1 }
+    var acc = 0.0
+    var j = 0
+    while (j < 256) {
+      val c = counts(j)
+      if (c > 0) acc += c * (Math.log(c) / Math.log(2.0))
+      j += 1
+    }
+    val n = bytes.length
+    if (n == 0) 0.0 else Math.log(n) / Math.log(2.0) - acc / n
+  }
+
+  def charDistinct(s: UTF8String): Int = {
+    val bytes = s.getBytes
+    val seen = new Array[Boolean](256)
+    var i = 0
+    while (i < bytes.length) { seen(bytes(i) & 0xff) = true; i += 1 }
+    var n = 0
+    var j = 0
+    while (j < 256) { if (seen(j)) n += 1; j += 1 }
+    n
+  }
+
+  /** The input itself when already NFC (all-ASCII content always is). */
+  def nfc(s: UTF8String): UTF8String = {
+    val str = s.toString
+    if (java.text.Normalizer.isNormalized(str, java.text.Normalizer.Form.NFC)) s
+    else UTF8String.fromString(
+      java.text.Normalizer.normalize(str, java.text.Normalizer.Form.NFC))
+  }
+}
+
+/** Polynomial rolling hash of a string, mod 1e9+7 — the native form of
   * [[graft.operators.TextAnalysis.fingerprint]]'s HOF formulation
   * (aggregate over per-char ascii values). For single-byte (ASCII) content
   * the two are identical: acc = (acc * 31 + byte) % 1000000007, left to
@@ -20,31 +76,11 @@ case class PolyHash(child: Expression) extends UnaryExpression {
 
   override def prettyName: String = "poly_hash"
 
-  override def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[UTF8String].getBytes
-    var acc = 0L
-    var i = 0
-    while (i < bytes.length) {
-      acc = (acc * 31 + (bytes(i) & 0xff)) % 1000000007L
-      i += 1
-    }
-    acc
-  }
+  override def nullSafeEval(input: Any): Any =
+    TextKernels.polyHash(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s => {
-      val bytes = ctx.freshName("bytes")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |byte[] $bytes = $s.getBytes();
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $bytes.length; $i++) {
-         |  $acc = ($acc * 31 + ($bytes[$i] & 0xff)) % 1000000007L;
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, s => s"graft.functions.TextKernels.polyHash($s)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -121,7 +157,7 @@ case class RegexTokenize(child: Expression, pattern: Expression)
     copy(child = newChildren(0), pattern = newChildren(1))
 }
 
-/** Byte-histogram statistics of a string in one codegen'd O(len) pass over a
+/** Byte-histogram statistics of a string in one O(len) pass over a
   * 256-slot array — no explode, no shuffle. `CharDistinct` counts occupied
   * slots; `CharEntropy` computes Shannon entropy as
   * log2(n) - sum(c*log2(c))/n over the exact integer counts (the same
@@ -135,43 +171,11 @@ case class CharEntropy(child: Expression) extends UnaryExpression {
   override def dataType: DataType = DoubleType
   override def prettyName: String = "char_entropy"
 
-  override def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[UTF8String].getBytes
-    val counts = new Array[Int](256)
-    var i = 0
-    while (i < bytes.length) { counts(bytes(i) & 0xff) += 1; i += 1 }
-    var acc = 0.0
-    var j = 0
-    while (j < 256) {
-      val c = counts(j)
-      if (c > 0) acc += c * (Math.log(c) / Math.log(2.0))
-      j += 1
-    }
-    val n = bytes.length
-    if (n == 0) 0.0 else Math.log(n) / Math.log(2.0) - acc / n
-  }
+  override def nullSafeEval(input: Any): Any =
+    TextKernels.charEntropy(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s => {
-      val bytes = ctx.freshName("bytes")
-      val counts = ctx.freshName("counts")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val acc = ctx.freshName("acc")
-      val c = ctx.freshName("c")
-      s"""
-         |byte[] $bytes = $s.getBytes();
-         |int[] $counts = new int[256];
-         |for (int $i = 0; $i < $bytes.length; $i++) $counts[$bytes[$i] & 0xff]++;
-         |double $acc = 0.0;
-         |for (int $j = 0; $j < 256; $j++) {
-         |  int $c = $counts[$j];
-         |  if ($c > 0) $acc += $c * (Math.log($c) / Math.log(2.0));
-         |}
-         |${ev.value} = $bytes.length == 0 ? 0.0
-         |  : Math.log($bytes.length) / Math.log(2.0) - $acc / $bytes.length;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, s => s"graft.functions.TextKernels.charEntropy($s)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -184,42 +188,20 @@ case class CharDistinct(child: Expression) extends UnaryExpression {
   override def dataType: DataType = IntegerType
   override def prettyName: String = "char_distinct"
 
-  override def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[UTF8String].getBytes
-    val seen = new Array[Boolean](256)
-    var i = 0
-    while (i < bytes.length) { seen(bytes(i) & 0xff) = true; i += 1 }
-    var n = 0
-    var j = 0
-    while (j < 256) { if (seen(j)) n += 1; j += 1 }
-    n
-  }
+  override def nullSafeEval(input: Any): Any =
+    TextKernels.charDistinct(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s => {
-      val bytes = ctx.freshName("bytes")
-      val seen = ctx.freshName("seen")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val n = ctx.freshName("n")
-      s"""
-         |byte[] $bytes = $s.getBytes();
-         |boolean[] $seen = new boolean[256];
-         |for (int $i = 0; $i < $bytes.length; $i++) $seen[$bytes[$i] & 0xff] = true;
-         |int $n = 0;
-         |for (int $j = 0; $j < 256; $j++) if ($seen[$j]) $n++;
-         |${ev.value} = $n;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, s => s"graft.functions.TextKernels.charDistinct($s)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
-/** Unicode NFC normalization (UAX #15 canonical composition) as a codegen'd
-  * native expression — Spark ships no builtin for it, and the usual fallback
+/** Unicode NFC normalization (UAX #15 canonical composition) as a native
+  * expression — Spark ships no builtin for it, and the usual fallback
   * (a Scala UDF over `java.text.Normalizer`) breaks whole-stage codegen for
-  * the entire normalize→casefold→hash dedup pipeline. The generated code
+  * the entire normalize→casefold→hash dedup pipeline. The kernel
   * short-circuits on `Normalizer.isNormalized` (true for all-ASCII content,
   * the common case at corpus scale) so the already-normalized path does a
   * single scan and no allocation beyond `toString`.
@@ -230,32 +212,18 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
   override def dataType: DataType = StringType
   override def prettyName: String = "nfc_normalize"
 
-  override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].toString
-    if (java.text.Normalizer.isNormalized(s, java.text.Normalizer.Form.NFC)) input
-    else UTF8String.fromString(
-      java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFC))
-  }
+  override def nullSafeEval(input: Any): Any =
+    TextKernels.nfc(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s => {
-      val str = ctx.freshName("str")
-      s"""
-         |String $str = $s.toString();
-         |${ev.value} = java.text.Normalizer.isNormalized(
-         |    $str, java.text.Normalizer.Form.NFC)
-         |  ? $s
-         |  : UTF8String.fromString(java.text.Normalizer.normalize(
-         |      $str, java.text.Normalizer.Form.NFC));
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, s => s"graft.functions.TextKernels.nfc($s)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
 object TextFunctions {
-  /** Codegen'd polynomial rolling hash (mod 1e9+7) over a string column. */
+  /** Polynomial rolling hash (mod 1e9+7) over a string column. */
   def poly_hash(c: Column): Column =
     GraftColumnBridge.column(PolyHash(GraftColumnBridge.expression(c)))
 
@@ -264,15 +232,15 @@ object TextFunctions {
     GraftColumnBridge.column(RegexTokenize(GraftColumnBridge.expression(text),
       org.apache.spark.sql.catalyst.expressions.Literal(pattern)))
 
-  /** Codegen'd byte-level Shannon entropy (see [[CharEntropy]]). */
+  /** Byte-level Shannon entropy (see [[CharEntropy]]). */
   def char_entropy(c: Column): Column =
     GraftColumnBridge.column(CharEntropy(GraftColumnBridge.expression(c)))
 
-  /** Codegen'd distinct-byte count (see [[CharDistinct]]). */
+  /** Distinct-byte count (see [[CharDistinct]]). */
   def char_distinct(c: Column): Column =
     GraftColumnBridge.column(CharDistinct(GraftColumnBridge.expression(c)))
 
-  /** Codegen'd Unicode NFC normalization (see [[NfcNormalize]]). */
+  /** Unicode NFC normalization (see [[NfcNormalize]]). */
   def nfc_normalize(c: Column): Column =
     GraftColumnBridge.column(NfcNormalize(GraftColumnBridge.expression(c)))
 }

@@ -13,9 +13,23 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * bit-spreading, e.g. the "Interleave bits by Binary Magic Numbers" method
   * from Sean Anderson's public Bit Twiddling Hacks page).
   *
-  * Whole-stage-codegen'd: the spread is 10 shift/mask ops per row, no
-  * branches, no allocation.
+  * [[ZOrderKernels.zorder2]] is the one body of both evaluation paths: the
+  * spread is 10 shift/mask ops per row, no branches, no allocation.
   */
+object ZOrderKernels {
+  private def spread16(v0: Long): Long = {
+    var v = v0 & 0xffffL
+    v = (v | (v << 8)) & 0x00ff00ffL
+    v = (v | (v << 4)) & 0x0f0f0f0fL
+    v = (v | (v << 2)) & 0x33333333L
+    v = (v | (v << 1)) & 0x55555555L
+    v
+  }
+
+  def zorder2(x: Long, y: Long): Long = spread16(x) | (spread16(y) << 1)
+}
+
+/** `zorder2(x, y)` over two BIGINTs — see [[ZOrderKernels]]. */
 case class ZOrder2(left: Expression, right: Expression)
     extends BinaryExpression {
 
@@ -32,33 +46,11 @@ case class ZOrder2(left: Expression, right: Expression)
   }
   override def prettyName: String = "zorder2"
 
-  @inline private def spread16(v0: Long): Long = {
-    var v = v0 & 0xffffL
-    v = (v | (v << 8)) & 0x00ff00ffL
-    v = (v | (v << 4)) & 0x0f0f0f0fL
-    v = (v | (v << 2)) & 0x33333333L
-    v = (v | (v << 1)) & 0x55555555L
-    v
-  }
-
   override def nullSafeEval(x: Any, y: Any): Any =
-    spread16(x.asInstanceOf[Long]) | (spread16(y.asInstanceOf[Long]) << 1)
+    ZOrderKernels.zorder2(x.asInstanceOf[Long], y.asInstanceOf[Long])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val sx = ctx.freshName("sx")
-      val sy = ctx.freshName("sy")
-      def spread(in: String, out: String): String =
-        s"""
-           |long $out = $in & 0xffffL;
-           |$out = ($out | ($out << 8)) & 0x00ff00ffL;
-           |$out = ($out | ($out << 4)) & 0x0f0f0f0fL;
-           |$out = ($out | ($out << 2)) & 0x33333333L;
-           |$out = ($out | ($out << 1)) & 0x55555555L;
-         """.stripMargin
-      spread(x, sx) + spread(y, sy) +
-        s"${ev.value} = $sx | ($sy << 1);"
-    })
+    defineCodeGen(ctx, ev, (x, y) => s"graft.functions.ZOrderKernels.zorder2($x, $y)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =

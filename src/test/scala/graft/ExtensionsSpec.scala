@@ -97,4 +97,27 @@ class ExtensionsSpec extends SparkTestBase {
       .select(GraftColumnBridge.column(cos)).head().getDouble(0)
     assert(math.abs(got - 1.0 / math.sqrt(2.0)) < 1e-6, s"cosine: $got")
   }
+
+  test("both registration paths report each function's own expression " +
+      "class (DESCRIBE FUNCTION EXTENDED)") {
+    import org.apache.spark.sql.{ExtensionsTestHook, SparkSessionExtensions}
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import graft.functions._
+    val expected = Seq(
+      "cosine_sim" -> classOf[CosineSimilarity],
+      "match_fraction" -> classOf[LongArrayMatchFraction],
+      "graft_tokenize" -> classOf[RegexTokenize],
+      "nfc_normalize" -> classOf[NfcNormalize],
+      "jaro_winkler" -> classOf[JaroWinkler])
+    GraftExtensions.register(spark)
+    val ext = new SparkSessionExtensions
+    new GraftExtensions().apply(ext)
+    val registries = Seq(
+      "register" -> spark.sessionState.functionRegistry,
+      "injection" -> ExtensionsTestHook.injectedRegistry(ext))
+    for ((path, reg) <- registries; (name, cls) <- expected) {
+      val got = reg.lookupFunction(FunctionIdentifier(name)).map(_.getClassName)
+      assert(got.contains(cls.getName), s"$path: $name reports $got")
+    }
+  }
 }

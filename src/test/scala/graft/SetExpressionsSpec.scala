@@ -78,18 +78,14 @@ class SetExpressionsSpec extends SparkTestBase {
     assert(got == 1)
   }
 
-  test("a null element fails loudly instead of reading as 0, with " +
-      "whole-stage codegen on and off") {
-    import spark.implicits._
-    val dir = graft.util.TempDirs.create("graft-sic-null-elem").toString
-    Seq(
-      (1L, Seq(Some(1L), None, Some(3L)), Seq(Some(2L), Some(3L))),
-      (2L, Seq(Some(1L), Some(3L)), Seq(Some(1L), None, Some(3L)))
-    ).toDF("id", "a", "b").write.mode("overwrite").parquet(dir)
+  /** Evaluates sorted_intersect_count over each `ids` row of the parquet
+    * at `dir`, with whole-stage codegen on and off, and asserts each fails
+    * with the null-element message. */
+  private def assertNullElementFails(dir: String, ids: Seq[Long]): Unit = {
     def messages(t: Throwable): Seq[String] =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
         .map(e => String.valueOf(e.getMessage)).toSeq
-    def check(): Unit = for (id <- Seq(1L, 2L)) {
+    def check(): Unit = for (id <- ids) {
       val e = intercept[Exception] {
         spark.read.parquet(dir).filter(col("id") === id)
           .select(SetFunctions.sorted_intersect_count(col("a"), col("b")))
@@ -106,5 +102,30 @@ class SetExpressionsSpec extends SparkTestBase {
       spark.conf.set("spark.sql.codegen.wholeStage", "true")
       spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
     }
+  }
+
+  test("a null element fails loudly instead of reading as 0, with " +
+      "whole-stage codegen on and off") {
+    import spark.implicits._
+    val dir = graft.util.TempDirs.create("graft-sic-null-elem").toString
+    Seq(
+      (1L, Seq(Some(1L), None, Some(3L)), Seq(Some(2L), Some(3L))),
+      (2L, Seq(Some(1L), Some(3L)), Seq(Some(1L), None, Some(3L)))
+    ).toDF("id", "a", "b").write.mode("overwrite").parquet(dir)
+    assertNullElementFails(dir, Seq(1L, 2L))
+  }
+
+  test("a null element past the point where the merge walk stops fails " +
+      "too (inputs must be null-free sets), with whole-stage codegen on " +
+      "and off") {
+    import spark.implicits._
+    val dir = graft.util.TempDirs.create("graft-sic-null-tail").toString
+    // row 1: a runs out before the walk reaches b's null; row 2: b runs
+    // out before it reaches a's null
+    Seq(
+      (1L, Seq(Some(1L), Some(2L)), Seq(Some(5L), None)),
+      (2L, Seq(Some(7L), None), Seq(Some(1L), Some(2L)))
+    ).toDF("id", "a", "b").write.mode("overwrite").parquet(dir)
+    assertNullElementFails(dir, Seq(1L, 2L))
   }
 }

@@ -12,6 +12,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * into a query module (the way the cosine, shingle, bars and trade-graph
   * fragments used to drift apart) fails here; render from the shared
   * fragment instead.
+  *
+  * The same scan keeps multi-line codegen templates out of
+  * `graft/functions`: each native expression's generated code is one call
+  * to the kernel method its interpreted path runs, so the arithmetic
+  * exists once. A `stripMargin` template there is a second copy of a
+  * kernel body (and its '|'-leading lines were once silently eaten by
+  * Spark's code-Block interpolator).
   */
 class SharedFragmentSpec extends AnyFunSuite {
 
@@ -49,4 +56,14 @@ class SharedFragmentSpec extends AnyFunSuite {
         s"'$signature' appears in ${files.size} files (${files.mkString(", ")}); " +
           "render it from graft.queries.OracleSql instead of copying it")
     }
+
+  test("no multi-line codegen template under graft/functions") {
+    val dir = Paths.get("src/main/scala/graft/functions")
+    val templated = sources.collect {
+      case (p, txt) if p.startsWith(dir) && txt.contains("stripMargin") => p
+    }
+    assert(templated.isEmpty,
+      s"stripMargin in ${templated.mkString(", ")}: generate a one-line call " +
+        "to the kernel method nullSafeEval runs instead")
+  }
 }
